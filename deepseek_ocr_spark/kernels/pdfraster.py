@@ -30,7 +30,7 @@ from collections.abc import Callable
 
 import numpy as np
 
-from deepseek_ocr_spark.kernels.pdftext import _objects, _ordered_page_nums
+from deepseek_ocr_spark.kernels.pdftext import _document_objects, _ordered_page_nums
 from deepseek_ocr_spark.kernels.pixels import Image
 
 DPI = 144  # reference: run_dpsk_ocr_pdf.py renders at fitz.Matrix(144/72, 144/72)
@@ -66,10 +66,12 @@ def _box_of(body: bytes) -> tuple[float, float] | None:
 def page_sizes(data: bytes) -> list[tuple[float, float]]:
     """Per-page (width_pt, height_pt) in display order; a page without its
     own /MediaBox inherits the first /Pages-level box (PDF inheritance,
-    flattened), else the Letter default. Degrades to [] on hostile input —
-    same quarantine rule as kernels/pdftext."""
+    flattened), else the Letter default. Objects resolve exactly as in
+    extract_pdf_text (object streams, encryption), so both see the same
+    pages. Degrades to [] on hostile input — same quarantine rule as
+    kernels/pdftext."""
     try:
-        objs = _objects(data)
+        objs, _dec = _document_objects(data)
         inherited = None
         for body in objs.values():
             if b"/Type" in body and b"/Pages" in body and b"/Kids" in body:

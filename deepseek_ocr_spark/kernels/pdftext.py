@@ -702,18 +702,26 @@ def _page_fonts(
     return fonts
 
 
+def _document_objects(data: bytes):
+    """(objects, decryptor) of a whole document — the object-stream-aware
+    resolve every page-level reader shares. The decryptor is None for
+    unencrypted input; ValueError for unsupported encryption / a wrong
+    password (callers degrade)."""
+    objs = _resolve_objects(data)
+    dec = _build_decryptor(data, objs)
+    if dec is not None:
+        # second pass: ObjStm containers decrypt now that the key is
+        # known (pass 1's encrypted ObjStms failed Flate → no members)
+        objs = _resolve_objects(data, dec)
+    return objs, dec
+
+
 def extract_pdf_text(data: bytes) -> list[str]:
     """PDF bytes → per-page extracted text (see module docstring for the
     supported subset). Unsupported/hostile input degrades to fewer or
     empty pages; never raises."""
     try:
-        objs = _resolve_objects(data)
-        dec = _build_decryptor(data, objs)  # ValueError (unsupported
-        # encryption / wrong password) falls to the outer except → []
-        if dec is not None:
-            # second pass: ObjStm containers decrypt now that the key is
-            # known (pass 1's encrypted ObjStms failed Flate → no members)
-            objs = _resolve_objects(data, dec)
+        objs, dec = _document_objects(data)
         pages = []
         for num in _ordered_page_nums(objs):
             body = objs[num]

@@ -9,6 +9,12 @@ computed as an ORDERED left-to-right fold (F.aggregate over zip_with /
 list_sum over an index comprehension), so both engines add the same floats
 in the same order; results are rounded to 4 decimals before comparison.
 
+Embedding-pair operators (ann_ivf_topk_all, semantic_pairs and the
+streaming semantic probe) share ONE pair lane, _bucket_pairs: a salted
+per-(centroid_id, salt) Arrow cogroup whose numpy body adds in the same
+fold order and returns a provable superset of the pairs the Spark-side
+round(cos, 4) selection can pick.
+
 Scale notes: brute-force is a broadcast of the query vector (a literal) —
 embarrassingly parallel scan, no shuffle until the global top-k (which is
 a TakeOrdered, not a full sort). The LSH variant buckets the corpus once
@@ -17,6 +23,8 @@ a bucket-equi-join — the 100 TB path, since each probe touches one bucket.
 """
 
 from __future__ import annotations
+
+import operator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,9 +54,9 @@ def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
     spelled as a fixed-width expression chain: the same 0.0 seed and the
     same left-to-right double additions, so IEEE semantics are unchanged —
     but the chain compiles under whole-stage codegen instead of running
-    the interpreted ``aggregate``/``zip_with`` fold per row/pair (guide
-    §4.1: prefer built-in expressions; measured r8: the interpreted fold
-    dominated ann_ivf_topk_all's per-pair cost)."""
+    the interpreted ``aggregate``/``zip_with`` fold per row (guide §4.1:
+    prefer built-in expressions). Used by the centroid scoring; pair
+    cosines come from the Arrow scorer (_pair_score_fn)."""
     acc: Column = F.lit(0.0)
     for i in range(dim):
         acc = acc + a[i].cast("double") * b[i].cast("double")
@@ -172,7 +180,7 @@ def _hyperplane_sign(e: Column, plane: int, dim: int) -> Column:
     than the fold (3.07 s vs 0.78 s) — past the JIT's huge-method limit a
     giant interpreted Add tree loses to the fold's small hot lambdas.
     The unrolled chain only wins with ONE fixed-dim expression per stage
-    (the ann pair cosine)."""
+    (the centroid scoring)."""
     proj = F.aggregate(
         F.zip_with(
             e,
@@ -766,95 +774,160 @@ SELECT vec_id, cos FROM final ORDER BY cos DESC, vec_id ASC LIMIT {k}
 """
 
 
-# --- batched ANN: top-k neighbor for EVERY vector (SemDeDup shape) -----------
+# --- bucketed embedding pairs: the ONE pair lane (see module docstring) -------
 
-# Safety margin for the cogroup scorer's candidate pre-filter, in raw-cos
-# units. The final ordering key is round(cos, 4) (quantum 1e-4) with
-# cand_id tie-break, and Spark's round is monotone, so the per-vector
-# winner always satisfies round(cos) == round(rowmax) and therefore
-# cos >= rowmax - 2e-4; keeping everything within 1e-3 of the row max is
-# a 5x-safe superset. The FINAL round + min-struct aggregation stays in
-# Spark, so selection semantics are bit-identical to the all-pairs plan.
+# Safety margin of the scorer's pre-filter, in raw-cos units. The final
+# key is round(cos, 4) (quantum 1e-4) and Spark's round is monotone, so:
+# - top-k: a pair more than 1e-4 below its row's k-th best raw cos rounds
+#   strictly below k other candidates and can never be selected;
+# - threshold t: round(cos, 4) >= t implies cos >= t - 5e-5.
+# 1e-3 is a 5x-safe superset in both modes. The FINAL round + selection
+# stays in Spark, so outputs are bit-identical to the all-pairs plan.
 ANN_COS_MARGIN = 1e-3
 # right-side slab per rank-1-update pass — bounds the numpy pair matrix
 # at len(left_group) x ANN_SCORE_CHUNK doubles per task
 ANN_SCORE_CHUNK = 8192
 
 
-def _ann_group_score_fn(margin: float = ANN_COS_MARGIN):
-    """Per-(centroid_id, salt) cogroup scorer: raw cosine of every
-    (probe row x index row) pair of the group in numpy, emitting only the
-    candidates within ``margin`` of each probe row's max (see
-    ANN_COS_MARGIN — a provable superset of the per-vector winners).
+def _stacked(ids, vecs, dim: int):
+    """float32 embeddings → (n, dim) float64 matrix, enforcing the
+    exact-dim contract: an embedding that is NULL or not ``dim`` long
+    raises ValueError naming its vec_id."""
+    import numpy as np
 
-    Bit-parity discipline: float32 -> float64 casts, then the SAME
-    left-to-right accumulation order as the _dot_fixed/_norm_fixed chains
-    — one rank-1 update per dimension (acc += q[:,i]*c[:,i] elementwise,
-    np.outer is a pure ufunc, no FMA/BLAS reassociation) — so every pair's
-    raw cos is the exact double the JVM expression computes. NaN guard:
-    a NaN anywhere in a row (zero-norm embedding) keeps ALL of that row's
-    non-self candidates, so the Spark-side aggregation sees exactly what
-    the all-pairs plan would."""
+    for vid, v in zip(ids, vecs):
+        if v is None or len(v) != dim:
+            n = "NULL" if v is None else len(v)
+            raise ValueError(
+                f"vec_id {vid}: embedding has {n} elements, expected dim={dim}"
+            )
+    return np.stack([np.asarray(v, dtype=np.float32) for v in vecs]).astype(
+        np.float64
+    )
+
+
+def _pair_score_fn(
+    dim: int,
+    k: int | None = None,
+    threshold: float | None = None,
+    id_pred=None,
+):
+    """Per-(centroid_id, salt) cogroup scorer: the raw cosine of every
+    left (vec_id, qe) × right (cand_id, ce) pair of the group, emitted as
+    (vec_id, cand_id, cos) when ``id_pred(vec_id, cand_id)`` holds (None:
+    always) and the pair passes the selection mode — top-k (``k``): cos ≥
+    the left row's k-th best − ANN_COS_MARGIN; threshold: cos ≥
+    ``threshold`` − ANN_COS_MARGIN. Ids keep their input dtype.
+
+    Bit parity: float32 → float64, then the SAME left-to-right order as
+    the _dot/_norm folds — one rank-1 update per dimension (np.outer is a
+    pure ufunc, no FMA/BLAS reassociation) — so every raw cos is the exact
+    double the JVM expression computes.
+
+    NaN per cell: a NaN cos (zero-norm or NaN embedding) is always kept —
+    Spark orders NaN above every value and NaN ≥ t holds — but never
+    widens its row's filter (the k-th best ignores NaN); a zero-norm left
+    row is all NaN, so it is kept whole: O(|bucket|) pairs, not O(|bucket|²)."""
 
     def score(left, right):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series(dtype="int64"),
-                "cand_id": pd.Series(dtype="int64"),
-                "cos": pd.Series(dtype="float64"),
-            }
-        )
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        q = np.stack(
-            [np.asarray(x, dtype=np.float32) for x in left["qe"]]
-        ).astype(np.float64)
-        c = np.stack(
-            [np.asarray(x, dtype=np.float32) for x in right["ce"]]
-        ).astype(np.float64)
         lids = left["vec_id"].to_numpy()
         rids = right["cand_id"].to_numpy()
-        qn = np.zeros(len(q))
-        cn = np.zeros(len(c))
-        for i in range(q.shape[1]):
+        if len(lids) == 0 or len(rids) == 0:
+            return pd.DataFrame(
+                {"vec_id": lids[:0], "cand_id": rids[:0], "cos": np.zeros(0)}
+            )
+        q = _stacked(lids, left["qe"], dim)
+        c = _stacked(rids, right["ce"], dim)
+        qn, cn = np.zeros(len(q)), np.zeros(len(c))
+        for i in range(dim):
             qn += q[:, i] * q[:, i]
-        for i in range(c.shape[1]):
             cn += c[:, i] * c[:, i]
         qn, cn = np.sqrt(qn), np.sqrt(cn)
         outs = []
         for lo in range(0, len(c), ANN_SCORE_CHUNK):
             hi = min(lo + ANN_SCORE_CHUNK, len(c))
-            cc = c[lo:hi]
             acc = np.zeros((len(q), hi - lo))
-            for i in range(q.shape[1]):
-                acc += np.outer(q[:, i], cc[:, i])
+            for i in range(dim):
+                acc += np.outer(q[:, i], c[lo:hi, i])
             with np.errstate(invalid="ignore", divide="ignore"):
                 cos = acc / np.outer(qn, cn[lo:hi])
-            nonself = lids[:, None] != rids[None, lo:hi]
-            cosm = np.where(nonself, cos, -np.inf)
-            with np.errstate(invalid="ignore"):
-                rowmax = cosm.max(axis=1) if cosm.size else np.array([])
-            keep = (cosm >= rowmax[:, None] - margin) & nonself
-            nanrows = np.isnan(cosm).any(axis=1)
-            if nanrows.any():
-                keep |= nanrows[:, None] & nonself
-            li, ri = np.nonzero(keep)
-            if len(li):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": lids[li].astype("int64"),
-                            "cand_id": rids[lo:hi][ri].astype("int64"),
-                            "cos": cos[li, ri],
-                        }
-                    )
+            nan = np.isnan(cos)
+            ok = True
+            if id_pred is not None:
+                ok = id_pred(lids[:, None], rids[None, lo:hi])
+            if k is None:
+                floor = threshold - ANN_COS_MARGIN
+            elif hi - lo >= k:
+                ranked = np.where(ok & ~nan, cos, -np.inf)
+                kth = -np.partition(-ranked, k - 1, axis=1)[:, k - 1 : k]
+                floor = kth - ANN_COS_MARGIN
+            else:
+                floor = -np.inf  # fewer than k candidates: keep them all
+            li, ri = np.nonzero(ok & ((cos >= floor) | nan))
+            outs.append(
+                pd.DataFrame(
+                    {"vec_id": lids[li], "cand_id": rids[lo + ri], "cos": cos[li, ri]}
                 )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+            )
+        return pd.concat(outs, ignore_index=True)
 
     return score
+
+
+def _bucket_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    n_centroids: int,
+    dim: int,
+    *,
+    k: int | None = None,
+    threshold: float | None = None,
+    id_pred=None,
+    replicate: str = "right",
+) -> DataFrame:
+    """(vec_id, cand_id, cos) — raw cosines of the same-centroid pairs of
+    ``left`` (vec_id, centroid_id, qe) × ``right`` (cand_id, centroid_id,
+    ce) that _pair_score_fn selects.
+
+    Salting (r8, guide §2.5): centroid_id alone has only n_centroids
+    values, so the compute-heavy pair stage would run on ≤ n_centroids
+    tasks. One side is keyed by pmod(xxhash64(id), S), the ``replicate``
+    side (the smaller one) is copied S ways, so every same-bucket pair
+    meets exactly once; S scales with the shuffle partitions, and
+    REPARTITION_BY_NUM on both inputs pins the layout against AQE's
+    byte-based coalescing (CLAUDE.md r2 rule). Per-task memory is
+    O(|bucket|·dim) input + the chunked pair slab."""
+    n_part = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_salt = max(1, min(64, (8 * n_part) // n_centroids))
+
+    def pinned(df: DataFrame, id_col: str, replicated: bool) -> DataFrame:
+        if replicated:
+            salt = F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
+        else:
+            salt = F.pmod(F.xxhash64(id_col), F.lit(n_salt)).cast("int")
+        return (
+            df.withColumn("_salt", salt)
+            .repartition(n_part, "centroid_id", "_salt")
+            .groupBy("centroid_id", "_salt")
+        )
+
+    schema = (
+        f"vec_id {left.schema['vec_id'].dataType.simpleString()}, "
+        f"cand_id {right.schema['cand_id'].dataType.simpleString()}, cos double"
+    )
+    cand = (
+        pinned(left, "vec_id", replicate == "left")
+        .cogroup(pinned(right, "cand_id", replicate == "right"))
+        .applyInPandas(_pair_score_fn(dim, k, threshold, id_pred), schema)
+    )
+    # pandas → Arrow turns NaN into NULL; restore the JVM cosine's NaN
+    return cand.withColumn("cos", F.coalesce(F.col("cos"), F.lit(float("nan"))))
+
+
+# --- batched ANN: top-k neighbor for EVERY vector (SemDeDup shape) -----------
 
 
 def ann_ivf_topk_all(
@@ -868,17 +941,19 @@ def ann_ivf_topk_all(
     """(vec_id, nn_vec_id, cos) — the ``k`` nearest neighbors of EVERY
     vector, restricted to each vector's ``n_probe`` nearest centroid
     buckets: the all-pairs semantic-dedup shape (SemDeDup, Abbas et al.
-    2023) without the all-pairs cost.
+    2023) without the all-pairs cost. Ids keep the input's vec_id type;
+    embeddings must have exactly ``dim`` elements.
 
     Plan shape (100 TB): the corpus scores against the BROADCAST codebook
     once (zero shuffle), per-vector probe sets come from a window over
     exactly n_centroids rows per vec_id (uniform partitions — no skew by
-    construction), candidate pairs form via ONE centroid_id-keyed
-    equi-join of (probe side × materialized index side), and the final
-    per-vector top-k is a min(struct) agg for k=1 (map-side combinable,
-    hot-bucket safe) or an exactly-n-candidate window otherwise. Cost is
-    sum over buckets of |bucket|·|probes into bucket| — bucketed, never
-    all-pairs; a skewed bucket splits under AQE skew-join."""
+    construction), candidate pairs are scored by the salted
+    (probe side × materialized index side) cogroup of _bucket_pairs in
+    top-k mode, and the final per-vector top-k is a min(struct) agg for
+    k=1 (map-side combinable, hot-bucket safe) or a window otherwise.
+    Cost is sum over buckets of |bucket|·|probes into bucket| — bucketed,
+    never all-pairs. x10 probe (k=1): 3.6 s vs 14 s for the best JVM pair
+    plan, vs 125 s for round 7's."""
     scored = _scored_against_centroids(emb, n_centroids, dim)
     w = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("centroid_id")
@@ -894,136 +969,52 @@ def ann_ivf_topk_all(
         # consumers share one corpus×centroid scoring + window instead of
         # scoring the corpus twice (r8, guide §2.4 — measured: the two
         # subtrees did not reuse an exchange)
-        # the re-aliasing is load-bearing: both pair-join sides descend
-        # from `probed`, and without fresh expression ids the analyzer
-        # rejects the join as an ambiguous self-join
+        # the re-aliasing is load-bearing: both pair sides descend from
+        # `probed`, and without fresh expression ids the analyzer rejects
+        # the plan as an ambiguous self-join
         assignments = probed.filter(F.col("rn") == 1).select(
             F.col("vec_id").alias("vec_id"),
             F.col("centroid_id").alias("centroid_id"),
         )
-    # Pair-stage parallelism (r8, guide §2.5): centroid_id alone has only
-    # n_centroids distinct values, so the pair-scoring stage — where ~all
-    # of this operator's work happens — would run on at most n_centroids
-    # tasks (and AQE's byte-based coalescing would shrink even that: the
-    # shuffle is byte-light but compute-heavy). Deterministic salting
-    # spreads it: the probe side keyed by pmod(xxhash64(vec_id), S), the
-    # index side replicated S ways (the smaller side — one row per vector
-    # vs n_probe), so every same-bucket pair still meets exactly once.
-    # S scales with the session's shuffle partitions (scale-adaptive, not
-    # a local[32] constant); the explicit REPARTITION_BY_NUM on both
-    # inputs pins the layout against AQE coalescing (CLAUDE.md r2 rule).
-    n_part = int(
-        emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    # the index side (one row per vector vs n_probe) is the smaller one
+    cand = _bucket_pairs(
+        probes.join(emb, "vec_id").select(
+            "vec_id", "centroid_id", F.col("embedding").alias("qe")
+        ),
+        assignments.join(emb, "vec_id").select(
+            F.col("vec_id").alias("cand_id"),
+            "centroid_id",
+            F.col("embedding").alias("ce"),
+        ),
+        n_centroids,
+        dim,
+        k=k,
+        id_pred=operator.ne,
+    ).select(
+        "vec_id",
+        F.col("cand_id").alias("nn_vec_id"),
+        F.round(F.col("cos"), 4).alias("cos"),
     )
-    n_salt = max(1, min(64, (8 * n_part) // n_centroids))
-    salt = F.pmod(F.xxhash64("vec_id"), F.lit(n_salt)).cast("int")
     if k == 1:
-        # k=1 (the SemDeDup/registry lane): pairs are never materialized
-        # in the JVM at all — each (centroid, salt) cogroup hands its
-        # probe rows and index rows to numpy as Arrow batches (guide
-        # §4.2) and the rank-1-update scorer emits only the candidates
-        # within ANN_COS_MARGIN of each vector's row max (a provable
-        # superset of the winners — see the margin note above); the
-        # round(…,4) + min-struct aggregation stays in Spark, so the
-        # result is bit-identical to the all-pairs plan (verified
-        # exactly-equal at sf0.1 and the x10 probe). Per-task memory is
-        # O(|bucket|·dim) input + the chunked pair slab — the same
-        # bounded-bucket contract as semantic_pairs. x10 probe: 3.6 s
-        # vs 14 s for the best JVM pair plan, vs 125 s for round 7's.
-        left = (
-            probes.join(emb, "vec_id")
-            .select(
-                "vec_id",
-                "centroid_id",
-                F.col("embedding").alias("qe"),
-                salt.alias("_salt"),
-            )
-            .repartition(n_part, "centroid_id", "_salt")
-        )
-        right = (
-            assignments.join(emb, "vec_id")
-            .select(
-                F.col("vec_id").alias("cand_id"),
-                "centroid_id",
-                F.col("embedding").alias("ce"),
-            )
-            .withColumn(
-                "_salt",
-                F.explode(F.array(*[F.lit(i) for i in range(n_salt)])),
-            )
-            .repartition(n_part, "centroid_id", "_salt")
-        )
-        cand = (
-            left.groupBy("centroid_id", "_salt")
-            .cogroup(right.groupBy("centroid_id", "_salt"))
-            .applyInPandas(
-                _ann_group_score_fn(),
-                "vec_id long, cand_id long, cos double",
-            )
-        )
-        best = (
-            cand.select(
-                "vec_id", "cand_id", F.round(F.col("cos"), 4).alias("cos")
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cos")).alias("nc"),
-                        F.col("cand_id").alias("cid"),
-                    )
-                ).alias("b")
-            )
+        best = cand.groupBy("vec_id").agg(
+            F.min(
+                F.struct(
+                    (-F.col("cos")).alias("nc"), F.col("nn_vec_id").alias("cid")
+                )
+            ).alias("b")
         )
         return best.select(
             "vec_id",
             F.col("b.cid").alias("nn_vec_id"),
             (-F.col("b.nc")).alias("cos"),
         )
-    # k > 1 (window lane): salted shuffled-hash pair join with the
-    # fixed-dim codegen cosine chain — norms HOISTED onto each join input
-    # (once per ROW, not per pair: measured 12.5 s vs 4.7 s at sf0.1 with
-    # the norms inside the pair expression)
-    left = (
-        probes.join(emb, "vec_id")
-        .select(
-            F.col("vec_id"),
-            F.col("centroid_id"),
-            F.col("embedding").alias("qe"),
-            _norm_fixed(F.col("embedding"), dim).alias("qn"),
-            salt.alias("_salt"),
-        )
-        .repartition(n_part, "centroid_id", "_salt")
-    )
-    right = (
-        assignments.join(emb, "vec_id")
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("centroid_id"),
-            F.col("embedding").alias("ce"),
-            _norm_fixed(F.col("embedding"), dim).alias("cn"),
-        )
-        .withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-        )
-        .repartition(n_part, "centroid_id", "_salt")
-    )
-    pairs = left.hint("shuffle_hash").join(
-        right, ["centroid_id", "_salt"]
-    ).filter(F.col("vec_id") != F.col("cand_id"))
-    cos = F.round(
-        _dot_fixed(F.col("qe"), F.col("ce"), dim)
-        / (F.col("qn") * F.col("cn")),
-        4,
-    )
-    scored_pairs = pairs.select("vec_id", "cand_id", cos.alias("cos"))
     wk = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id")
+        F.col("cos").desc(), F.col("nn_vec_id")
     )
     return (
-        scored_pairs.withColumn("rn", F.row_number().over(wk))
+        cand.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= k)
-        .select("vec_id", F.col("cand_id").alias("nn_vec_id"), "cos")
+        .drop("rn")
     )
 
 
@@ -1095,38 +1086,33 @@ def semantic_pairs(
     """(a_vec_id, b_vec_id, cos) — within-bucket pairs with rounded cosine
     ≥ threshold: the SemDeDup edge list (Abbas et al. 2023 — duplicates
     are detected INSIDE k-means clusters, never across the full corpus).
-    One centroid_id-keyed self-join of the materialized index; cost is
-    sum of |bucket|² — the same bounded-bucket contract as
-    dedup_minhash_pairs, with AQE skew-split on an oversized bucket."""
+    The materialized index meets itself in the salted _bucket_pairs
+    cogroup (threshold mode, a_vec_id < b_vec_id); cost is sum of
+    |bucket|² — the same bounded-bucket contract as dedup_minhash_pairs.
+    Ids keep the input's vec_id type; embeddings must have exactly ``dim``
+    elements."""
     if assignments is None:
         assignments = ivf_assignments(emb, n_centroids, dim)
-    # norms hoisted below the exchange — once per row, not per pair (the
-    # ann_ivf_topk_all measurement)
-    left = assignments.join(emb, "vec_id").select(
-        "vec_id",
-        "centroid_id",
-        F.col("embedding").alias("qe"),
-        _norm_fixed(F.col("embedding"), dim).alias("qn"),
-    )
-    right = left.select(
-        F.col("vec_id").alias("cand_id"),
-        "centroid_id",
-        F.col("qe").alias("ce"),
-        F.col("qn").alias("cn"),
-    )
-    # fixed-dim codegen chain — bit-identical to the fold (see _dot_fixed)
-    cos = F.round(
-        _dot_fixed(F.col("qe"), F.col("ce"), dim)
-        / (F.col("qn") * F.col("cn")),
-        4,
-    )
+    side = assignments.join(emb, "vec_id")
     return (
-        left.join(right, "centroid_id")
-        .filter(F.col("vec_id") < F.col("cand_id"))
+        _bucket_pairs(
+            side.select("vec_id", "centroid_id", F.col("embedding").alias("qe")),
+            # fresh expression ids: both sides are one Dataset, and the
+            # analyzer rejects a bare centroid_id as an ambiguous self-join
+            side.select(
+                F.col("vec_id").alias("cand_id"),
+                F.col("centroid_id").alias("centroid_id"),
+                F.col("embedding").alias("ce"),
+            ),
+            n_centroids,
+            dim,
+            threshold=threshold,
+            id_pred=operator.lt,
+        )
         .select(
             F.col("vec_id").alias("a_vec_id"),
             F.col("cand_id").alias("b_vec_id"),
-            cos.alias("cos"),
+            F.round(F.col("cos"), 4).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )

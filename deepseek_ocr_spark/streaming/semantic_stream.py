@@ -11,10 +11,10 @@ duplicate of the corpus. Survivors append to the output sink.
 
 Same division of labor as neardup_stream: the stream filters new data
 against the STATIC corpus (state = the materialized (vec_id, centroid_id,
-embedding, norm) table, not stream state); duplicates WITHIN one
-micro-batch are the nightly batch job's task (dedup_semantic over the
-compacted corpus). Replay-safe batch=<id> parquet appends, corpus table
-loaded and checkpointed ONCE at stream start.
+embedding) table, not stream state); duplicates WITHIN one micro-batch
+are the nightly batch job's task (dedup_semantic over the compacted
+corpus). Replay-safe batch=<id> parquet appends, corpus table loaded and
+checkpointed ONCE at stream start.
 """
 
 from __future__ import annotations
@@ -26,8 +26,7 @@ from pyspark.sql import types as T
 from deepseek_ocr_spark.operators.similarity import (
     N_CENTROIDS,
     SEMDEDUP_THRESHOLD,
-    _dot,
-    _norm,
+    _bucket_pairs,
     ivf_assignments,
 )
 
@@ -42,14 +41,11 @@ STREAM_EMB_SCHEMA = T.StructType(
 def corpus_semantic_index(
     emb: DataFrame, n_centroids: int = N_CENTROIDS, dim: int = 64
 ) -> DataFrame:
-    """(vec_id, centroid_id, embedding, nrm) — the materializable corpus
-    side of the probe (at 100 TB: parquet partitioned by centroid_id, so
-    each micro-batch's probe prunes to its buckets)."""
+    """(vec_id, centroid_id, embedding) — the materializable corpus side
+    of the probe (at 100 TB: parquet partitioned by centroid_id, so each
+    micro-batch's probe prunes to its buckets)."""
     return ivf_assignments(emb, n_centroids, dim).join(emb, "vec_id").select(
-        "vec_id",
-        "centroid_id",
-        "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
+        "vec_id", "centroid_id", "embedding"
     )
 
 
@@ -62,26 +58,25 @@ def semantic_filter_batch(
 ) -> DataFrame:
     """One micro-batch of (vec_id, embedding) → the subset with no
     corpus-side semantic duplicate (rounded cosine ≥ threshold within the
-    vector's own centroid bucket). Norms hoisted below the bucket join on
-    both sides (the ann_ivf_topk_all rule)."""
-    probe = ivf_assignments(batch, n_centroids, dim).join(batch, "vec_id").select(
-        "vec_id",
-        "centroid_id",
-        F.col("embedding").alias("qe"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    corpus = corpus_index.select(
-        F.col("vec_id").alias("corpus_vec_id"),
-        "centroid_id",
-        F.col("embedding").alias("ce"),
-        "nrm",
-    )
-    cos = F.round(
-        _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("nrm")), 4
-    )
+    vector's own centroid bucket), scored by the batch operators' salted
+    cogroup (similarity._bucket_pairs, threshold mode) with the
+    micro-batch as the replicated side. Embeddings must have exactly
+    ``dim`` elements."""
+    probe = ivf_assignments(batch, n_centroids, dim).join(batch, "vec_id")
     dup_ids = (
-        probe.join(corpus, "centroid_id")
-        .filter(cos >= threshold)
+        _bucket_pairs(
+            probe.select("vec_id", "centroid_id", F.col("embedding").alias("qe")),
+            corpus_index.select(
+                F.col("vec_id").alias("cand_id"),
+                "centroid_id",
+                F.col("embedding").alias("ce"),
+            ),
+            n_centroids,
+            dim,
+            threshold=threshold,
+            replicate="left",
+        )
+        .filter(F.round(F.col("cos"), 4) >= threshold)
         .select("vec_id")
         .distinct()
     )

@@ -4,7 +4,10 @@ recall criterion vs the literal codebook, and the batched all-vectors ANN
 (ann_ivf_topk_all) against a brute-force transcription."""
 
 import math
+import operator
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from deepseek_ocr_spark.operators import similarity as S
@@ -148,6 +151,14 @@ def test_ann_ivf_topk_all_matches_bruteforce_within_probes(spark):
     for r in S.ann_ivf_topk_all(emb, k=2, n_centroids=3, dim=4).collect():
         got2.setdefault(r["vec_id"], []).append((r["nn_vec_id"], r["cos"]))
     assert got2 == {i: c[:2] for i, c in expected.items() if c}
+    # id columns keep the input's vec_id type (INT here) on every pair lane
+    int_t = emb.schema["vec_id"].dataType
+    for df, cols in [
+        (S.ann_ivf_topk_all(emb, k=1, n_centroids=3, dim=4), ["vec_id", "nn_vec_id"]),
+        (S.ann_ivf_topk_all(emb, k=2, n_centroids=3, dim=4), ["vec_id", "nn_vec_id"]),
+        (S.semantic_pairs(emb, n_centroids=3, dim=4), ["a_vec_id", "b_vec_id"]),
+    ]:
+        assert [df.schema[c].dataType for c in cols] == [int_t, int_t]
 
 
 def test_ann_ivf_topk_all_no_cartesian(spark):
@@ -266,3 +277,38 @@ def test_ann_ivf_topk_all_cogroup_matches_jvm_pairs(spark):
     )
     want = sorted(tuple(r) for r in best.collect())
     assert got == want
+
+
+def test_pair_scorer_enforces_exact_dim(spark):
+    """The exact-dim contract: an embedding whose length is not ``dim``
+    raises ValueError naming its vec_id instead of scoring silently."""
+    score = S._pair_score_fn(8, k=1, id_pred=operator.ne)
+    full, short = np.ones(8, np.float32), np.ones(4, np.float32)
+    left = pd.DataFrame({"vec_id": [1, 2], "qe": [full, short]})
+    right = pd.DataFrame({"cand_id": [1, 2], "ce": [full, full]})
+    with pytest.raises(ValueError, match="vec_id 2: embedding has 4 elements"):
+        score(left, right)
+    # through Spark: over-long arrays pass the centroid chain (it reads the
+    # first ``dim`` elements) and must still be rejected by the pair scorer
+    emb = _emb_df(spark, [(i, [1.0 + i] * 8) for i in range(6)])
+    with pytest.raises(Exception, match="expected dim=4"):
+        S.ann_ivf_topk_all(emb, n_centroids=2, dim=4).collect()
+
+
+def test_pair_scorer_nan_is_per_cell():
+    """A zero vector makes one NaN cell per row (and one all-NaN row); the
+    scorer keeps those cells but must not drop its margin filter for
+    whole rows — the output stays O(n), not n·(n-1)."""
+    n = 400
+    vecs = np.random.default_rng(7).standard_normal((n, 8)).astype(np.float32)
+    vecs[17] = 0.0
+    ids = np.arange(n)
+    left = pd.DataFrame({"vec_id": ids, "qe": list(vecs)})
+    right = pd.DataFrame({"cand_id": ids, "ce": list(vecs)})
+    for k in (1, 2):
+        out = S._pair_score_fn(8, k=k, id_pred=operator.ne)(left, right)
+        assert len(out) < 5 * n
+        nan = out["cos"].isna()
+        assert (nan & (out["cand_id"] == 17)).sum() == n - 1  # NaN cells kept
+        assert (out["vec_id"] == 17).sum() == n - 1  # zero row kept whole
+        assert not (nan & (out["vec_id"] != 17) & (out["cand_id"] != 17)).any()

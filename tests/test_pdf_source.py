@@ -233,6 +233,23 @@ def test_pdfraster_mediabox_inheritance():
     assert pdfraster.page_sizes(pdf) == [(300.0, 400.0)]
 
 
+def test_object_stream_pdf_sizes_and_ocr_route(spark, tmp_path):
+    """page_sizes resolves page dicts inside object streams the way
+    extract_pdf_text does, so an image-only page of a PDF 1.5 file is
+    rasterized + OCR-routed instead of degrading to empty text."""
+    from deepseek_ocr_spark.kernels import pdfraster
+    from deepseek_ocr_spark.kernels.pdftext import make_modern_pdf
+    from deepseek_ocr_spark.sources.pdf import load_documents_pdf
+
+    pdf = make_modern_pdf(["alpha", "", "gamma"])
+    assert pdfraster.page_sizes(pdf) == [(612.0, 792.0)] * 3
+    (tmp_path / "modern.pdf").write_bytes(pdf)
+    row = load_documents_pdf(spark, str(tmp_path)).collect()[0]
+    ocr = pdfraster.ocr_page_text(pdfraster.rasterize_page(pdf, 1), 1)
+    assert row["text"] == f"alpha\n\n{ocr}\n\ngamma"
+    assert '<div class="page" data-page="1" data-width="1224"' in bytes(row["html"]).decode()
+
+
 def test_mixed_corpus_ocr_route_end_to_end(spark, tmp_path):
     """VERDICT r3 gap #2: a mixed corpus (text-layer + image-only PDFs)
     produces non-empty text for BOTH through the full extraction pipeline;

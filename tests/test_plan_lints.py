@@ -8,7 +8,9 @@ Rules:
 - no CartesianProduct — cross joins are only legal against broadcast
   literals (they compile to BroadcastNestedLoopJoin);
 - every documents/lineitem parquet scan prunes columns (ReadSchema must not
-  list the full table width when the query touches a subset).
+  list the full table width when the query touches a subset);
+- every embedding-pair operator scores its pairs in ONE salted Arrow
+  cogroup spread over all shuffle partitions — no second pair lane.
 """
 
 import re
@@ -16,6 +18,8 @@ import re
 import pytest
 
 import __spark_entry__ as entry_mod
+from deepseek_ocr_spark.operators import similarity as S
+from deepseek_ocr_spark.streaming import semantic_stream as SS
 
 SF_DIR = "/root/testdata/sf0.001"
 QUERIES = entry_mod.queries()
@@ -78,3 +82,58 @@ def test_ivf_registry_query_reads_materialized_index(spark):
     assert "BroadcastNestedLoopJoin" not in plan, (
         "query-time plan still builds the index inline"
     )
+
+
+def _nodes(node):
+    """Every node of an executed plan, descending into adaptive plans and
+    query stages (both are leaves of the plain tree)."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _nodes(node.executedPlan())
+    elif name.endswith("QueryStage"):
+        yield from _nodes(node.plan())
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _stream_probe(emb, n_centroids):
+    index = SS.corpus_semantic_index(emb.filter("vec_id % 5 != 0"), n_centroids)
+    return SS.semantic_filter_batch(
+        emb.filter("vec_id % 5 = 0"), index, n_centroids=n_centroids
+    )
+
+
+PAIR_LANES = {
+    "ann_ivf_topk_all_k1": lambda emb, nc: S.ann_ivf_topk_all(emb, k=1, n_centroids=nc),
+    "ann_ivf_topk_all_k2": lambda emb, nc: S.ann_ivf_topk_all(emb, k=2, n_centroids=nc),
+    "semantic_pairs": lambda emb, nc: S.semantic_pairs(emb, n_centroids=nc),
+    "semantic_filter_batch": _stream_probe,
+}
+
+
+@pytest.mark.parametrize("lane", sorted(PAIR_LANES))
+def test_pair_lanes_share_one_salted_cogroup(lane, spark):
+    """Each embedding-pair operator scores its pairs in exactly one Arrow
+    cogroup whose inputs keep every shuffle partition after AQE — never a
+    JVM pair join and never collapsed to <= n_centroids tasks."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_centroids = max(1, n_part // 2)
+    df = PAIR_LANES[lane](spark.read.parquet(f"{SF_DIR}/embeddings.parquet"), n_centroids)
+    df.collect()  # finalizes the adaptive plan
+    nodes = list(_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    assert "CartesianProduct" not in names
+    # nested-loop joins only score vectors against the broadcast codebook
+    for n in nodes:
+        if n.nodeName() == "BroadcastNestedLoopJoin":
+            assert "cvec" in n.left().output().toString() + n.right().output().toString()
+    cogroups = [n for n in nodes if n.nodeName() == "FlatMapCoGroupsInPandas"]
+    assert len(cogroups) == 1, names
+    kids = cogroups[0].children()
+    assert [kids.apply(i).outputPartitioning().numPartitions() for i in range(2)] == [
+        n_part,
+        n_part,
+    ]
+    assert n_part > n_centroids
