@@ -159,9 +159,9 @@ def main() -> None:
 
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
-Same job (flagship extraction pipeline: fused split+extract mapInPandas →
-fold-expression tile plan → url-repartitioned ordered assembly → doc-level
-finalize UDF), same materialized input ({pages} pages derived
+Same job (flagship extraction pipeline: one fused mapInPandas per document —
+split, extract, SKIP_REPEAT, cascade, ordered assembly — → fold-expression
+vision tokens, no exchange), same materialized input ({pages} pages derived
 deterministically from {args.sf_dir} x{args.replicate}), noop write of the
 FULL result (nothing pruned). Sandbox stand-in for N vs 4N executors
 (north_rule).

@@ -28,10 +28,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from deepseek_ocr_spark.entry_queries import queries as registry
-    from deepseek_ocr_spark.pipeline.session import build_session
+    from deepseek_ocr_spark.pipeline.session import build_session, default_cpus
 
-    # default: the cores this process may run on, not a fixed count
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cpus = default_cpus()
     spark = build_session(app_name="bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -8,31 +8,29 @@ plan over ``documents(url, warc_ts, html, text, lang)``:
     → [auto] spread repartition by url        [only when the input has fewer
        scan splits than the cluster parallelism — a real 100 TB table has
        thousands of splits and skips this shuffle entirely]
-    → FUSED mapInPandas split+extract         [O-2 fan-out + O-38 kernel in
-       ONE Python stage: page html never crosses the Arrow boundary
-       (measured: shipping page_html through a shuffle + second Arrow hop
-       cost as much as extraction); iterator batches = the continuous-
+    → FUSED mapInPandas doc stage             [the reference's per-document
+       loop (pdf.py:285-320) in ONE Python call per input row: O-2 page
+       split, O-38 kernel, O-19/O-33 SKIP_REPEAT gate + EOS strip, O-26/O-27
+       kept-page ordinals jdx, O-30…O-36 cascade, O-24 ordered assembly,
+       span parse + rescale, text-token count. Page html and page text
+       never cross the Arrow boundary; iterator batches = the continuous-
        batching analog; per-worker kernel singleton]
-    → tile plan as a zero-shuffle fold expression over the 13-candidate
-      literal array [O-10/O-11; the broadcast-join+window formulation lives
-      in operators/tiling_relational.py and is verified to agree]
-    → vision-token column expression          [O-13]
-    → relational EOS keep-flag + strip        [O-19/O-33: contains + replace]
-    → ordered per-url assembly aggregation    [O-24: array_sort(collect_list)
-       of when(keep, …) — conditional collect drops SKIP_REPEAT pages AND
-       keeps all-dropped urls, so no all-urls join is ever needed]
-    → doc-level finalize UDF                  [O-26/O-27 jdx ordinals +
-       O-30…O-36 cascade + span parse + token count, one pass per doc]
-    → metrics / lineage columns               [O-25]
+    → vision tokens as a zero-shuffle fold    [O-10/O-11 tile plan over the
+       13-candidate literal array per kept page (the broadcast-join+window
+       formulation lives in operators/tiling_relational.py and is verified
+       to agree), O-13 token count summed over page_dims]
+    → compression ratio + digest columns      [O-25]
 
-Shuffle budget — ONE exchange end-to-end on a well-laid-out input (the url
-shuffle of the assembly groupBy), plus the optional input-spread
-repartition for few-split inputs. No windows, no joins, two Python stages
-(a filter on the UDF column would have double-evaluated the kernel — hence
-the keep-flag design). Projection (url, html) prunes at the scan. Skew:
-work per doc is bounded (≤~40 pages × the 8192-token cap), so doc-granular
-distribution evens out at thousands of docs per task; AQE skew-join
-handling stays on for the relational operators.
+Shuffle budget — ZERO exchanges on a well-laid-out input, plus the optional
+input-spread repartition for few-split inputs: scan → one Python stage →
+JVM expression tail. No aggregation, no windows, no joins (tests/test_plan_lints.py
+pins this shape). ``url`` is the table's unique key (FIXTURES.md); the plan
+emits one row per input row and never groups by url, so two input rows
+sharing a url stay two rows (resume dedupe, ``checkpoint.
+read_extracted_deduped``, is url-keyed). Projection (url, html) prunes at
+the scan. Skew: work per doc is bounded (≤~40 pages × the 8192-token cap),
+so doc-granular distribution evens out at thousands of docs per task;
+book-length documents use ``extract_documents_paged``.
 """
 
 from __future__ import annotations
@@ -44,16 +42,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deepseek_ocr_spark.config import EOS_TOKEN, EngineConfig, DEFAULT_CONFIG
+from deepseek_ocr_spark.config import EngineConfig, DEFAULT_CONFIG
+from deepseek_ocr_spark.kernels import postprocess as pp
 from deepseek_ocr_spark.kernels.tiling import candidate_ratios
+from deepseek_ocr_spark.kernels.tokens import num_text_tokens
 from deepseek_ocr_spark.operators.tiling_relational import vision_tokens_col
 
 # ---------------------------------------------------------------------------
-# Stage 1 — page split (mapInPandas; cheap, streaming)
+# Page split (mapInPandas; cheap, streaming) — the giant-doc path's fan-out
 # ---------------------------------------------------------------------------
 
 PAGES_SCHEMA = T.StructType(
     [
+        T.StructField("doc", T.LongType()),
         T.StructField("url", T.StringType()),
         T.StructField("page_no", T.IntegerType()),
         T.StructField("seq", T.IntegerType()),
@@ -69,10 +70,11 @@ def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from deepseek_ocr_spark.kernels.extract import split_pages
 
     for pdf in batches:
-        out = {k: [] for k in ("url", "page_no", "seq", "width", "height", "page_html", "degenerate")}
-        for url, html in zip(pdf["url"], pdf["html"]):
+        out = {k: [] for k in PAGES_SCHEMA.fieldNames()}
+        for doc, url, html in zip(pdf["doc"], pdf["url"], pdf["html"]):
             # null/bytes normalization happens inside the shared kernel
             for seq, rec in enumerate(split_pages(html)):
+                out["doc"].append(doc)
                 out["url"].append(url)
                 out["page_no"].append(rec.page_no)
                 out["seq"].append(seq)
@@ -85,14 +87,16 @@ def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def split_to_pages(docs: DataFrame) -> DataFrame:
     """documents → one row per page (the PDF-render fan-out analog,
-    reference pdf.py:64-95). Standalone op; the hot pipeline uses the fused
-    split+extract stage below so page_html never crosses the Arrow boundary."""
-    return docs.select("url", "html").mapInPandas(_split_batches, PAGES_SCHEMA)
+    reference pdf.py:64-95), keyed by ``(doc, seq)``: ``doc`` is a per-input-
+    row id taken before the split, so rows sharing a url stay apart."""
+    src = docs.select(F.monotonically_increasing_id().alias("doc"), "url", "html")
+    return src.mapInPandas(_split_batches, PAGES_SCHEMA)
 
 
-# Fused split+extract: one Python stage emitting extracted page rows. The
-# page html stays inside the Python worker (measured: shipping page_html
-# through a shuffle + a second Arrow hop cost as much as extraction itself).
+# Page-level split+extract: the kernel half of the fused doc stage, emitting
+# extracted page rows with no per-document finalize. Standalone op — it
+# times the split+extract layer on its own (perfbench) and shows why the
+# page html stays inside the Python worker.
 EXTRACTED_PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -129,7 +133,7 @@ def split_and_extract(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stage 2 — tile plan as a zero-shuffle fold over the candidate literal array
+# Tile plan as a zero-shuffle fold over the candidate literal array
 # ---------------------------------------------------------------------------
 
 
@@ -167,17 +171,17 @@ def tile_plan_expr(width: Column, height: Column, cfg: EngineConfig = DEFAULT_CO
             F.lit(1).alias("nh"),
         ),
         step,
+        # project inside the fold so it is evaluated once, not per field
+        lambda acc: F.struct(acc["nw"].alias("nw"), acc["nh"].alias("nh")),
     )
     bypass = (width <= cfg.image_size) & (height <= cfg.image_size)
     if not cfg.crop_mode:
         bypass = F.lit(True)
-    return F.when(
-        bypass, F.struct(F.lit(1).alias("nw"), F.lit(1).alias("nh"))
-    ).otherwise(F.struct(folded["nw"].alias("nw"), folded["nh"].alias("nh")))
+    return F.when(bypass, F.struct(F.lit(1).alias("nw"), F.lit(1).alias("nh"))).otherwise(folded)
 
 
 # ---------------------------------------------------------------------------
-# Stage 3 — extraction kernel (iterator pandas UDF, per-executor singleton)
+# Extraction kernel (per-Python-worker singleton)
 # ---------------------------------------------------------------------------
 
 _KERNEL = None  # per-Python-worker singleton (the one-replica-per-executor pattern)
@@ -195,7 +199,7 @@ def _get_kernel():
 
 
 # ---------------------------------------------------------------------------
-# Stage 3 — doc-level finalize (cascade + assembly + spans + token count)
+# Per-document finalize — the one body both plans run
 # ---------------------------------------------------------------------------
 
 # Spans carry both the 0-999 virtual-grid coords (the model grammar) and the
@@ -219,66 +223,111 @@ DOC_SPAN_TYPE = T.ArrayType(
     )
 )
 
-FINALIZE_TYPE = T.StructType(
+# one row per input document, before the expression tail
+DOC_SCHEMA = T.StructType(
     [
+        T.StructField("url", T.StringType()),
         T.StructField("raw_text", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("spans", DOC_SPAN_TYPE),
+        # kept-page dims in assembly order: the tail sums vision tokens over
+        # them and downstream sinks (layouts_table O-7) rebuild per-page
+        # canvases from them without re-running the split
+        T.StructField(
+            "page_dims",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("page_no", T.IntegerType()),
+                        T.StructField("width", T.IntegerType()),
+                        T.StructField("height", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("n_pages", T.IntegerType()),
         T.StructField("n_text_tokens", T.LongType()),
     ]
 )
 
 
-def make_finalize_udf(mode: str):
-    """Doc-level finalize: kept pages (already page-ordered) → cascade per
-    page with jdx = position (pdf.py:285-320), assembly with the page
-    separator, span parse, text-token count. Mirrors the oracle loop
-    exactly — same kernel functions, same iteration order."""
+def _finalize_doc(pages, cfg: EngineConfig) -> tuple:
+    """One document's extracted pages ``(page_no, width, height, raw)`` in
+    ``(page_no, seq)`` order → ``(raw_text, text, spans, page_dims, n_pages,
+    n_text_tokens)``.
 
-    @F.pandas_udf(FINALIZE_TYPE)
-    def finalize_udf(kept_pages: pd.Series) -> pd.DataFrame:
-        from deepseek_ocr_spark.kernels import postprocess as pp
-        from deepseek_ocr_spark.kernels.tokens import num_text_tokens
+    The reference's per-document fold (pdf.py:285-320), mirroring
+    ``oracle.runner.extract_url`` — same kernel functions, same iteration
+    order: SKIP_REPEAT gate + EOS strip, the per-page cascade with the
+    kept-page ordinal jdx, span parse + rescale, page assembly, text-token
+    count."""
+    raw_parts, clean_parts, spans, dims = [], [], [], []
+    for page_no, w, h, raw in pages:
+        keep, content = pp.eos_keep_and_strip(raw, cfg.skip_repeat)
+        if not keep:
+            continue
+        for s in pp.parse_spans(content):
+            spans.append(
+                (
+                    s["label"], s["x1"], s["y1"], s["x2"], s["y2"],
+                    *pp.rescale_box(s["x1"], s["y1"], s["x2"], s["y2"], w, h),
+                    page_no, s["ord"],
+                )
+            )
+        jdx = len(raw_parts)  # kept-page ordinal (pdf.py:285, 320)
+        if cfg.mode == "eval":
+            clean_parts.append(pp.clean_page_eval(content))
+        elif cfg.mode == "image":
+            clean_parts.append(pp.clean_page_image(content))
+        else:
+            clean_parts.append(pp.clean_page_pdf(content, jdx))
+        raw_parts.append(content)
+        dims.append((page_no, w, h))
+    text = pp.assemble_pages(clean_parts)
+    return pp.assemble_pages(raw_parts), text, spans, dims, len(dims), num_text_tokens(text)
 
-        raw_out, text_out, spans_out, ntt_out = [], [], [], []
-        for pages in kept_pages:
-            raw_parts, clean_parts, spans = [], [], []
-            for jdx, page in enumerate(pages if pages is not None else []):
-                content = page["content"]
-                raw_parts.append(content)
-                w, h = int(page["width"]), int(page["height"])
-                for s in pp.parse_spans(content):
-                    px1, py1, px2, py2 = pp.rescale_box(
-                        s["x1"], s["y1"], s["x2"], s["y2"], w, h
-                    )
-                    spans.append(
-                        (
-                            s["label"], s["x1"], s["y1"], s["x2"], s["y2"],
-                            px1, py1, px2, py2,
-                            int(page["page_no"]), s["ord"],
-                        )
-                    )
-                if mode == "eval":
-                    clean_parts.append(pp.clean_page_eval(content))
-                elif mode == "image":
-                    clean_parts.append(pp.clean_page_image(content))
-                else:
-                    clean_parts.append(pp.clean_page_pdf(content, jdx))
-            text = pp.assemble_pages(clean_parts)
-            raw_out.append(pp.assemble_pages(raw_parts))
-            text_out.append(text)
-            spans_out.append(spans)
-            ntt_out.append(num_text_tokens(text))
-        return pd.DataFrame(
-            {
-                "raw_text": raw_out,
-                "text": text_out,
-                "spans": spans_out,
-                "n_text_tokens": pd.Series(ntt_out, dtype="int64"),
-            }
-        )
 
-    return finalize_udf
+def _extract_doc_batches(cfg: EngineConfig):
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        kernel = _get_kernel()
+        for pdf in batches:
+            rows = []
+            for url, html in zip(pdf["url"], pdf["html"]):
+                # split_pages returns pages in (page_no, seq) order; null/
+                # bytes normalization happens inside the shared kernel
+                pages = (
+                    (rec.page_no, rec.width, rec.height, kernel.extract_page(rec))
+                    for rec in kernel.split_pages(html)
+                )
+                rows.append((url, *_finalize_doc(pages, cfg)))
+            yield pd.DataFrame(rows, columns=DOC_SCHEMA.fieldNames())
+
+    return run
+
+
+def _doc_tail(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """DOC_SCHEMA rows → the extracted table: vision tokens folded over the
+    kept pages' tile plans, compression ratio and digest — JVM
+    expressions, no shuffle."""
+    plans = F.transform("page_dims", lambda p: tile_plan_expr(p["width"], p["height"], cfg))
+    n_vision_tokens = F.aggregate(
+        plans,
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc + vision_tokens_col(t["nw"], t["nh"], cfg.base_size, cfg.image_size),
+    )
+    result = docs.select(
+        "url", "raw_text", "text", "spans", "page_dims", "n_pages",
+        n_vision_tokens.alias("n_vision_tokens"),
+        "n_text_tokens",
+    )
+    result = result.withColumn(
+        "compression_ratio",
+        F.when(
+            F.col("n_vision_tokens") > 0,
+            F.col("n_text_tokens").cast("double") / F.col("n_vision_tokens"),
+        ).otherwise(F.lit(0.0)),
+    )
+    return result.withColumn("digest", F.sha2(F.encode(F.col("text"), "UTF-8"), 256))
 
 
 # ---------------------------------------------------------------------------
@@ -292,17 +341,20 @@ def extract_documents(
     page_partitions: int | None = None,
     spread_input: bool | None = None,
 ) -> DataFrame:
-    """documents → extracted(url, text, raw_text, spans, n_pages,
+    """documents → extracted(url, raw_text, text, spans, page_dims, n_pages,
     n_vision_tokens, n_text_tokens, compression_ratio, digest).
 
     Byte-identical per url to ``oracle.runner.extract_url`` (pytest gate).
+    One output row per input row: ``url`` is the unique key and is never
+    grouped on here; resume dedupe (``checkpoint.read_extracted_deduped``)
+    stays url-keyed.
 
-    ``spread_input``: repartition documents by url before the fused
-    split+extract stage. Auto (None): only when the input has fewer
-    partitions than the cluster's parallelism — a well-laid-out 100 TB table
-    already has thousands of scan splits, so the shuffle of html bytes is
-    skipped; a single-file sandbox input gets spread so the Python stage
-    isn't single-tasked. Work per doc is bounded (≤~40 pages × the 8192
+    ``spread_input``: repartition documents by url before the fused doc
+    stage. Auto (None): only when the input has fewer partitions than the
+    cluster's parallelism — a well-laid-out 100 TB table already has
+    thousands of scan splits, so the shuffle of html bytes is skipped; a
+    single-file sandbox input gets spread so the Python stage isn't
+    single-tasked. Work per doc is bounded (≤~40 pages × the 8192
     output-token cap), so doc-granularity distribution is skew-safe at
     thousands of docs per task.
     """
@@ -316,99 +368,7 @@ def extract_documents(
     if spread_input:
         src = src.repartition(page_partitions, "url")
 
-    pages = split_and_extract(src)
-
-    return _assemble_pages(pages, cfg, page_partitions)
-
-
-def _assemble_pages(pages: DataFrame, cfg: EngineConfig, page_partitions: int) -> DataFrame:
-    """Shared downstream: extracted page rows (url, page_no, width, height,
-    raw) → final extracted table. Used by both the fused doc-granular path
-    and the page-granular giant-doc path."""
-    plan = tile_plan_expr(F.col("width"), F.col("height"), cfg)
-    pages = pages.withColumn("nw", plan["nw"]).withColumn("nh", plan["nh"])
-    pages = pages.withColumn(
-        "vis_tokens", vision_tokens_col(F.col("nw"), F.col("nh"), cfg.base_size, cfg.image_size)
-    )
-
-    # O-19 SKIP_REPEAT gate as a flag, not a filter: a filter directly on a
-    # Python-UDF column makes Catalyst evaluate the UDF twice (once for the
-    # predicate, once for the projection — observed as two ArrowEvalPython
-    # nodes). The flag rides into the aggregation instead; conditional
-    # collect (when(keep, ...) → NULL → dropped by collect_list) both
-    # excludes dropped pages and keeps all-dropped urls in the output with
-    # empty text — zero extra joins, zero re-evaluation.
-    keep = F.col("raw").contains(F.lit(EOS_TOKEN)) if cfg.skip_repeat else F.lit(True)
-    pages = pages.withColumn("keep", keep).withColumn(
-        "content", F.replace(F.col("raw"), F.lit(EOS_TOKEN), F.lit(""))
-    )
-
-    # O-24/O-26/O-27 in ONE url-shuffle: sort-agg the kept pages in page
-    # order; the kept-page ordinal jdx (pdf.py:285,320), the per-page cascade
-    # (O-30…O-36), assembly, and text-token count all happen in a single
-    # doc-level finalize UDF over the collected array — page order is already
-    # restored inside the aggregate, so no separate window pass (and no
-    # second url exchange: ArrowEvalPython between a window and a groupBy
-    # would forget the hash partitioning and force one).
-    # Explicit url repartition (REPARTITION_BY_NUM) rather than letting the
-    # groupBy add an ENSURE_REQUIREMENTS exchange: AQE's byte-based
-    # coalescing shrank the post-shuffle stage to 1 task (observed in the
-    # event log), serializing the Python finalize stage — partition-count
-    # decisions for CPU-bound UDF stages must not be byte-based. No partial-
-    # agg loss: collect_list partials don't reduce data anyway.
-    pages = pages.repartition(page_partitions, "url")
-    assembled = pages.groupBy("url").agg(
-        F.array_sort(
-            # sort key (page_no, seq): seq is the split-order position, so
-            # duplicate page_no values keep document order exactly like the
-            # oracle's stable sort — struct comparison must never fall
-            # through to content
-            F.collect_list(
-                F.when(
-                    F.col("keep"),
-                    F.struct("page_no", "seq", "content", "width", "height"),
-                )
-            )
-        ).alias("kept_pages"),
-        F.sum(F.col("keep").cast("int")).cast("int").alias("n_pages"),
-        F.sum(F.when(F.col("keep"), F.col("vis_tokens")).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("n_vision_tokens"),
-    )
-
-    fin = make_finalize_udf(cfg.mode)
-    result = (
-        assembled.withColumn("fin", fin(F.col("kept_pages")))
-        .select(
-            "url",
-            F.col("fin.raw_text").alias("raw_text"),
-            F.col("fin.text").alias("text"),
-            F.col("fin.spans").alias("spans"),
-            # kept-page dims ride along (already sorted by page order) so
-            # downstream sinks (layouts_table O-7) can rebuild per-page
-            # canvases without re-running the split — pure projection, free
-            F.transform(
-                "kept_pages",
-                lambda x: F.struct(
-                    x["page_no"].alias("page_no"),
-                    x["width"].alias("width"),
-                    x["height"].alias("height"),
-                ),
-            ).alias("page_dims"),
-            "n_pages",
-            "n_vision_tokens",
-            F.col("fin.n_text_tokens").alias("n_text_tokens"),
-        )
-    )
-    result = result.withColumn(
-        "compression_ratio",
-        F.when(
-            F.col("n_vision_tokens") > 0,
-            F.col("n_text_tokens").cast("double") / F.col("n_vision_tokens"),
-        ).otherwise(F.lit(0.0)),
-    )
-    result = result.withColumn("digest", F.sha2(F.encode(F.col("text"), "UTF-8"), 256))
-    return result
+    return _doc_tail(src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA), cfg)
 
 
 @F.pandas_udf(T.StringType())
@@ -431,6 +391,19 @@ def page_extract_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
         )
 
 
+def _finalize_group(cfg: EngineConfig):
+    def run(g: pd.DataFrame) -> pd.DataFrame:
+        g = g.sort_values(["page_no", "seq"])
+        pages = zip(
+            g["page_no"].tolist(), g["width"].tolist(), g["height"].tolist(), g["raw"].tolist()
+        )
+        return pd.DataFrame(
+            [(g["url"].iloc[0], *_finalize_doc(pages, cfg))], columns=DOC_SCHEMA.fieldNames()
+        )
+
+    return run
+
+
 def extract_documents_paged(
     docs: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
@@ -443,10 +416,14 @@ def extract_documents_paged(
     enormous (book-length PDFs: thousands of pages), one doc must not pin
     one task, so this path splits FIRST, shuffles pages by the salted page
     key (an explicit skew spread — AQE cannot rebalance UDF-stage work),
-    extracts page-at-a-time, then rejoins the shared assembly downstream.
-    Byte-identical to ``extract_documents`` (pytest gate); costs one extra
-    shuffle of page html + one extra Python stage, which is why it is not
-    the default.
+    extracts page-at-a-time, then regroups each document's pages for the
+    same ``_finalize_doc`` and expression tail as ``extract_documents``.
+    Byte-identical to ``extract_documents`` (pytest gate) and, like it, one
+    output row per input row: pages regroup by a per-row id taken before
+    the split, not by ``url`` (the unique key; resume dedupe in
+    ``checkpoint.read_extracted_deduped`` stays url-keyed). Costs a shuffle
+    of page html, a shuffle of page text and two more Python stages, which
+    is why it is not the default.
     """
     spark = docs.sparkSession
     if page_partitions is None:
@@ -455,16 +432,15 @@ def extract_documents_paged(
     pages = split_to_pages(docs)
     # salted page-key spread: pages of one giant doc scatter across tasks
     pages = pages.repartition(
-        page_partitions, F.pmod(F.hash("url", "page_no"), F.lit(page_partitions * 8))
+        page_partitions, F.pmod(F.hash("doc", "seq"), F.lit(page_partitions * 8))
     )
     pages = pages.withColumn(
         "raw",
         page_extract_udf(F.struct("page_no", "width", "height", "page_html", "degenerate")),
     ).drop("page_html", "degenerate")
-    return _assemble_pages(pages, cfg, page_partitions)
-
-
-def _page_sep() -> str:
-    from deepseek_ocr_spark.config import PAGE_SEP
-
-    return PAGE_SEP
+    # Explicit REPARTITION_BY_NUM rather than the groupBy's own exchange:
+    # AQE's byte-based coalescing shrank the post-shuffle stage to 1 task
+    # (observed in the event log), serializing the Python finalize stage.
+    pages = pages.repartition(page_partitions, "doc")
+    finalized = pages.groupBy("doc").applyInPandas(_finalize_group(cfg), DOC_SCHEMA)
+    return _doc_tail(finalized, cfg)

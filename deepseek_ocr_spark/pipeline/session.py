@@ -13,13 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores for the local master: ``SPARK_GRAFT_CPUS`` when set, else the
+    CPUs this process may run on (never more threads than cores)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def build_session(
     app_name: str = "deepseek-ocr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

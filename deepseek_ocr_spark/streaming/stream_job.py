@@ -8,8 +8,10 @@ which directly provides the north_rule checkpoint/replay semantics
 replays, the manifest dedupes).
 
 ``foreachBatch`` (rather than a fully-declarative streaming plan) because
-the extraction plan contains a groupBy assembly + doc-finalize UDF, which is
-the documented pattern for reusing a batch plan per micro-batch. Late data /
+each micro-batch commits with ``checkpoint.commit_run``: two writes (the
+extracted rows, then the manifest) of one persisted result, which a single
+streaming sink cannot express. The extraction plan itself is stateless
+(scan → one Python stage → expression tail, no aggregation). Late data /
 event-time windows are N/A: warc_ts is data, not processing time
 (SURVEY.md §2.9).
 """

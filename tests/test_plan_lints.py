@@ -137,3 +137,30 @@ def test_pair_lanes_share_one_salted_cogroup(lane, spark):
         n_part,
     ]
     assert n_part > n_centroids
+
+
+def test_extract_documents_is_one_python_stage(spark, tmp_path):
+    """The flagship job on an input with at least defaultParallelism scan
+    splits: scan → one MapInPandas → JVM tail. No exchange (no url
+    shuffle), no second Python stage, no per-url aggregation."""
+    from deepseek_ocr_spark.datagen.synth import gen_documents
+    from deepseek_ocr_spark.pipeline.extract_job import extract_documents
+
+    n_part = spark.sparkContext.defaultParallelism * 2
+    spark.createDataFrame(
+        gen_documents(60), "url string, warc_ts timestamp, html binary, text string, lang string"
+    ).repartition(n_part).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+    df = extract_documents(docs)
+    df.collect()
+    nodes = list(_nodes(df._jdf.queryExecution().executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    python = [
+        n.nodeName() for n in nodes
+        if n.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
+    ]
+    assert python == ["MapInPandas"], names
+    for banned in ("Exchange", "ArrowEvalPython", "ObjectHashAggregate", "SortAggregate"):
+        assert banned not in names, names

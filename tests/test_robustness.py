@@ -2,6 +2,7 @@
 kernel): malformed html, empty bytes, non-UTF8, unbalanced divs — the Spark
 pipeline must agree with the oracle on all of them, never crash."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from deepseek_ocr_spark.kernels.tiling import tile_plan
@@ -129,6 +130,23 @@ def test_duplicate_page_no_keeps_document_order(spark):
     want = extract_url("u://dup", html)
     assert got["text"] == want["text"]
     assert got["text"].find("zebra") < got["text"].find("apple")
+
+
+@pytest.mark.parametrize("paged", [False, True], ids=["fused", "paged"])
+def test_duplicate_url_rows_stay_separate(spark, paged):
+    """url is the unique key, but two input rows that share one are not
+    merged into one document: each row yields its own extract_url row, as
+    run_oracle does (regression: the url-keyed assembly built one 2-page
+    doc matching neither)."""
+    from deepseek_ocr_spark.pipeline.extract_job import extract_documents_paged
+
+    rows = [("u://x", b"<p>first crawl</p>"), ("u://x", b"<p>second crawl</p>")]
+    docs = spark.createDataFrame(rows, "url string, html binary")
+    run = extract_documents_paged if paged else extract_documents
+    keys = ("url", "text", "raw_text", "n_pages", "n_vision_tokens", "digest")
+    got = sorted(tuple(r[k] for k in keys) for r in run(docs).collect())
+    want = sorted(tuple(extract_url(u, h)[k] for k in keys) for u, h in rows)
+    assert got == want
 
 
 def test_void_tag_in_boilerplate_does_not_swallow_content():
