@@ -160,8 +160,8 @@ def main() -> None:
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
 Same job (flagship extraction pipeline: one fused mapInPandas per document —
-split, extract, SKIP_REPEAT, cascade, ordered assembly — → fold-expression
-vision tokens, no exchange), same materialized input ({pages} pages derived
+split, extract, SKIP_REPEAT, cascade, ordered assembly, vision tokens,
+digest — → final rows, no exchange), same materialized input ({pages} pages derived
 deterministically from {args.sf_dir} x{args.replicate}), noop write of the
 FULL result (nothing pruned). Sandbox stand-in for N vs 4N executors
 (north_rule).

@@ -19,7 +19,9 @@ ad/sidebar-classed containers, walk content blocks in document order, emit
 markdown. Page fan-out mirrors the PDF page source (pdf.py:64-95): documents
 carry ``<div class="page" data-page="k">`` sections.
 
-Pure Python + stdlib html.parser only; shared verbatim by the single-node
+Pure Python + stdlib only: a strict-subset regex scanner feeds the block
+extractor's handlers on well-formed pages, and stdlib html.parser parses
+every other page (see ``feed_strict``). Shared verbatim by the single-node
 oracle and the Spark pandas UDFs (byte-identity by construction).
 """
 
@@ -246,6 +248,60 @@ def _split_pages_htmlparser(html: str) -> list[PageRecord]:
     return [PageRecord(0, DEFAULT_WIDTH, DEFAULT_HEIGHT, html, False)]
 
 
+# Strict-subset scanner: on pages where every "<" opens `<tag a="v" …>`,
+# `<tag …/>` or `</tag>` with lowercase names, double-quoted values free of
+# "<", ">" and "&", no "&" anywhere and no raw-text element, HTMLParser's
+# (starttag | startendtag | endtag | data) event stream is fully determined
+# by these two regexes, so the handlers can be fed without its per-char
+# state machine (~60% of the oracle's single-process time, cProfile over
+# the synthetic corpus). Every other page goes through
+# HTMLParser, which stays the reference (tests/test_extract_kernel.py
+# compares the two event streams).
+_STRICT_TAG_RE = _re.compile(
+    r'<(?:/([a-z][a-z0-9]*)|([a-z][a-z0-9]*)((?: [a-z][-a-z0-9]*="[^"<>&]*")*)( ?/)?)>'
+)
+_STRICT_ATTR_RE = _re.compile(r' ([a-z][-a-z0-9]*)="([^"]*)"')
+# raw-text / escapable raw-text elements switch HTMLParser's tokenizer mode
+# (a superset of its CDATA_CONTENT_ELEMENTS across Python versions)
+_RAW_TEXT_TAG_RE = _re.compile(
+    r"</?(?:script|style|textarea|title|xmp|iframe|noembed|noframes|noscript|plaintext)[ />]"
+)
+
+
+def feed_strict(handler, html: str) -> bool:
+    """Feed ``html``'s events to ``handler``'s ``handle_*`` methods and
+    return True when the page is in the strict subset; otherwise call
+    nothing and return False (the caller falls back to HTMLParser).
+
+    ``_STRICT_TAG_RE.split`` yields ``[data, end, start, attrs, slash,
+    data, …]``; each match holds exactly one "<", so the page is in the
+    subset iff there are as many matches as "<" characters."""
+    if "&" in html or _RAW_TEXT_TAG_RE.search(html):
+        return False
+    toks = _STRICT_TAG_RE.split(html)
+    if len(toks) != 5 * html.count("<") + 1:
+        return False
+    handle_data = handler.handle_data
+    handle_starttag = handler.handle_starttag
+    handle_startendtag = handler.handle_startendtag
+    handle_endtag = handler.handle_endtag
+    attr_findall = _STRICT_ATTR_RE.findall
+    if toks[0]:
+        handle_data(toks[0])
+    for end, tag, attrs, slash, data in zip(
+        toks[1::5], toks[2::5], toks[3::5], toks[4::5], toks[5::5]
+    ):
+        if end is not None:
+            handle_endtag(end)
+        elif slash is None:
+            handle_starttag(tag, attr_findall(attrs) if attrs else [])
+        else:
+            handle_startendtag(tag, attr_findall(attrs) if attrs else [])
+        if data:
+            handle_data(data)
+    return True
+
+
 class _BlockExtractor(HTMLParser):
     """DOM-heuristic main-content walk over one page section."""
 
@@ -266,7 +322,10 @@ class _BlockExtractor(HTMLParser):
     def _is_boilerplate(self, tag, a) -> bool:
         if tag in BOILERPLATE_TAGS:
             return True
-        cls = (a.get("class") or "").lower()
+        cls = a.get("class")
+        if not cls:
+            return False
+        cls = cls.lower()
         return any(h in cls for h in BOILERPLATE_CLASS_HINTS)
 
     def handle_starttag(self, tag, attrs):
@@ -431,7 +490,8 @@ def extract_page(page: PageRecord, max_tokens: int = MAX_OUTPUT_TOKENS) -> str:
         return ("the the the is is of of " * 64).rstrip()
 
     parser = _BlockExtractor()
-    parser.feed(page.html)
+    if not feed_strict(parser, page.html):
+        parser.feed(page.html)
     parser.close()
 
     parts: list[str] = []

@@ -5,8 +5,9 @@ new engineering mandated by the north_rule: a manifest table of completed
 work, restart = left-anti join, idempotent replay.
 
 Model:
-- each run appends ``extracted`` rows partitioned by ``run_id`` and appends a
-  manifest of ``(url, digest, partition_id, attempt, completed_ts)``;
+- each run appends ``extracted`` rows (tagged with ``partition_id``,
+  ``attempt`` and ``completed_ts``; no directory partitioning) and appends
+  a manifest of ``(url, digest, partition_id, attempt, completed_ts)``;
 - on restart, ``pending = docs.join(manifest, 'url', 'left_anti')`` — only
   unfinished urls are reprocessed (the anti-join is the O-22 note in
   SURVEY.md §2.4);

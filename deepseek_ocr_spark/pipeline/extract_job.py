@@ -12,41 +12,40 @@ plan over ``documents(url, warc_ts, html, text, lang)``:
        loop (pdf.py:285-320) in ONE Python call per input row: O-2 page
        split, O-38 kernel, O-19/O-33 SKIP_REPEAT gate + EOS strip, O-26/O-27
        kept-page ordinals jdx, O-30…O-36 cascade, O-24 ordered assembly,
-       span parse + rescale, text-token count. Page html and page text
-       never cross the Arrow boundary; iterator batches = the continuous-
-       batching analog; per-worker kernel singleton]
-    → vision tokens as a zero-shuffle fold    [O-10/O-11 tile plan over the
-       13-candidate literal array per kept page (the broadcast-join+window
-       formulation lives in operators/tiling_relational.py and is verified
-       to agree), O-13 token count summed over page_dims]
-    → compression ratio + digest columns      [O-25]
+       span parse + rescale, O-10/O-11 tile plan + O-13 vision tokens per
+       kept page, text-token count, O-25 compression ratio + digest. It
+       emits the final rows. Page html and page text never cross the Arrow
+       boundary; iterator batches = the continuous-batching analog;
+       per-worker kernel singleton]
 
 Shuffle budget — ZERO exchanges on a well-laid-out input, plus the optional
-input-spread repartition for few-split inputs: scan → one Python stage →
-JVM expression tail. No aggregation, no windows, no joins (tests/test_plan_lints.py
-pins this shape). ``url`` is the table's unique key (FIXTURES.md); the plan
-emits one row per input row and never groups by url, so two input rows
-sharing a url stay two rows (resume dedupe, ``checkpoint.
-read_extracted_deduped``, is url-keyed). Projection (url, html) prunes at
-the scan. Skew: work per doc is bounded (≤~40 pages × the 8192-token cap),
-so doc-granular distribution evens out at thousands of docs per task;
-book-length documents use ``extract_documents_paged``.
+input-spread repartition for few-split inputs: scan → one MapInPandas →
+final rows, with no JVM expression tail. No aggregation, no windows, no
+joins (tests/test_plan_lints.py pins this shape). The relational tile plan
+(broadcast join + window) lives in operators/tiling_relational.py and is
+tested to agree with the kernel the doc stage calls. ``url`` is the table's
+unique key (FIXTURES.md); the plan emits one row per input row and never
+groups by url, so two input rows sharing a url stay two rows (resume
+dedupe, ``checkpoint.read_extracted_deduped``, is url-keyed). Projection
+(url, html) prunes at the scan. Skew: work per doc is bounded (≤~40 pages ×
+the 8192-token cap), so doc-granular distribution evens out at thousands of
+docs per task; book-length documents use ``extract_documents_paged``.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepseek_ocr_spark.config import EngineConfig, DEFAULT_CONFIG
 from deepseek_ocr_spark.kernels import postprocess as pp
-from deepseek_ocr_spark.kernels.tiling import candidate_ratios
-from deepseek_ocr_spark.kernels.tokens import num_text_tokens
-from deepseek_ocr_spark.operators.tiling_relational import vision_tokens_col
+from deepseek_ocr_spark.kernels.tiling import tile_plan
+from deepseek_ocr_spark.kernels.tokens import num_text_tokens, num_vision_tokens
 
 # ---------------------------------------------------------------------------
 # Page split (mapInPandas; cheap, streaming) — the giant-doc path's fan-out
@@ -133,54 +132,6 @@ def split_and_extract(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tile plan as a zero-shuffle fold over the candidate literal array
-# ---------------------------------------------------------------------------
-
-
-def tile_plan_expr(width: Column, height: Column, cfg: EngineConfig = DEFAULT_CONFIG) -> Column:
-    """(nw, nh) via ``F.aggregate`` over the 13-candidate array — the
-    reference argmin scan (image_process.py:11-25) translated literally into
-    a whole-stage-codegen fold: no shuffle, no UDF, no join.
-
-    Returns struct(nw, nh).
-    """
-    cands = F.array(
-        *[
-            F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-            for (i, j) in candidate_ratios(cfg.min_crops, cfg.max_crops)
-        ]
-    )
-    aspect = width.cast("double") / height.cast("double")
-    area = (width * height).cast("double")
-    half_sq = F.lit(0.5 * cfg.image_size * cfg.image_size)
-
-    def step(acc, c):
-        diff = F.abs(aspect - c["i"].cast("double") / c["j"].cast("double"))
-        better = diff < acc["diff"]
-        tie_takes = (diff == acc["diff"]) & (area > half_sq * c["i"] * c["j"])
-        return F.when(
-            better | tie_takes,
-            F.struct(diff.alias("diff"), c["i"].alias("nw"), c["j"].alias("nh")),
-        ).otherwise(acc)
-
-    folded = F.aggregate(
-        cands,
-        F.struct(
-            F.lit(float("inf")).alias("diff"),
-            F.lit(1).alias("nw"),
-            F.lit(1).alias("nh"),
-        ),
-        step,
-        # project inside the fold so it is evaluated once, not per field
-        lambda acc: F.struct(acc["nw"].alias("nw"), acc["nh"].alias("nh")),
-    )
-    bypass = (width <= cfg.image_size) & (height <= cfg.image_size)
-    if not cfg.crop_mode:
-        bypass = F.lit(True)
-    return F.when(bypass, F.struct(F.lit(1).alias("nw"), F.lit(1).alias("nh"))).otherwise(folded)
-
-
-# ---------------------------------------------------------------------------
 # Extraction kernel (per-Python-worker singleton)
 # ---------------------------------------------------------------------------
 
@@ -223,16 +174,16 @@ DOC_SPAN_TYPE = T.ArrayType(
     )
 )
 
-# one row per input document, before the expression tail
+# one row per input document: the extracted table
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
         T.StructField("raw_text", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("spans", DOC_SPAN_TYPE),
-        # kept-page dims in assembly order: the tail sums vision tokens over
-        # them and downstream sinks (layouts_table O-7) rebuild per-page
-        # canvases from them without re-running the split
+        # kept-page dims in assembly order: downstream sinks (layouts_table
+        # O-7) rebuild per-page canvases from them without re-running the
+        # split
         T.StructField(
             "page_dims",
             T.ArrayType(
@@ -246,26 +197,31 @@ DOC_SCHEMA = T.StructType(
             ),
         ),
         T.StructField("n_pages", T.IntegerType()),
+        T.StructField("n_vision_tokens", T.LongType()),
         T.StructField("n_text_tokens", T.LongType()),
+        T.StructField("compression_ratio", T.DoubleType()),
+        T.StructField("digest", T.StringType()),
     ]
 )
 
 
 def _finalize_doc(pages, cfg: EngineConfig) -> tuple:
     """One document's extracted pages ``(page_no, width, height, raw)`` in
-    ``(page_no, seq)`` order → ``(raw_text, text, spans, page_dims, n_pages,
-    n_text_tokens)``.
+    ``(page_no, seq)`` order → the DOC_SCHEMA columns after ``url``.
 
     The reference's per-document fold (pdf.py:285-320), mirroring
     ``oracle.runner.extract_url`` — same kernel functions, same iteration
-    order: SKIP_REPEAT gate + EOS strip, the per-page cascade with the
-    kept-page ordinal jdx, span parse + rescale, page assembly, text-token
-    count."""
+    order: SKIP_REPEAT gate + EOS strip, tile plan + vision tokens, the
+    per-page cascade with the kept-page ordinal jdx, span parse + rescale,
+    page assembly, text-token count, compression ratio and digest."""
     raw_parts, clean_parts, spans, dims = [], [], [], []
+    n_vision = 0
     for page_no, w, h, raw in pages:
         keep, content = pp.eos_keep_and_strip(raw, cfg.skip_repeat)
         if not keep:
             continue
+        nw, nh = tile_plan(w, h, cfg.crop_mode, cfg.image_size, cfg.min_crops, cfg.max_crops)
+        n_vision += num_vision_tokens(nw, nh, cfg.base_size, cfg.image_size)
         for s in pp.parse_spans(content):
             spans.append(
                 (
@@ -284,7 +240,12 @@ def _finalize_doc(pages, cfg: EngineConfig) -> tuple:
         raw_parts.append(content)
         dims.append((page_no, w, h))
     text = pp.assemble_pages(clean_parts)
-    return pp.assemble_pages(raw_parts), text, spans, dims, len(dims), num_text_tokens(text)
+    n_text = num_text_tokens(text)
+    return (
+        pp.assemble_pages(raw_parts), text, spans, dims, len(dims), n_vision, n_text,
+        n_text / n_vision if n_vision else 0.0,
+        hashlib.sha256(text.encode("utf-8")).hexdigest(),
+    )
 
 
 def _extract_doc_batches(cfg: EngineConfig):
@@ -303,31 +264,6 @@ def _extract_doc_batches(cfg: EngineConfig):
             yield pd.DataFrame(rows, columns=DOC_SCHEMA.fieldNames())
 
     return run
-
-
-def _doc_tail(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """DOC_SCHEMA rows → the extracted table: vision tokens folded over the
-    kept pages' tile plans, compression ratio and digest — JVM
-    expressions, no shuffle."""
-    plans = F.transform("page_dims", lambda p: tile_plan_expr(p["width"], p["height"], cfg))
-    n_vision_tokens = F.aggregate(
-        plans,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + vision_tokens_col(t["nw"], t["nh"], cfg.base_size, cfg.image_size),
-    )
-    result = docs.select(
-        "url", "raw_text", "text", "spans", "page_dims", "n_pages",
-        n_vision_tokens.alias("n_vision_tokens"),
-        "n_text_tokens",
-    )
-    result = result.withColumn(
-        "compression_ratio",
-        F.when(
-            F.col("n_vision_tokens") > 0,
-            F.col("n_text_tokens").cast("double") / F.col("n_vision_tokens"),
-        ).otherwise(F.lit(0.0)),
-    )
-    return result.withColumn("digest", F.sha2(F.encode(F.col("text"), "UTF-8"), 256))
 
 
 # ---------------------------------------------------------------------------
@@ -368,7 +304,7 @@ def extract_documents(
     if spread_input:
         src = src.repartition(page_partitions, "url")
 
-    return _doc_tail(src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA), cfg)
+    return src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA)
 
 
 @F.pandas_udf(T.StringType())
@@ -417,7 +353,7 @@ def extract_documents_paged(
     one task, so this path splits FIRST, shuffles pages by the salted page
     key (an explicit skew spread — AQE cannot rebalance UDF-stage work),
     extracts page-at-a-time, then regroups each document's pages for the
-    same ``_finalize_doc`` and expression tail as ``extract_documents``.
+    same ``_finalize_doc`` as ``extract_documents``.
     Byte-identical to ``extract_documents`` (pytest gate) and, like it, one
     output row per input row: pages regroup by a per-row id taken before
     the split, not by ``url`` (the unique key; resume dedupe in
@@ -442,5 +378,4 @@ def extract_documents_paged(
     # AQE's byte-based coalescing shrank the post-shuffle stage to 1 task
     # (observed in the event log), serializing the Python finalize stage.
     pages = pages.repartition(page_partitions, "doc")
-    finalized = pages.groupBy("doc").applyInPandas(_finalize_group(cfg), DOC_SCHEMA)
-    return _doc_tail(finalized, cfg)
+    return pages.groupBy("doc").applyInPandas(_finalize_group(cfg), DOC_SCHEMA)

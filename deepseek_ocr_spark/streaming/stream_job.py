@@ -11,7 +11,7 @@ replays, the manifest dedupes).
 each micro-batch commits with ``checkpoint.commit_run``: two writes (the
 extracted rows, then the manifest) of one persisted result, which a single
 streaming sink cannot express. The extraction plan itself is stateless
-(scan → one Python stage → expression tail, no aggregation). Late data /
+(scan → one MapInPandas → final rows, no aggregation). Late data /
 event-time windows are N/A: warc_ts is data, not processing time
 (SURVEY.md §2.9).
 """

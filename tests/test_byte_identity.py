@@ -47,6 +47,7 @@ def test_counters_match(spark_vs_oracle):
         assert got[u]["n_pages"] == oracle[u]["n_pages"], u
         assert got[u]["n_vision_tokens"] == oracle[u]["n_vision_tokens"], u
         assert got[u]["n_text_tokens"] == oracle[u]["n_text_tokens"], u
+        assert got[u]["compression_ratio"] == oracle[u]["compression_ratio"], u
 
 
 def test_spans_match(spark_vs_oracle):
@@ -130,23 +131,6 @@ def test_region_images_side_output(spark, docs_df):
         for r in regions
     )
     assert have == want and len(have) > 0
-
-
-def test_tile_plan_expr_agrees_with_kernel(spark):
-    """The zero-shuffle fold expression == the Python kernel on a dim sweep."""
-    from deepseek_ocr_spark.kernels.tiling import tile_plan
-    from deepseek_ocr_spark.pipeline.extract_job import tile_plan_expr
-    from pyspark.sql import functions as F
-
-    dims = [(w, h) for w in range(100, 4100, 379) for h in range(100, 4100, 379)]
-    df = spark.createDataFrame(dims, "width int, height int")
-    plan = tile_plan_expr(F.col("width"), F.col("height"))
-    got = {
-        (r["width"], r["height"]): (r["nw"], r["nh"])
-        for r in df.select("width", "height", plan["nw"].alias("nw"), plan["nh"].alias("nh")).collect()
-    }
-    for w, h in dims:
-        assert got[(w, h)] == tile_plan(w, h), (w, h)
 
 
 def test_relational_tile_plan_agrees_with_kernel(spark):

@@ -1,8 +1,18 @@
 """Extraction-kernel + datagen + oracle tests (no Spark)."""
 
+from html.parser import HTMLParser
+
+from hypothesis import given, settings, strategies as st
+
 from deepseek_ocr_spark.config import EOS_TOKEN
 from deepseek_ocr_spark.datagen.synth import gen_document, gen_documents
-from deepseek_ocr_spark.kernels.extract import extract_document, extract_page, split_pages
+from deepseek_ocr_spark.kernels.extract import (
+    _BlockExtractor,
+    extract_document,
+    extract_page,
+    feed_strict,
+    split_pages,
+)
 from deepseek_ocr_spark.oracle.runner import extract_url, run_oracle
 
 
@@ -79,3 +89,100 @@ def test_page_extraction_composes():
     whole = extract_document(doc["html"].decode())
     per_page = [extract_page(rec) for rec in split_pages(doc["html"].decode())]
     assert [p["raw"] for p in whole] == per_page
+
+
+# ---------------------------------------------------------------------------
+# Strict-subset scanner vs HTMLParser (the reference event stream)
+# ---------------------------------------------------------------------------
+
+
+class _Events(HTMLParser):
+    """Records every handler call HTMLParser can make, so an event the
+    strict scanner cannot produce (comment, decl, pi) shows as a mismatch."""
+
+    def __init__(self):
+        super().__init__(convert_charrefs=True)
+        self.events = []
+
+    def handle_starttag(self, tag, attrs):
+        self.events.append(("start", tag, list(attrs)))
+
+    def handle_startendtag(self, tag, attrs):
+        self.events.append(("startend", tag, list(attrs)))
+
+    def handle_endtag(self, tag):
+        self.events.append(("end", tag))
+
+    def handle_data(self, data):
+        self.events.append(("data", data))
+
+    def handle_comment(self, data):
+        self.events.append(("comment", data))
+
+    def handle_decl(self, decl):
+        self.events.append(("decl", decl))
+
+    def handle_pi(self, data):
+        self.events.append(("pi", data))
+
+    def unknown_decl(self, data):
+        self.events.append(("unknown_decl", data))
+
+
+def _strict_matches_htmlparser(html: str) -> bool:
+    """True when the strict scanner accepts ``html``; asserts that its
+    events then equal HTMLParser's."""
+    strict = _Events()
+    if not feed_strict(strict, html):
+        assert strict.events == []  # a rejected page reached no handler
+        return False
+    ref = _Events()
+    ref.feed(html)
+    ref.close()
+    assert strict.events == ref.events, html[:200]
+    return True
+
+
+def test_strict_scanner_takes_every_generated_page():
+    """Every page of the synthetic corpus takes the strict path (a regex
+    edit that silently falls back everywhere fails here) and its events
+    equal HTMLParser's."""
+    pages = [p for d in gen_documents(60) for p in split_pages(d["html"])]
+    assert len(pages) > 60
+    assert all(_strict_matches_htmlparser(p.html) for p in pages)
+
+
+def test_strict_scanner_hostile_inputs():
+    from tests.test_robustness import HOSTILE
+
+    for _url, html in HOSTILE:
+        doc = html.decode("utf-8", errors="replace")
+        for h in [doc] + [p.html for p in split_pages(html)]:
+            _strict_matches_htmlparser(h)
+
+
+_FRAGMENTS = [
+    "&amp;", "&", "<P>", "<!--", "-->", "<!DOCTYPE html>", "<?x?>", "<script>",
+    "</script>", "<style>", "<title>", "<textarea>", "</ p>", "</>", "<p a=b>",
+    "<p a='b'>", '<p a="b&c">', '<p a="b"c="d">', '<p  a="b">', "<p >", "<p a>",
+    "<", ">", '"', "=", "x<y", "<p>", "</p>", "<p/>", "<br/>", "<br />",
+    '<div class="page">', "</div>", '<img data-bbox="1,2,3,4"/>', "<img>", "</img>",
+    '<h1 data-bbox="1,2,3,4">', "</h1>", "<ul>", "<li>", "</li>", "</ul>",
+    "<table>", "<tr>", "<td>", "</td>", "</tr>", "</table>", "<pre>", "</pre>",
+    '<p class="menu">', '<p class="Sidebar">', '<p data-x="">', "<nav>", "</nav>",
+    "text", " ", "\n", "\t", "é",
+]
+
+
+@given(st.lists(st.sampled_from(_FRAGMENTS), max_size=16))
+@settings(max_examples=3000, deadline=None)
+def test_strict_scanner_fuzz(fragments):
+    html = "".join(fragments)
+    if _strict_matches_htmlparser(html):
+        # the extraction handlers then build the same blocks either way
+        strict, ref = _BlockExtractor(), _BlockExtractor()
+        feed_strict(strict, html)
+        strict.close()
+        ref.feed(html)
+        ref.close()
+        assert strict.blocks == ref.blocks

@@ -141,7 +141,7 @@ def test_pair_lanes_share_one_salted_cogroup(lane, spark):
 
 def test_extract_documents_is_one_python_stage(spark, tmp_path):
     """The flagship job on an input with at least defaultParallelism scan
-    splits: scan → one MapInPandas → JVM tail. No exchange (no url
+    splits: scan → one MapInPandas → final rows. No exchange (no url
     shuffle), no second Python stage, no per-url aggregation."""
     from deepseek_ocr_spark.datagen.synth import gen_documents
     from deepseek_ocr_spark.pipeline.extract_job import extract_documents
@@ -164,3 +164,8 @@ def test_extract_documents_is_one_python_stage(spark, tmp_path):
     assert python == ["MapInPandas"], names
     for banned in ("Exchange", "ArrowEvalPython", "ObjectHashAggregate", "SortAggregate"):
         assert banned not in names, names
+    # the output columns come straight from the MapInPandas node: no JVM
+    # tail folding vision tokens (lambda functions) or hashing the text
+    plan = _plan(df)
+    for banned in ("lambdafunction", "sha2("):
+        assert banned not in plan, plan
