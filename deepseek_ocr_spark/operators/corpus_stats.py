@@ -444,7 +444,10 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cu"))
     )
-    vocab = uni.agg(F.count(F.lit(1)).alias("v"))
+    # V = uni's row count (every cu >= 1). Reading cu keeps uni whole, so
+    # this and the model join share one token exchange; count(1) would let
+    # Catalyst prune cu and explode + shuffle the tokens a second time.
+    vocab = uni.agg(F.count_if(F.col("cu") > 0).alias("v"))
     # exact-arithmetic discipline (same rule as cents/HLL): each bigram's
     # ln P is quantized ONCE to integer micro-nats, so the per-doc sum is
     # a BIGINT sum — partition/aggregation order cannot change the value
@@ -837,9 +840,14 @@ def lm_ppl_buckets(docs: DataFrame) -> DataFrame:
     score and are excluded (lm_bigram_score contract)."""
     from pyspark.sql import Window
 
-    scores = lm_bigram_score(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
+    # Null-safe join against non-null ids: the pairs of an inner equi-join,
+    # but Catalyst infers no isnotnull(doc_id) on the scores side. That
+    # filter would reach only doc_bg's probe branch (the model must count
+    # null-id docs), so the two doc_bg subtrees would differ and doc_bg
+    # would be computed and shuffled twice.
+    s = lm_bigram_score(docs)
+    langs = docs.select(F.col("doc_id").alias("_id"), "lang").where(F.col("_id").isNotNull())
+    scores = s.join(langs, s.doc_id.eqNullSafe(langs._id)).drop("_id")
     # Single-pass formulation (r8, guide §2.4): the old shape evaluated the
     # whole LM-score subtree TWICE — once under the groupBy(lang) that
     # picked the tertile cuts and once for the final join back (no

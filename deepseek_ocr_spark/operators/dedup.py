@@ -599,7 +599,6 @@ def components_from_edges(
     ).persist()
 
     labels = nodes.select("doc_id", F.col("doc_id").alias("component_id")).persist()
-    labels.count()
     changed = None
     for it in range(max_iter):
         neighbor_min = (

@@ -46,6 +46,17 @@ def build_session(
         # (small, JIT-able methods). JVM-rational at every scale — any
         # method past 8000 bytecodes is interpreted today regardless.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Generated-class cache: an LRU of compiled codegen classes (static
+        # conf, Spark's default 100). A repeated unit of work whose working
+        # set exceeds it evicts in a cycle and recompiles on every repeat.
+        # Measured with BENCH/codegen_census.py (4 cores, classes compiled
+        # by a cold pass): perfbench corpus_curate's 4 timed stages 190, all
+        # 24 curation stages 496, web_extract 8, one bench.py leaf at sf0.1
+        # <= 131, all 58 leaves together 964. At 100 the 4 stages recompiled
+        # ~121 classes (~1 s of Janino) per warm pass and the 24 stages
+        # ~490 (3.2-3.7 s); at 2048 (2x the whole bench.py session) a warm
+        # pass compiles only classes whose source changes per run.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # micro-batch size for iterator pandas UDFs — the max_num_seqs analog
         # (measured: 1024 ≈ 4096 > 256 by ~8% on the extraction stage; a GPU
@@ -63,3 +74,19 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) since JVM start.
+
+    Read from the JVM-wide Janino counters, which keep counting with
+    ``spark.ui.enabled=false``: ``CodegenMetrics``' compilation-time
+    histogram counts one sample per compiled class and
+    ``CodeGenerator.compileTime`` sums the nanoseconds. A cache hit
+    touches neither, so the delta over a pass is its recompiles. In local
+    mode the executors share the driver JVM, so task-side compiles count
+    too."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e9

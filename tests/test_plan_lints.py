@@ -169,3 +169,20 @@ def test_extract_documents_is_one_python_stage(spark, tmp_path):
     plan = _plan(df)
     for banned in ("lambdafunction", "sha2("):
         assert banned not in plan, plan
+
+
+@pytest.mark.parametrize("op", ["lm_bigram_score", "lm_ppl_buckets"])
+def test_lm_scores_tokenize_and_shuffle_each_table_once(op, spark):
+    """The bigram LM explodes each document's tokens twice, once into
+    per-doc bigram counts (doc_bg) and once into the unigram table; each
+    feeds two consumers through one shared exchange. A doc_id filter
+    inferred from lm_ppl_buckets' lang join, or a vocabulary count that
+    prunes the unigram counts, would each add an explode and a shuffle."""
+    from deepseek_ocr_spark.operators import corpus_stats
+
+    df = getattr(corpus_stats, op)(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+    df.collect()  # finalizes the adaptive plan
+    names = [n.nodeName() for n in _nodes(df._jdf.queryExecution().executedPlan())]
+    assert names.count("Generate") == 2, names
+    assert names.count("ReusedExchange") == 2, names
+    assert names.count("Exchange") == {"lm_bigram_score": 6, "lm_ppl_buckets": 7}[op], names
