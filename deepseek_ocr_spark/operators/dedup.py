@@ -540,210 +540,144 @@ LEFT JOIN seen ON d.doc_id = seen.doc_id
 
 
 def dedup_components(
-    docs: DataFrame,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-    max_iter: int = 25,
+    docs: DataFrame, n_hashes: int = N_MINHASHES, n_bands: int = N_BANDS
 ) -> DataFrame:
     """(doc_id, component_id) — connected components over the MinHash-LSH
-    candidate graph via min-label propagation; component_id is the smallest
-    doc_id reachable (the canonical survivor of a near-dup cluster, the
-    step after pairing in every dedup pipeline).
+    candidate graph; component_id is the smallest doc_id reachable (the
+    canonical survivor of a near-dup cluster, the step after pairing in
+    every dedup pipeline).
 
-    Execution pattern: ITERATIVE — a driver-side loop over distributed
-    label-propagation rounds (converges in ≤ graph-diameter rounds; near-dup
-    clusters are small and dense, so typically 2-4). Each round is one join
-    + one min-agg; see components_from_edges for the loop contract
-    (exact convergence count, O(1) lineage, loud non-convergence)."""
+    Execution pattern: ITERATIVE — a driver-side loop of large/small-star
+    rounds, O(log n) of them even on long chains (near-dup clusters are
+    small and dense, so typically 1-2); see components_from_edges for the
+    loop contract (exact stop test, O(1) lineage, loud non-convergence)."""
     edges = dedup_minhash_pairs(docs, n_hashes, n_bands)
     return components_from_edges(
         docs.select("doc_id"),
         edges.select(
             F.col("a_doc_id").alias("src"), F.col("b_doc_id").alias("dst")
         ),
-        max_iter=max_iter,
     )
 
 
-# Lineage grows by one join per propagation round; truncate the DAG every
-# few rounds so 10^12-scale chains can't stack-overflow the planner.
+# Lineage grows by one scan of the previous edge set per round; truncate the
+# DAG every few rounds so 10^12-scale chains can't stack-overflow the planner.
 _CHECKPOINT_EVERY = 5
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star then one small-star step (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14) over canonical (u > v)
+    edges, returning canonical edges of the same row count. Each step is a
+    window min(v) over partitionBy("u"); the large step sees both
+    directions of every edge through one explode, so the round reads ``e``
+    exactly once."""
+    from pyspark.sql import Window as W
+
+    by_u = W.partitionBy("u")
+    both = e.select(
+        F.explode(
+            F.array(
+                F.struct("u", "v"),
+                F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+            )
+        ).alias("_e")
+    ).select("_e.u", "_e.v")
+    # large-star: every neighbour LARGER than u links to min(Γ(u) ∪ {u})
+    large = (
+        both.withColumn("_m", F.least(F.min("v").over(by_u), F.col("u")))
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("_m").alias("v"))
+    )
+    # small-star: u and its smaller neighbours link to m = min of those
+    # neighbours; the row holding m carries (u, m), every other row (v, m)
+    m = F.min("v").over(by_u)
+    return large.withColumn("_m", m).select(
+        F.when(F.col("v") == F.col("_m"), F.col("u")).otherwise(F.col("v")).alias("u"),
+        F.col("_m").alias("v"),
+    )
+
+
+def _non_star_nodes(e: DataFrame) -> int:
+    """Nodes that keep the canonical edge set from being a star forest: a
+    node that is both a leaf and a centre, or a leaf with two centres. Each
+    edge (u, v) gives its leaf u the value v and its centre v the value v,
+    so a node is fine iff min == max over its values — duplicate rows
+    cannot fool it. One aggregate job."""
+    vals = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("n"), F.col("v").alias("c")),
+                F.struct(F.col("v").alias("n"), F.col("v").alias("c")),
+            )
+        ).alias("_x")
+    ).select("_x.n", "_x.c")
+    return (
+        vals.groupBy("n")
+        .agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
+        .where(F.col("lo") != F.col("hi"))
+        .count()
+    )
 
 
 def components_from_edges(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 25
 ) -> DataFrame:
     """(doc_id, component_id) — connected components over an explicit edge
-    list (src, dst) via min-label propagation; the graph primitive behind
-    dedup_components, reusable for any near-dup/link graph.
+    list (src, dst), component_id the smallest id reachable; the graph
+    primitive behind dedup_components, dedup_survivors and dedup_semantic,
+    reusable for any near-dup/link graph.
 
-    Intermediates are persisted and the previous round unpersisted so the
-    cache-managed storage stays O(1); every _CHECKPOINT_EVERY rounds the
-    labels are localCheckpoint'ed, truncating lineage (the per-round join
-    would otherwise stack a linearly-growing DAG). Checkpointed rounds are
-    persisted at the RDD level where Dataset.unpersist is a no-op — those
-    blocks are reclaimed by Spark's ContextCleaner once the rotation drops
-    the last reference (bounded by GC latency: at most one checkpointed
-    label table per _CHECKPOINT_EVERY rounds is awaiting cleanup). Convergence is an exact count
-    of changed labels; exhausting ``max_iter`` with changes still pending
-    RAISES — a silently partial labeling is a wrong answer, not a result
-    (a component of diameter > max_iter would quietly split into several
-    survivors)."""
+    Each round is one large-star plus one small-star step over canonical
+    (u > v) edges, self-loops dropped (_star_round); a chain of n hops
+    settles in O(log n) rounds (a 1,000-hop chain in 10). The round stops
+    when the edges form a star forest, every component a star on its
+    minimum id; the test is one aggregate job, which also fills the
+    persisted round. Intermediates are persisted and the previous round
+    unpersisted so the cache-managed storage stays O(1); every
+    _CHECKPOINT_EVERY rounds the edge set is localCheckpoint'ed, truncating
+    lineage. Checkpointed rounds are persisted at the RDD level where
+    Dataset.unpersist is a no-op — those blocks are reclaimed by Spark's
+    ContextCleaner once the rotation drops the last reference (bounded by
+    GC latency: at most one checkpointed edge set per _CHECKPOINT_EVERY
+    rounds is awaiting cleanup). Exhausting ``max_iter`` before the star
+    forest RAISES — a silently partial labeling is a wrong answer, not a
+    result (one component would quietly split into several survivors).
+    Nodes absent from every edge label themselves; an edge endpoint absent
+    from ``nodes`` still links its neighbours. component_id has the ids'
+    type (INT ids give INT labels)."""
     if max_iter < 1:
         # with zero rounds the loop never runs and the identity labeling
         # would be returned silently — same wrong-answer class the
         # non-convergence raise below exists to prevent
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-
-    labels = nodes.select("doc_id", F.col("doc_id").alias("component_id")).persist()
-    changed = None
+    e = edges.select(
+        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    unsettled = None
     for it in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component_id").alias("n_comp"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component_id"),
-                    F.coalesce(F.col("n_comp"), F.col("component_id")),
-                ).alias("component_id"),
-                (F.coalesce(F.col("n_comp"), F.col("component_id"))
-                 < F.col("component_id")).alias("_chg"),
-            )
-        )
+        updated = _star_round(e)
         if (it + 1) % _CHECKPOINT_EVERY == 0:
             # localCheckpoint persists on its own (MEMORY_AND_DISK) — do not
             # stack a second persist on the same plan
             updated = updated.localCheckpoint(eager=False)
         else:
             updated = updated.persist()
-        changed = updated.filter(F.col("_chg")).count()
-        labels.unpersist()
-        labels = updated.drop("_chg")
-        if changed == 0:
+        unsettled = _non_star_nodes(updated)
+        e.unpersist()
+        e = updated
+        if unsettled == 0:
             break
-    sym.unpersist()
-    if changed:
+    if unsettled:
+        e.unpersist()
         raise RuntimeError(
             f"components_from_edges did not converge in max_iter={max_iter} "
-            f"rounds ({changed} labels still changing) — a component chain "
-            f"is longer than max_iter; raise max_iter"
+            f"rounds ({unsettled} nodes not yet in a star) — raise max_iter "
+            f"(expected ~log2 of the longest chain)"
         )
-    return labels
-
-
-def components_large_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 50,
-    return_rounds: bool = False,
-) -> DataFrame | tuple[DataFrame, int]:
-    """(doc_id, component_id) in O(log n) ROUNDS — the deep-graph
-    counterpart to components_from_edges.
-
-    Min-label propagation needs one round per hop of component DIAMETER:
-    fine for the small dense near-dup clusters dedup_components labels, but
-    a 10^3-hop chain (link graphs, co-citation chains) would need 10^3
-    Spark jobs. This is the alternating large-star / small-star algorithm
-    from the public MapReduce-CC literature (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14): each round shrinks every
-    component toward a star on its minimum node, converging in O(log² n)
-    rounds worst case, ~log₂(diameter) alternations in practice
-    (tests/test_components.py pins a 1000-hop chain to ≤ 25 rounds).
-
-    Per alternation, only aggregates and joins on the current edge set —
-    no per-node Python. The edge set is localCheckpoint'ed EVERY round:
-    one alternation references its input ~6× (sym twice, the large table
-    three times), so an unbroken logical plan grows exponentially and
-    OOMs the planner near round 10 — per-round truncation keeps the plan
-    constant-size, and with O(log n) total rounds the extra
-    materialization is cheap. Exhausting max_iter with the edge set still
-    moving RAISES (same loud-non-convergence contract)."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # canonical directed edges (u > v), self-loops dropped
-    e = (
-        edges.select(F.col("src").cast("long").alias("a"),
-                     F.col("dst").cast("long").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct()
-        .persist()
-    )
-    n_old = e.count()
-    converged = False
-    rounds = 0
-    for it in range(max_iter):
-        # --- large-star: every neighbor LARGER than u links to the min of
-        # Γ(u) ∪ {u}; all adjacency is examined, so symmetrize first
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("mn"), F.col("u"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # --- small-star: u and its SMALLER neighbors all link to the min
-        # of that down-neighborhood (edges are already directed u > v)
-        smins = large.groupBy("u").agg(F.min("v").alias("mn"))
-        small = (
-            large.join(smins, "u")
-            .select(F.col("v").alias("x"), F.col("mn"))
-            .where(F.col("x") != F.col("mn"))
-            .select(F.col("x").alias("u"), F.col("mn").alias("v"))
-            .unionByName(smins.select("u", F.col("mn").alias("v")))
-            .distinct()
-        )
-        small = small.localCheckpoint()  # eager: truncate lineage NOW
-        rounds = it + 1
-        # fixed point = SET equality (both distinct): same cardinality and
-        # nothing new — a one-sided except would miss a strict shrink
-        n_new = small.count()
-        stable = n_new == n_old and small.exceptAll(e).limit(1).count() == 0
-        e.unpersist()
-        e = small
-        n_old = n_new
-        if stable:
-            converged = True
-            break
-    if not converged:
-        e.unpersist()
-        raise RuntimeError(
-            f"components_large_star did not converge in max_iter={max_iter} "
-            f"alternations — raise max_iter (expected ~log2 of component "
-            f"diameter)"
-        )
-    labels = (
-        nodes.select("doc_id")
-        .join(e.select(F.col("u").alias("doc_id"), F.col("v").alias("_c")),
-              "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("_c"), F.col("doc_id")).alias("component_id"))
-    )
-    return (labels, rounds) if return_rounds else labels
-
-
-def dedup_components_logstar(
-    docs: DataFrame, n_hashes: int = N_MINHASHES, n_bands: int = N_BANDS
-) -> DataFrame:
-    """dedup_components computed by the O(log n)-round large/small-star
-    path instead of min-label propagation — same labeling contract
-    (component_id = min reachable doc_id), same DuckDB oracle
-    (dedup_components_sql); registered separately so the deep-graph
-    algorithm is driver-proven, not just unit-tested."""
-    edges = dedup_minhash_pairs(docs, n_hashes, n_bands)
-    return components_large_star(
-        docs.select("doc_id"),
-        edges.select(F.col("a_doc_id").alias("src"), F.col("b_doc_id").alias("dst")),
+    centre = e.groupBy(F.col("u").alias("doc_id")).agg(F.min("v").alias("_c"))
+    return nodes.select("doc_id").join(centre, "doc_id", "left").select(
+        "doc_id", F.coalesce(F.col("_c"), F.col("doc_id")).alias("component_id")
     )
 
 
@@ -1130,10 +1064,7 @@ FROM cut
 
 
 def dedup_survivors(
-    docs: DataFrame,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-    max_iter: int = 25,
+    docs: DataFrame, n_hashes: int = N_MINHASHES, n_bands: int = N_BANDS
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, is_survivor) — the step that
     completes the dedup pipeline: pairs → connected components →
@@ -1142,15 +1073,15 @@ def dedup_survivors(
     (the canonical copy of a boilerplate cluster is usually its fullest
     rendering), not min-id; singletons are their own surviving cluster.
 
-    Plan shape: component labels from the iterative min-label propagation
-    (see dedup_components), then the per-cluster argmax is
+    Plan shape: component labels from the iterative large/small-star
+    rounds (see dedup_components), then the per-cluster argmax is
     ``min(struct(-n_chars, doc_id))`` — a map-side-combinable AGG, never
     a window: a viral cluster (10^6 copies of one page) reduces per task
     instead of sorting inside one partition (same rule as
     dedup_lines_global).  NULL n_chars ranks last (coalesce to -1).  The
     DuckDB oracle keeps a row_number-window formulation — two
     independent derivations of the same survivor set."""
-    comp = dedup_components(docs, n_hashes, n_bands, max_iter)
+    comp = dedup_components(docs, n_hashes, n_bands)
     sized = comp.join(docs.select("doc_id", "n_chars"), "doc_id", "left")
     best = sized.groupBy("component_id").agg(
         F.min(

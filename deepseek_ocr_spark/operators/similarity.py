@@ -1133,9 +1133,9 @@ def dedup_semantic(
 
     Composition of proven pieces: the materialized IVF index (one
     localCheckpoint'ed build), semantic_pairs (one bucket-keyed
-    self-join), and dedup.components_from_edges (O(rounds) min-label
-    propagation with per-round checkpointing — the viral-cluster-safe
-    path). The DuckDB oracle closes the same graph with a recursive
+    self-join), and dedup.components_from_edges (O(log n) large/small-star
+    rounds with periodic checkpointing, so a long chain of near-duplicates
+    converges instead of raising). The DuckDB oracle closes the same graph with a recursive
     CTE — an independent derivation."""
     from .dedup import components_from_edges
 

@@ -1,14 +1,13 @@
 """components_from_edges: long-chain convergence (exercises the periodic
-localCheckpoint lineage truncation) and the loud non-convergence contract —
-exhausting max_iter with labels still moving must RAISE, never return a
-partially-propagated labeling (VERDICT r2 'What's wrong' #3)."""
+localCheckpoint lineage truncation), O(log n) rounds on deep chains, and the
+loud non-convergence contract — exhausting max_iter before the edges settle
+must RAISE, never return a partial labeling (VERDICT r2 'What's wrong' #3)."""
+
+import random
 
 import pytest
 
-from deepseek_ocr_spark.operators.dedup import (
-    components_from_edges,
-    components_large_star,
-)
+from deepseek_ocr_spark.operators.dedup import components_from_edges
 
 
 def _chain(spark, n):
@@ -50,31 +49,42 @@ def test_zero_max_iter_rejected_up_front(spark):
     nodes, edges = _chain(spark, 3)
     with pytest.raises(ValueError, match="max_iter"):
         components_from_edges(nodes, edges, max_iter=0)
-    with pytest.raises(ValueError, match="max_iter"):
-        components_large_star(nodes, edges, max_iter=0)
 
 
-# --- large-star/small-star: the O(log n)-round deep-graph path -------------------
+# --- large-star/small-star rounds: O(log n) on deep graphs -----------------------
+
+
+def _union_find(n, edge_rows):
+    """Reference labeling: smallest id of each component, by union-find."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_rows:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(n)}
 
 
 def test_large_star_chain_1000_hops_logarithmic_rounds(spark):
     """The 100 TB iteration-budget evidence (VERDICT r3 stretch): a
     1000-hop chain — which would cost 1000 min-label rounds — labels
-    correctly in ≤ 25 large/small-star alternations (~log₂ diameter, not
-    diameter), with the round count returned as telemetry."""
+    correctly within max_iter=25 large/small-star rounds (~log₂ diameter,
+    not diameter); converging at all proves the round bound."""
     n = 1001
     nodes, edges = _chain(spark, n)
-    labels, rounds = components_large_star(
-        nodes, edges, max_iter=30, return_rounds=True
-    )
-    assert rounds <= 25, f"expected O(log n) rounds, took {rounds}"
+    labels = components_from_edges(nodes, edges, max_iter=25)
     rows = {r["doc_id"]: r["component_id"] for r in labels.collect()}
     assert rows == {i: 0 for i in range(n)}
 
 
-def test_large_star_matches_min_label_on_mixed_graph(spark):
-    """Cross-check the two algorithms label-for-label on a graph with
-    several components, singletons, cycles, and duplicate/reversed edges."""
+def test_large_star_matches_union_find_on_mixed_graph(spark):
+    """Label-for-label against union-find on a graph with several
+    components, singletons, cycles, and duplicate/reversed edges."""
     nodes = spark.createDataFrame([(i,) for i in range(20)], "doc_id BIGINT")
     edge_rows = [
         (1, 2), (2, 3), (3, 1),          # triangle
@@ -85,28 +95,21 @@ def test_large_star_matches_min_label_on_mixed_graph(spark):
         (17, 17),                        # self-loop (ignored)
     ]
     edges = spark.createDataFrame(edge_rows, "src BIGINT, dst BIGINT")
-    a = {
-        (r["doc_id"], r["component_id"])
-        for r in components_large_star(nodes, edges).collect()
-    }
-    b = {
-        (r["doc_id"], r["component_id"])
+    got = {
+        r["doc_id"]: r["component_id"]
         for r in components_from_edges(nodes, edges).collect()
     }
-    assert a == b
-    got = dict(a)
+    assert got == _union_find(20, edge_rows)
     assert got[1] == got[2] == got[3] == 1
     assert got[8] == got[9] == got[10] == got[11] == 8
     assert got[0] == 0 and got[17] == 17  # singletons (self-loop dropped)
 
 
-def test_large_star_matches_min_label_random_graphs(spark):
-    """Property: on seeded random graphs the two algorithms agree
-    label-for-label (seeds fixed — Spark-session tests can't afford
-    hypothesis shrinking, but the graphs cover dense/sparse/self-loop
-    shapes beyond the hand-built case)."""
-    import random
-
+def test_large_star_matches_union_find_random_graphs(spark):
+    """Property: on seeded random graphs the labels equal union-find's
+    (seeds fixed — Spark-session tests can't afford hypothesis shrinking,
+    but the graphs cover dense/sparse/self-loop shapes beyond the
+    hand-built case)."""
     for seed, n, m in [(1, 15, 10), (2, 15, 30), (3, 12, 5)]:
         rng = random.Random(seed)
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id BIGINT")
@@ -114,18 +117,60 @@ def test_large_star_matches_min_label_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]
         edges = spark.createDataFrame(edge_rows, "src BIGINT, dst BIGINT")
-        a = sorted(
-            (r["doc_id"], r["component_id"])
-            for r in components_large_star(nodes, edges).collect()
-        )
-        b = sorted(
-            (r["doc_id"], r["component_id"])
-            for r in components_from_edges(nodes, edges, max_iter=40).collect()
-        )
-        assert a == b, f"seed={seed}"
+        got = {
+            r["doc_id"]: r["component_id"]
+            for r in components_from_edges(nodes, edges).collect()
+        }
+        assert got == _union_find(n, edge_rows), f"seed={seed}"
 
 
 def test_large_star_non_convergence_raises(spark):
     nodes, edges = _chain(spark, 300)
     with pytest.raises(RuntimeError, match="did not converge"):
-        components_large_star(nodes, edges, max_iter=2)
+        components_from_edges(nodes, edges, max_iter=2)
+
+
+@pytest.mark.parametrize("n", [26, 101])
+@pytest.mark.parametrize("shuffled", [False, True], ids=["sorted", "random"])
+def test_deep_chain_default_max_iter(spark, n, shuffled):
+    """Chains of 25 and 100 hops — past min-label propagation's one round
+    per hop — converge at the default max_iter, whether ids run along the
+    chain in order or in a seeded random order."""
+    ids = list(range(n))
+    if shuffled:
+        random.Random(n).shuffle(ids)
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id BIGINT")
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "src BIGINT, dst BIGINT"
+    )
+    out = components_from_edges(nodes, edges)
+    assert {r["doc_id"]: r["component_id"] for r in out.collect()} == {
+        i: 0 for i in range(n)
+    }
+
+
+def test_deep_chain_through_dedup_semantic_call_shape(spark):
+    """dedup_semantic's call: INT vec_id nodes renamed to doc_id, INT
+    (src, dst) pair edges, default max_iter — a 25-hop chain of
+    near-duplicates collapses onto one representative, INT-typed."""
+    emb = spark.createDataFrame([(i,) for i in range(26)], "vec_id INT")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(25)], "a_vec_id INT, b_vec_id INT"
+    )
+    out = components_from_edges(
+        emb.select(emb.vec_id.alias("doc_id")),
+        pairs.select(pairs.a_vec_id.alias("src"), pairs.b_vec_id.alias("dst")),
+    )
+    assert out.schema["component_id"].dataType.simpleString() == "int"
+    assert {r["component_id"] for r in out.collect()} == {0}
+
+
+def test_empty_and_self_loop_only_edges(spark):
+    """No edges, or only self-loops, stop in the first round: every node
+    labels itself."""
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id BIGINT")
+    for edge_rows in ([], [(2, 2), (4, 4), (2, 2)]):
+        edges = spark.createDataFrame(edge_rows, "src BIGINT, dst BIGINT")
+        out = components_from_edges(nodes, edges, max_iter=1)
+        assert sorted(tuple(r) for r in out.collect()) == [(i, i) for i in range(5)]
+

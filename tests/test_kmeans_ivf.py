@@ -181,16 +181,15 @@ def test_dedup_semantic_planted_clusters(spark):
         (4, [0.0, 0.0, 0.0, 1.0]),   # unique
     ]
     emb = _emb_df(spark, rows)
-    out = {
-        r["vec_id"]: (r["rep_vec_id"], r["is_dup"])
-        for r in S.dedup_semantic(emb, threshold=0.9, n_centroids=3, dim=4).collect()
-    }
+    res = S.dedup_semantic(emb, threshold=0.9, n_centroids=3, dim=4)
+    out = {r["vec_id"]: (r["rep_vec_id"], r["is_dup"]) for r in res.collect()}
     assert out[0] == (0, False)
     assert out[1] == (0, True)
     assert out[5] == (0, True)
     assert out[2] == (2, False)
     assert out[3] == (2, True)
     assert out[4] == (4, False)
+    assert res.schema["rep_vec_id"].dataType.simpleString() == "int"
 
 
 def test_dedup_semantic_threshold_gates_edges(spark):
