@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepseek_ocr_spark.operators.digests import md5_int
+
 HLL_BUCKETS = 256  # 2^8 registers — first 2 md5 hex chars
 RHO_CAP = 32
 # standard HLL bias constant for m >= 128
@@ -308,22 +310,16 @@ def bloom_membership(docs: DataFrame, corpus_mod: int = 2) -> DataFrame:
     the sketch itself is oracle-tracked, not just its plumbing.
 
     Hashes are BLOOM_K disjoint 8-hex-char windows of md5(text) mod
-    BLOOM_BITS (same ('0x' || hex)::BIGINT trick as stratified_sample, so
-    DuckDB reproduces the exact bits). Scale shape: the filter BUILD is
-    one explode + one bit_or aggregation of at most BLOOM_SLOTS (128) word
+    BLOOM_BITS (digests.md5_int, whose DuckDB mirror reproduces the exact
+    bits). Scale shape: the filter BUILD is one explode + one bit_or
+    aggregation of at most BLOOM_SLOTS (128) word
     rows (at 100 TB: the materialized daily seen-set, bytes-sized); the
     PROBE joins that tiny
     filter BROADCAST onto map-side probe positions — no corpus shuffle.
     NULL text excluded on both sides (no md5 to hash)."""
     base = docs.filter(F.col("text").isNotNull())
     pos_arr = F.array(
-        *[
-            (
-                F.conv(F.substring(F.md5(F.col("text")), 1 + 8 * i, 8), 16, 10)
-                .cast("long") % BLOOM_BITS
-            )
-            for i in range(BLOOM_K)
-        ]
+        *[md5_int(F.col("text"), 1 + 8 * i, 8) % BLOOM_BITS for i in range(BLOOM_K)]
     )
     corpus_pos = (
         base.filter(F.col("doc_id") % corpus_mod == 0)

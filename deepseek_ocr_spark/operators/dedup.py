@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepseek_ocr_spark.operators.digests import token_hashes, window_digests
+
 SHINGLE_WIDTH = 3
 
 
@@ -804,29 +806,7 @@ GROUP BY k.doc_id
 SPAN_W = 8  # tokens per window — the Lee et al. 2022 "Deduplicating
 # Training Data" substring unit, small here so the sf corpora exercise it
 SPAN_MIN_COUNT = 2
-
-
-def _span_digest_exprs(hcol, w: int):
-    """array<bigint> of 60-bit rolling-window digests over a MATERIALIZED
-    token-hash column: digest(i) = ⊕_{j<w} rot_{6j}(h[i+j]).  Same hoisted-
-    column rule as traindata._gram_digest_exprs (element_at over an inline
-    transform is O(n²) in doc length); rotations stay < 60 bits for w ≤ 10
-    so the mirrored DuckDB expression cannot overflow a checked BIGINT."""
-    from .traindata import _rot60
-
-    assert w <= 10, "rotation schedule 6j must stay below 60 bits"
-    n = F.size(hcol)
-
-    def digest(i):
-        acc = F.element_at(hcol, i)
-        for j in range(1, w):
-            acc = acc.bitwiseXOR(_rot60(F.element_at(hcol, i + F.lit(j)), 6 * j))
-        return acc
-
-    return F.when(
-        n >= w,
-        F.transform(F.sequence(F.lit(1), n - (w - 1)), digest),
-    ).otherwise(F.array().cast("array<bigint>"))
+SPAN_STEP = 6  # rotation step of the span digests: 6·(w−1) < 60 ⇒ w ≤ 10
 
 
 def dedup_spans(
@@ -884,14 +864,15 @@ def dedup_spans_indexed(
 
 
 def span_windows(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
-    """(doc_id, pos, g) — every w-token window digest, map-side."""
-    from .traindata import _token_hashes
-
+    """(doc_id, pos, g) — every w-token window digest, map-side
+    (digests.window_digests over the hoisted token-hash column).  Raises
+    ValueError for w > 10 (see SPAN_STEP)."""
     hdf = spread_input(docs.filter(F.col("text").isNotNull())).select(
-        "doc_id", _token_hashes().alias("h")
+        "doc_id", token_hashes().alias("h")
     )
     return hdf.select(
-        "doc_id", F.posexplode(_span_digest_exprs(F.col("h"), w)).alias("pos", "g")
+        "doc_id",
+        F.posexplode(window_digests(F.col("h"), w, SPAN_STEP)).alias("pos", "g"),
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deepseek_ocr_spark.config import PAGE_SEP
+from deepseek_ocr_spark.operators.digests import md5_int
 
 # --- O-19/O-33: contains-filter + strip ------------------------------------
 
@@ -766,13 +767,18 @@ SELECT doc_id, md5(array_to_string(top8, '|')) AS fingerprint FROM agg
 """
 
 
+def _doc_bucket():
+    """md5(doc_id)'s first 4 hex chars mod 100 — the sampling hash space
+    shared by deterministic_sample and stratified_sample."""
+    return md5_int(F.col("doc_id").cast("string"), 1, 4) % 100
+
+
 def deterministic_sample(docs: DataFrame, pct: int = 10) -> DataFrame:
     """Reproducible corpus sampling (training-data splits must be stable
     across reruns/engines): keep docs where md5(doc_id) lands in the first
     ``pct``% of hash space — unlike rand()-based sampling this is exactly
     replayable and oracle-checkable."""
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("bigint")
-    return docs.filter(bucket % 100 < pct).select("doc_id", "lang", "source")
+    return docs.filter(_doc_bucket() < pct).select("doc_id", "lang", "source")
 
 
 DETERMINISTIC_SAMPLE_SQL = """
@@ -1071,11 +1077,8 @@ def stratified_sample(docs: DataFrame, en_pct: int = 50, other_pct: int = 10) ->
     dependent keep rates over the md5 hash space — exactly replayable
     across reruns and engines, unlike rand()-based sampleBy. The standard
     move for rebalancing language mix in a training corpus."""
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint") % 100
     rate = F.when(F.col("lang") == "en", en_pct).otherwise(other_pct)
-    return docs.filter(bucket < rate).select("doc_id", "lang", "source")
+    return docs.filter(_doc_bucket() < rate).select("doc_id", "lang", "source")
 
 
 def stratified_sample_sql(en_pct: int = 50, other_pct: int = 10) -> str:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepseek_ocr_spark.operators.digests import token_hashes, window_digests
+
 # Conservative patterns with identical semantics in Java regex (Spark) and
 # RE2 (DuckDB): greedy character-class quantifiers only — no alternation
 # where leftmost-first vs leftmost-longest could diverge.
@@ -74,82 +76,23 @@ FROM {table}
 
 
 NGRAM_N = 3
+GRAM_STEP = 20  # rotation step of the 3-gram and DSIR bigram digests
 BENCH_MOD = 23  # doc_id % BENCH_MOD == 0 plays the held-out benchmark set
 
 
-def _grams(col: str = "text"):
-    toks = F.filter(F.split(F.col(col), " "), lambda t: t != "")
-    n = F.size(toks)
-    return F.when(
-        n >= NGRAM_N,
-        F.transform(
-            F.sequence(F.lit(1), n - (NGRAM_N - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, NGRAM_N)),
-        ),
-    ).otherwise(F.array())
-
-
-def _token_hashes(col: str = "text"):
-    """array<bigint> of per-TOKEN 60-bit md5 hashes.
-    conv(substr(md5(t),1,15),16,10) in Spark ≡
-    ('0x' || substr(md5(t),1,15))::BIGINT in DuckDB (15 hex chars < 2^60,
-    unsigned in both engines — same parity trick as bloom_membership /
-    stratified_sample)."""
-    toks = F.filter(F.split(F.col(col), " "), lambda t: t != "")
-    return F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"),
-    )
-
-
-def _rot60(c, s: int):
-    """60-bit left rotation via masked shifts — the mask keeps every
-    intermediate < 2^60 so DuckDB's checked BIGINT shift cannot overflow
-    (the mirrored SQL uses the identical expression)."""
-    lo = (1 << (60 - s)) - 1
-    return F.shiftleft(c.bitwiseAND(F.lit(lo)), s).bitwiseOR(F.shiftright(c, 60 - s))
-
-
-def _gram_digest_exprs(hcol):
-    """array<bigint> of 60-bit n-gram digests over a MATERIALIZED
-    token-hash column: digest(i) = h[i] ⊕ rot20(h[i+1]) ⊕ rot40(h[i+2]).
-    The position-dependent rotations make the combination order-sensitive;
-    collisions are ~2^-60 per distinct-gram pair and BOTH engines compute
-    the identical digest, so oracle parity is exact.
-
-    hcol MUST be a projected column, not the _token_hashes expression
-    inline: element_at over an inline transform re-evaluates the whole
-    transform per element (measured: 79s vs 0.64s at sf0.1 — O(n²) in doc
-    length).  Catalyst's CollapseProject keeps the two projections apart
-    because the alias is referenced many times and is non-trivial."""
-    n = F.size(hcol)
-    return F.when(
-        n >= NGRAM_N,
-        F.transform(
-            F.sequence(F.lit(1), n - (NGRAM_N - 1)),
-            lambda i: F.element_at(hcol, i)
-            .bitwiseXOR(_rot60(F.element_at(hcol, i + F.lit(1)), 20))
-            .bitwiseXOR(_rot60(F.element_at(hcol, i + F.lit(2)), 40)),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
-def contamination_flags(
-    docs: DataFrame, bench_mod: int = BENCH_MOD, n: int = NGRAM_N
-) -> DataFrame:
+def contamination_flags(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFrame:
     """(doc_id, n_hits, contaminated) for every NON-benchmark doc — the
-    decontamination pass: a training doc sharing any word {n}-gram with
+    decontamination pass: a training doc sharing any word 3-gram with
     the held-out benchmark set (here: doc_id % bench_mod == 0) is flagged;
     n_hits counts DISTINCT shared n-grams.  The benchmark gram set is
     small by construction → broadcast; the corpus crosses the network
     once, aggregated per doc.  Every distinct/broadcast/join/agg is keyed
-    on a 60-bit gram DIGEST (see _gram_digest_exprs) — md5 cost is linear
+    on a 60-bit gram DIGEST (digests.window_digests) — md5 cost is linear
     in TOKENS (hashed once each, never per gram), no gram string is ever
     materialized, and the exchanged payload is BIGINTs, not ~25-byte
     strings."""
-    assert n == NGRAM_N, "gram width is baked into the shared digest exprs"
     is_bench = F.col("doc_id") % bench_mod == 0
-    hdf = docs.select("doc_id", _token_hashes().alias("h"))
+    hdf = docs.select("doc_id", token_hashes().alias("h"))
     # r8: within-doc dedup happens IN-ROW (array_distinct over the digest
     # array, map-side) before the explode, so the per-doc agg is a plain
     # count instead of a two-phase countDistinct — n_hits counts distinct
@@ -158,7 +101,9 @@ def contamination_flags(
     # distinct is unchanged by per-doc pre-dedup.
     grams = hdf.select(
         "doc_id",
-        F.explode(F.array_distinct(_gram_digest_exprs(F.col("h")))).alias("g"),
+        F.explode(
+            F.array_distinct(window_digests(F.col("h"), NGRAM_N, GRAM_STEP))
+        ).alias("g"),
     )
     bench_grams = grams.filter(is_bench).select("g").distinct()
     corpus = docs.filter(~is_bench)
@@ -182,7 +127,7 @@ def contamination_flags(
 def contamination_flags_sql(
     table: str = "documents", bench_mod: int = BENCH_MOD, n: int = NGRAM_N
 ) -> str:
-    # mirrors _token_hashes + _gram_digest_exprs bit-for-bit: 60-bit token
+    # mirrors digests.token_hashes + window_digests bit-for-bit: 60-bit token
     # md5 window, position-rotated XOR combine (masked shifts keep every
     # intermediate < 2^60 — DuckDB BIGINT shifts are overflow-checked)
     rot20 = f"((((h[i+1]) & {(1 << 40) - 1}) << 20) | ((h[i+1]) >> 40))"
@@ -280,31 +225,27 @@ DSIR_BUCKETS = 10_000  # deployable default (the paper's 10^4 hash
 
 
 def _dsir_bucket_instances(
-    docs: DataFrame, target_lang: str, n_buckets: int
+    docs: DataFrame, n_buckets: int, target_lang: str | None = None
 ) -> DataFrame:
-    """(doc_id, is_t, b) — ONE row per hashed-n-gram instance (unigram and
-    bigram 60-bit token digests mod ``n_buckets``), before any
+    """(doc_id[, is_t], b) — ONE row per hashed-n-gram instance (unigram
+    and bigram 60-bit token digests mod ``n_buckets``), before any
     aggregation.  The scoring paths consume this directly (broadcast-join
-    the model, aggregate once per doc); the fit paths count it into the
-    (doc, bucket) feature table."""
-    is_t = (F.col("lang") == target_lang).alias("is_t")
+    the model, aggregate once per doc) and read only doc_id and text; the
+    fit paths pass ``target_lang`` for the label is_t = (lang ==
+    target_lang) and count it into the (doc, bucket) feature table."""
+    label = []
+    if target_lang is not None:
+        label = [(F.col("lang") == target_lang).alias("is_t")]
     hdf = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", is_t, _token_hashes().alias("h")
+        "doc_id", *label, token_hashes().alias("h")
     )
-    n = F.size(F.col("h"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.element_at(F.col("h"), i).bitwiseXOR(
-                _rot60(F.element_at(F.col("h"), i + F.lit(1)), 20)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    h = F.col("h")
     buckets = F.transform(
-        F.concat(F.col("h"), bigrams), lambda g: (g % n_buckets).cast("bigint")
+        F.concat(h, window_digests(h, 2, GRAM_STEP)),
+        lambda g: (g % n_buckets).cast("bigint"),
     )
-    return hdf.select("doc_id", "is_t", F.explode(buckets).alias("b"))
+    keys = [c for c in hdf.columns if c != "h"]
+    return hdf.select(*keys, F.explode(buckets).alias("b"))
 
 
 def _dsir_doc_buckets(
@@ -315,7 +256,7 @@ def _dsir_doc_buckets(
     ``n_buckets``.  One shuffle, map-side combinable; ≤ 2·tokens rows per
     doc pre-agg, ≤ n_buckets after."""
     return (
-        _dsir_bucket_instances(docs, target_lang, n_buckets)
+        _dsir_bucket_instances(docs, n_buckets, target_lang)
         .groupBy("doc_id", "is_t", "b")
         .agg(F.count(F.lit(1)).alias("k"))
     )
@@ -379,7 +320,8 @@ def dsir_scores(
     n_buckets-row distribution table), one for scoring (feature explode →
     per-doc bucket agg → BROADCAST join against the m-row model → one
     doc_id agg).  No join is large×large; pass ``fit=`` to score many
-    corpora (or a stream) against one fitted model without refitting."""
+    corpora (or a stream) against one fitted model without refitting —
+    scoring reads only doc_id and text, so those docs need no lang."""
     if fit is None:
         fit = dsir_fit(docs, target_lang=target_lang, n_buckets=n_buckets)
     # r8: score over gram INSTANCES, not the per-(doc, bucket) count
@@ -390,7 +332,7 @@ def dsir_scores(
     # remaining doc_id agg partial-aggregates map-side to one row per doc
     # per partition.
     return (
-        _dsir_bucket_instances(docs, target_lang, n_buckets)
+        _dsir_bucket_instances(docs, n_buckets)
         .join(F.broadcast(fit), "b")
         .groupBy("doc_id")
         .agg(
@@ -437,7 +379,7 @@ def dsir_topk_sql(
     target_lang: str = "en",
     n_buckets: int = DSIR_BUCKETS,
 ) -> str:
-    # mirrors _token_hashes + the unigram/bigram bucket digests bit-for-
+    # mirrors digests.token_hashes + the unigram/bigram bucket digests bit-for-
     # bit (same 60-bit md5 window and masked-shift rot20 as
     # contamination_flags_sql); log-ratio quantized once to micro-nats
     rot20 = f"((((h[i+1]) & {(1 << 40) - 1}) << 20) | ((h[i+1]) >> 40))"
@@ -628,7 +570,8 @@ def clf_scores(
     trained linear model; clf_score = hard-sigmoid probability rounded
     once to 4 places (a SINGLE rounded expression, hash-parity rule).
     Pass ``fit=`` to score many corpora / a stream against one trained
-    model without refitting.  One corpus scan + broadcast join."""
+    model without refitting; scoring reads only doc_id and text, so those
+    docs need no lang.  One corpus scan + broadcast join."""
     if fit is None:
         fit = clf_fit(docs, target_lang, n_buckets, iters, step_div)
     # r8: score over gram INSTANCES plus one bias row per doc instead of
@@ -636,9 +579,7 @@ def clf_scores(
     # broadcast either way, so the pre-aggregation was one full shuffle +
     # agg for nothing (same restructure as dsir_scores; Σ k·wq ≡ Σ wq
     # over instances, Σ k ≡ count(*), exact BIGINT).
-    inst = _dsir_bucket_instances(docs, target_lang, n_buckets).select(
-        "doc_id", "b"
-    )
+    inst = _dsir_bucket_instances(docs, n_buckets)
     bias = docs.filter(F.col("text").isNotNull()).select(
         "doc_id", F.lit(-1).cast("bigint").alias("b")
     )

@@ -275,7 +275,6 @@ def extract_documents(
     docs: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
     page_partitions: int | None = None,
-    spread_input: bool | None = None,
 ) -> DataFrame:
     """documents → extracted(url, raw_text, text, spans, page_dims, n_pages,
     n_vision_tokens, n_text_tokens, compression_ratio, digest).
@@ -285,9 +284,9 @@ def extract_documents(
     grouped on here; resume dedupe (``checkpoint.read_extracted_deduped``)
     stays url-keyed.
 
-    ``spread_input``: repartition documents by url before the fused doc
-    stage. Auto (None): only when the input has fewer partitions than the
-    cluster's parallelism — a well-laid-out 100 TB table already has
+    Documents are repartitioned by url before the fused doc stage only
+    when the input has fewer scan splits than ``page_partitions`` (default:
+    the cluster's parallelism) — a well-laid-out 100 TB table already has
     thousands of scan splits, so the shuffle of html bytes is skipped; a
     single-file sandbox input gets spread so the Python stage isn't
     single-tasked. Work per doc is bounded (≤~40 pages × the 8192
@@ -299,9 +298,7 @@ def extract_documents(
         page_partitions = spark.sparkContext.defaultParallelism
 
     src = docs.select("url", "html")
-    if spread_input is None:
-        spread_input = src.rdd.getNumPartitions() < page_partitions
-    if spread_input:
+    if src.rdd.getNumPartitions() < page_partitions:
         src = src.repartition(page_partitions, "url")
 
     return src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA)

@@ -7,79 +7,29 @@ jobs/run_corpus_pipeline.py — an m-row parquet artifact refreshed only
 when the model is retrained; at deployable dims still megabytes).  Same
 division of labor as contamination_stream / semantic_stream: the state
 is the STATIC model table, never stream state, so memory does not grow
-with the stream; ``foreachBatch`` gives the full join/agg API per
-trigger with idempotent ``batch=<id>`` parquet appends.
+with the stream; streaming/probe.run_probe_stream writes idempotent
+``batch=<id>`` parquet partitions.
 
-Scoring is the exact-integer hard-sigmoid arithmetic of the batch op —
-the stream==batch parity test pins that a micro-batched corpus scores
+Each micro-batch is scored by the batch op itself, clf_scores(fit=),
+which reads only doc_id and text — a stream carries no lang label.  The
+stream==batch parity test pins that a micro-batched corpus scores
 bit-identically to one clf_scores() pass over the same rows."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from deepseek_ocr_spark.operators.traindata import (
-    CLF_BUCKETS,
-    _rot60,
-    _token_hashes,
-)
-from deepseek_ocr_spark.streaming.contamination_stream import STREAM_DOCS_SCHEMA
-
-
-def _batch_features(batch: DataFrame, n_buckets: int) -> DataFrame:
-    """(doc_id, b, k) for a label-free scoring batch — the same hashed
-    unigram+bigram buckets + bias row as traindata._clf_features, minus
-    the training-only is_t column (streams carry no lang label)."""
-    hdf = batch.filter(F.col("text").isNotNull()).select(
-        "doc_id", _token_hashes().alias("h")
-    )
-    n = F.size(F.col("h"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.element_at(F.col("h"), i).bitwiseXOR(
-                _rot60(F.element_at(F.col("h"), i + F.lit(1)), 20)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    buckets = F.transform(
-        F.concat(F.col("h"), bigrams), lambda g: (g % n_buckets).cast("bigint")
-    )
-    counts = (
-        hdf.select("doc_id", F.explode(buckets).alias("b"))
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    bias = hdf.select(
-        "doc_id",
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(1).cast("bigint").alias("k"),
-    )
-    return counts.unionByName(bias)
+from deepseek_ocr_spark.operators.traindata import CLF_BUCKETS, clf_scores
+from deepseek_ocr_spark.streaming.probe import STREAM_DOCS_SCHEMA, run_probe_stream
 
 
 def clf_score_batch(
     batch: DataFrame, weights: DataFrame, n_buckets: int = CLF_BUCKETS
 ) -> DataFrame:
     """One micro-batch → (doc_id, n_feats, clf_score) through the
-    broadcast m-row weight table — bit-identical arithmetic to
-    traindata.clf_scores (hard-sigmoid over an exact BIGINT z)."""
-    zq = F.sum(F.col("k") * F.col("wq")).cast("long")
-    p4 = F.least(
-        F.greatest(zq + F.lit(2_000_000), F.lit(0).cast("long")),
-        F.lit(4_000_000).cast("long"),
-    )
-    return (
-        _batch_features(batch, n_buckets)
-        .join(F.broadcast(weights), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").cast("long").alias("n_feats"),
-            F.round(p4.cast("double") / F.lit(4_000_000.0), 4).alias("clf_score"),
-        )
-    )
+    broadcast m-row weight table: the batch op itself, traindata.clf_scores
+    with ``fit=`` (scoring reads only doc_id and text)."""
+    return clf_scores(batch, n_buckets=n_buckets, fit=weights)
 
 
 def stream_clf_scores_to_parquet(
@@ -97,19 +47,12 @@ def stream_clf_scores_to_parquet(
     # materialize the model ONCE via eager localCheckpoint — NOT
     # persist() (per-call cache-entry leak, see neardup_stream)
     weights = spark.read.parquet(clf_fit_path).localCheckpoint(eager=True)
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = clf_score_batch(batch, weights, n_buckets)
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    src = (
-        spark.readStream.schema(STREAM_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_probe_stream(
+        spark,
+        STREAM_DOCS_SCHEMA,
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: clf_score_batch(batch, weights, n_buckets),
     )

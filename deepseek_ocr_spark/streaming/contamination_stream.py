@@ -8,33 +8,22 @@ benchmarks change); a doc sharing any word 3-gram with a benchmark is
 flagged with its distinct-hit count.  Same division of labor as
 neardup_stream: the state is the STATIC digest table (bytes-sized —
 benchmarks are small by construction), never stream state, so memory
-does not grow with the stream; ``foreachBatch`` gives the full batch
-join/agg API per trigger with idempotent ``batch=<id>`` parquet appends
-(replay overwrites its own partition).
+does not grow with the stream; streaming/probe.run_probe_stream writes
+idempotent ``batch=<id>`` parquet partitions.
 
-The gram digests are the shared 60-bit md5-window XOR combine from
-operators/traindata (hoisted token-hash column — the O(n²)
-inline-transform trap documented there applies verbatim here)."""
+The gram digests are operators/digests.window_digests(h, NGRAM_N,
+GRAM_STEP) over a hoisted token_hashes column — the batch op's exact
+digest, so the O(n²) inline-transform rule documented there applies
+here too."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from deepseek_ocr_spark.operators.traindata import (
-    BENCH_MOD,
-    _gram_digest_exprs,
-    _token_hashes,
-)
-
-STREAM_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from deepseek_ocr_spark.operators.digests import token_hashes, window_digests
+from deepseek_ocr_spark.operators.traindata import BENCH_MOD, GRAM_STEP, NGRAM_N
+from deepseek_ocr_spark.streaming.probe import STREAM_DOCS_SCHEMA, run_probe_stream
 
 
 def benchmark_gram_table(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFrame:
@@ -42,12 +31,10 @@ def benchmark_gram_table(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFra
     (doc_id % bench_mod == 0) — the static artifact the stream probes.
     Map-side digests, one distinct exchange."""
     hdf = docs.filter(F.col("doc_id") % bench_mod == 0).select(
-        "doc_id", _token_hashes().alias("h")
+        "doc_id", token_hashes().alias("h")
     )
-    return (
-        hdf.select(F.explode(_gram_digest_exprs(F.col("h"))).alias("g"))
-        .distinct()
-    )
+    grams = window_digests(F.col("h"), NGRAM_N, GRAM_STEP)
+    return hdf.select(F.explode(grams).alias("g")).distinct()
 
 
 def contamination_probe_batch(batch: DataFrame, bench_grams: DataFrame) -> DataFrame:
@@ -55,9 +42,9 @@ def contamination_probe_batch(batch: DataFrame, bench_grams: DataFrame) -> DataF
     doc (clean docs report 0/false).  The benchmark table is broadcast —
     it is small by construction — so the probe adds no batch shuffle
     beyond the per-doc count agg."""
-    hdf = batch.select("doc_id", _token_hashes().alias("h"))
+    hdf = batch.select("doc_id", token_hashes().alias("h"))
     grams = hdf.select(
-        "doc_id", F.explode(_gram_digest_exprs(F.col("h"))).alias("g")
+        "doc_id", F.explode(window_digests(F.col("h"), NGRAM_N, GRAM_STEP)).alias("g")
     )
     hits = (
         grams.join(F.broadcast(bench_grams), "g")
@@ -92,19 +79,12 @@ def stream_contamination_to_parquet(
         spark.read.parquet(bench_grams_path).select("g").distinct()
         .localCheckpoint(eager=True)
     )
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = contamination_probe_batch(batch, bench)
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    src = (
-        spark.readStream.schema(STREAM_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_probe_stream(
+        spark,
+        STREAM_DOCS_SCHEMA,
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: contamination_probe_batch(batch, bench),
     )

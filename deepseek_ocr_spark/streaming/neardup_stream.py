@@ -18,29 +18,17 @@ the same micro-batch are not paired against each other (that is the
 nightly batch job's task — same division of labor as the reference
 pipeline's daily increment).
 
-Replay safety: each micro-batch writes to its own ``batch=<id>``
-subdirectory with overwrite mode, so a batch replayed after a crash
-between the parquet write and the streaming checkpoint commit simply
-overwrites its own output — effective exactly-once for downstream readers
-of the root path (who see batch= as a partition column). The distinct
-band set is computed and cached ONCE at stream start, not per trigger —
-re-scanning the 100 TB seen-set every micro-batch would dominate the job.
+The distinct band set is computed and checkpointed ONCE at stream start;
+replay safety is streaming/probe.run_probe_stream's ``batch=<id>``
+overwrite.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from deepseek_ocr_spark.operators.dedup import N_BANDS, N_MINHASHES, band_table
-
-STREAM_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from deepseek_ocr_spark.streaming.probe import STREAM_DOCS_SCHEMA, run_probe_stream
 
 
 def neardup_filter_batch(
@@ -84,19 +72,12 @@ def stream_neardup_to_parquet(
         spark.read.parquet(corpus_bands_path).select("band").distinct()
         .localCheckpoint(eager=True)
     )
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = neardup_filter_batch(batch, bands_distinct, n_hashes, n_bands)
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    src = (
-        spark.readStream.schema(STREAM_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_probe_stream(
+        spark,
+        STREAM_DOCS_SCHEMA,
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: neardup_filter_batch(batch, bands_distinct, n_hashes, n_bands),
     )

@@ -13,7 +13,8 @@ Same division of labor as neardup_stream: the stream filters new data
 against the STATIC corpus (state = the materialized (vec_id, centroid_id,
 embedding) table, not stream state); duplicates WITHIN one micro-batch
 are the nightly batch job's task (dedup_semantic over the compacted
-corpus). Replay-safe batch=<id> parquet appends, corpus table loaded and
+corpus). Replay-safe batch=<id> parquet appends through
+streaming/probe.run_probe_stream; the corpus table is loaded and
 checkpointed ONCE at stream start.
 """
 
@@ -29,6 +30,7 @@ from deepseek_ocr_spark.operators.similarity import (
     _bucket_pairs,
     ivf_assignments,
 )
+from deepseek_ocr_spark.streaming.probe import run_probe_stream
 
 STREAM_EMB_SCHEMA = T.StructType(
     [
@@ -100,21 +102,14 @@ def stream_semantic_to_parquet(
     corpus_index = (
         spark.read.parquet(corpus_index_path).localCheckpoint(eager=True)
     )
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = semantic_filter_batch(
+    return run_probe_stream(
+        spark,
+        STREAM_EMB_SCHEMA,
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: semantic_filter_batch(
             batch, corpus_index, threshold, n_centroids, dim
-        )
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    src = (
-        spark.readStream.schema(STREAM_EMB_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )

@@ -7,8 +7,8 @@ digests probed against the MATERIALIZED duplicated-window digest table
 refreshed by the nightly span-dedup job, the exact analog of band_table
 for near-dup); flagged windows merge to per-doc spans with the SAME
 gaps-and-islands kernel the batch op uses.  State is the static digest
-table, never stream state; ``foreachBatch`` writes idempotent
-``batch=<id>`` parquet partitions (replay overwrites its own output).
+table, never stream state; streaming/probe.run_probe_stream writes
+idempotent ``batch=<id>`` parquet partitions.
 
 Same division of labor as neardup_stream: windows duplicated only
 WITHIN the increment are the nightly batch job's task, not the probe's."""
@@ -16,21 +16,13 @@ WITHIN the increment are the nightly batch job's task, not the probe's."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from deepseek_ocr_spark.operators.dedup import (
     SPAN_W,
     _flagged_windows_to_spans,
     span_windows,
 )
-
-STREAM_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from deepseek_ocr_spark.streaming.probe import STREAM_DOCS_SCHEMA, run_probe_stream
 
 
 def span_probe_batch(
@@ -62,19 +54,12 @@ def stream_spans_to_parquet(
         spark.read.parquet(dup_digests_path).select("g").distinct()
         .localCheckpoint(eager=True)
     )
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = span_probe_batch(batch, dup, w)
-        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    src = (
-        spark.readStream.schema(STREAM_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_probe_stream(
+        spark,
+        STREAM_DOCS_SCHEMA,
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: span_probe_batch(batch, dup, w),
     )

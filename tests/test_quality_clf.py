@@ -94,3 +94,12 @@ def test_floordiv_matches_python_floor(spark):
         math.floor(v / 100)
         for v in (-101, -100, -1, 0, 1, 99, 100, 101, -7_000_003)
     ]
+
+
+def test_scoring_against_fit_reads_no_lang(spark, docs):
+    """clf_scores(fit=) reads only doc_id and text: the same docs with
+    lang dropped score to the same rows (the streaming scorer's input)."""
+    fit = traindata.clf_fit(docs, iters=2)
+    a = traindata.clf_scores(docs, fit=fit).orderBy("doc_id").collect()
+    b = traindata.clf_scores(docs.drop("lang"), fit=fit).orderBy("doc_id").collect()
+    assert a == b and len(a) > 0

@@ -212,3 +212,17 @@ def test_dsir_topk_plan_is_take_ordered(spark):
     )
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_dsir_scoring_against_fit_reads_no_lang(spark):
+    """dsir_scores(fit=) reads only doc_id and text: the sf0.001 docs with
+    lang dropped score to the same rows as with it."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    fit = traindata.dsir_fit(docs, n_buckets=64)
+    a = traindata.dsir_scores(docs, n_buckets=64, fit=fit).orderBy("doc_id").collect()
+    b = (
+        traindata.dsir_scores(docs.drop("lang"), n_buckets=64, fit=fit)
+        .orderBy("doc_id")
+        .collect()
+    )
+    assert a == b and len(a) > 0
