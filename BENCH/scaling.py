@@ -66,7 +66,7 @@ d.count()  # warm scan + python worker pool
 times = []
 for i in range(warmups + repeat):
     t0 = time.time()
-    extract_documents(d, page_partitions=cpus).write.format("noop").mode("overwrite").save()
+    extract_documents(d).write.format("noop").mode("overwrite").save()
     times.append(time.time() - t0)
 pages = extract_documents(d).selectExpr("sum(n_pages) as p").collect()[0]["p"]
 print(json.dumps({"cpus": cpus, "runs": [round(t, 2) for t in times[warmups:]],

@@ -34,6 +34,7 @@ from deepseek_ocr_spark.operators.tiling_relational import (
     vision_tokens_col,
     with_tile_plan,
 )
+from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,18 +209,8 @@ def docs_from_driver_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def driver_docs_to_input(src: DataFrame) -> DataFrame:
     """(doc_id, text, lang) rows → input_hint shape with derived html."""
     import pandas as pd
-    from pyspark.sql import types as T
 
     spark = src.sparkSession
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("html", T.BinaryType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
 
     def to_html(batches):
         from datetime import datetime, timedelta, timezone
@@ -242,7 +233,7 @@ def driver_docs_to_input(src: DataFrame) -> DataFrame:
             )
 
     par = spark.sparkContext.defaultParallelism
-    return src.repartition(par).mapInPandas(to_html, schema)
+    return src.repartition(par).mapInPandas(to_html, DOCS_SCHEMA)
 
 
 def replicated_driver_docs(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:

@@ -33,11 +33,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--n-docs", type=int, default=2000)
     ap.add_argument("--attempt", type=int, default=0)
     ap.add_argument(
-        "--paged", action="store_true",
-        help="page-granular path for giant-document inputs (extra shuffle; "
-        "spreads one huge doc's pages across tasks)",
-    )
-    ap.add_argument(
         "--layouts-pdf", action="store_true",
         help="also write layouts_pdf/ — one TRUE annotated _layouts.pdf "
         "artifact per doc (pipeline/pdfsink.py); pixmaps are deterministic "
@@ -47,10 +42,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from deepseek_ocr_spark.config import EngineConfig
     from deepseek_ocr_spark.pipeline import checkpoint as ckpt
-    from deepseek_ocr_spark.pipeline.extract_job import (
-        extract_documents,
-        extract_documents_paged,
-    )
+    from deepseek_ocr_spark.pipeline.extract_job import extract_documents
     from deepseek_ocr_spark.pipeline.metrics import (
         lineage_table,
         metrics_table,
@@ -92,18 +84,15 @@ def main(argv: list[str] | None = None) -> int:
             docs = load_documents_dir(spark, args.input)
     else:
         from deepseek_ocr_spark.datagen.synth import gen_documents
+        from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
-        docs = spark.createDataFrame(
-            gen_documents(args.n_docs),
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        )
+        docs = spark.createDataFrame(gen_documents(args.n_docs), DOCS_SCHEMA)
 
     if args.resume:
         docs = ckpt.pending_documents(docs, args.output)
 
     cfg = EngineConfig(mode=args.mode)
-    runner = extract_documents_paged if args.paged else extract_documents
-    extracted = runner(docs, cfg)
+    extracted = extract_documents(docs, cfg)
     ckpt.commit_run(extracted, args.output, attempt=args.attempt)
 
     final = ckpt.read_extracted_deduped(spark, args.output)

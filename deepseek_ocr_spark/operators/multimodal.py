@@ -446,14 +446,6 @@ def extract_features(docs: DataFrame, dim: int = FEATURES_DIM) -> DataFrame:
     return payloads.mapInPandas(_feature_batches(dim), FEATURES_SCHEMA)
 
 
-def extract_features_sql(dim: int = FEATURES_DIM) -> str:
-    elems = ", ".join(
-        f"CAST(('0x' || substr(md5(text), {2 * j + 1}, 2)) AS INT) / 255.0"
-        for j in range(dim)
-    )
-    return f"SELECT doc_id, [{elems}] AS features FROM documents"
-
-
 def extract_features_exploded(docs: DataFrame, dim: int = FEATURES_DIM) -> DataFrame:
     """(doc_id, dim_ix, feature) — `extract_features` posexploded to one
     scalar row per vector component. This is the registry/driver contract

@@ -124,12 +124,11 @@ def contamination_flags(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFram
     )
 
 
-def contamination_flags_sql(
-    table: str = "documents", bench_mod: int = BENCH_MOD, n: int = NGRAM_N
-) -> str:
+def contamination_flags_sql(table: str = "documents", bench_mod: int = BENCH_MOD) -> str:
     # mirrors digests.token_hashes + window_digests bit-for-bit: 60-bit token
     # md5 window, position-rotated XOR combine (masked shifts keep every
-    # intermediate < 2^60 — DuckDB BIGINT shifts are overflow-checked)
+    # intermediate < 2^60 — DuckDB BIGINT shifts are overflow-checked); the
+    # two rotated terms spell out the NGRAM_N = 3 window
     rot20 = f"((((h[i+1]) & {(1 << 40) - 1}) << 20) | ((h[i+1]) >> 40))"
     rot40 = f"((((h[i+2]) & {(1 << 20) - 1}) << 40) | ((h[i+2]) >> 20))"
     return f"""
@@ -145,8 +144,8 @@ tokh AS (
 ),
 grams AS (
   SELECT doc_id,
-         unnest(CASE WHEN len(h) >= {n}
-                THEN list_transform(range(1, len(h) - {n} + 2),
+         unnest(CASE WHEN len(h) >= {NGRAM_N}
+                THEN list_transform(range(1, len(h) - {NGRAM_N} + 2),
                      i -> xor(xor(h[i], {rot20}), {rot40}))
                 ELSE [] END) AS g
   FROM tokh

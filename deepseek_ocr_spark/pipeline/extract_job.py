@@ -27,9 +27,12 @@ tested to agree with the kernel the doc stage calls. ``url`` is the table's
 unique key (FIXTURES.md); the plan emits one row per input row and never
 groups by url, so two input rows sharing a url stay two rows (resume
 dedupe, ``checkpoint.read_extracted_deduped``, is url-keyed). Projection
-(url, html) prunes at the scan. Skew: work per doc is bounded (≤~40 pages ×
-the 8192-token cap), so doc-granular distribution evens out at thousands of
-docs per task; book-length documents use ``extract_documents_paged``.
+(url, html) prunes at the scan. Skew: work is distributed per document.
+Web pages are bounded (≤~40 sections), so tasks even out at thousands of
+docs each. A book-length document is one task's work; at ~0.13 ms per
+page, a 5,000-page document still extracts faster here than a
+page-granular plan, whose two extra shuffles and Arrow crossings cost more
+than the page work they spread (docs/SCALE.md, "Giant-doc regime").
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepseek_ocr_spark.config import EngineConfig, DEFAULT_CONFIG
@@ -48,54 +50,13 @@ from deepseek_ocr_spark.kernels.tiling import tile_plan
 from deepseek_ocr_spark.kernels.tokens import num_text_tokens, num_vision_tokens
 
 # ---------------------------------------------------------------------------
-# Page split (mapInPandas; cheap, streaming) — the giant-doc path's fan-out
+# Page-level split+extract (mapInPandas)
 # ---------------------------------------------------------------------------
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("page_no", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("page_html", T.StringType()),
-        T.StructField("degenerate", T.BooleanType()),
-    ]
-)
-
-
-def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from deepseek_ocr_spark.kernels.extract import split_pages
-
-    for pdf in batches:
-        out = {k: [] for k in PAGES_SCHEMA.fieldNames()}
-        for doc, url, html in zip(pdf["doc"], pdf["url"], pdf["html"]):
-            # null/bytes normalization happens inside the shared kernel
-            for seq, rec in enumerate(split_pages(html)):
-                out["doc"].append(doc)
-                out["url"].append(url)
-                out["page_no"].append(rec.page_no)
-                out["seq"].append(seq)
-                out["width"].append(rec.width)
-                out["height"].append(rec.height)
-                out["page_html"].append(rec.html)
-                out["degenerate"].append(rec.degenerate)
-        yield pd.DataFrame(out)
-
-
-def split_to_pages(docs: DataFrame) -> DataFrame:
-    """documents → one row per page (the PDF-render fan-out analog,
-    reference pdf.py:64-95), keyed by ``(doc, seq)``: ``doc`` is a per-input-
-    row id taken before the split, so rows sharing a url stay apart."""
-    src = docs.select(F.monotonically_increasing_id().alias("doc"), "url", "html")
-    return src.mapInPandas(_split_batches, PAGES_SCHEMA)
-
-
-# Page-level split+extract: the kernel half of the fused doc stage, emitting
-# extracted page rows with no per-document finalize. Standalone op — it
-# times the split+extract layer on its own (perfbench) and shows why the
-# page html stays inside the Python worker.
+# The kernel half of the fused doc stage, emitting extracted page rows with
+# no per-document finalize. Standalone op — it times the split+extract layer
+# on its own (perfbench) and shows why the page html stays inside the
+# Python worker.
 EXTRACTED_PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -150,7 +111,7 @@ def _get_kernel():
 
 
 # ---------------------------------------------------------------------------
-# Per-document finalize — the one body both plans run
+# Per-document finalize — the fused doc stage's body
 # ---------------------------------------------------------------------------
 
 # Spans carry both the 0-999 virtual-grid coords (the model grammar) and the
@@ -271,11 +232,7 @@ def _extract_doc_batches(cfg: EngineConfig):
 # ---------------------------------------------------------------------------
 
 
-def extract_documents(
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    page_partitions: int | None = None,
-) -> DataFrame:
+def extract_documents(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """documents → extracted(url, raw_text, text, spans, page_dims, n_pages,
     n_vision_tokens, n_text_tokens, compression_ratio, digest).
 
@@ -285,94 +242,17 @@ def extract_documents(
     stays url-keyed.
 
     Documents are repartitioned by url before the fused doc stage only
-    when the input has fewer scan splits than ``page_partitions`` (default:
-    the cluster's parallelism) — a well-laid-out 100 TB table already has
+    when the input has fewer scan splits than the cluster's
+    ``defaultParallelism`` — a well-laid-out 100 TB table already has
     thousands of scan splits, so the shuffle of html bytes is skipped; a
     single-file sandbox input gets spread so the Python stage isn't
-    single-tasked. Work per doc is bounded (≤~40 pages × the 8192
-    output-token cap), so doc-granularity distribution is skew-safe at
-    thousands of docs per task.
+    single-tasked. Work is distributed at doc granularity: a web page has
+    ≤~40 sections, and one 2,000-page document (tests/test_byte_identity.py)
+    stays byte-identical to the oracle within one task.
     """
-    spark = docs.sparkSession
-    if page_partitions is None:
-        page_partitions = spark.sparkContext.defaultParallelism
-
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
     src = docs.select("url", "html")
-    if src.rdd.getNumPartitions() < page_partitions:
-        src = src.repartition(page_partitions, "url")
+    if src.rdd.getNumPartitions() < parallelism:
+        src = src.repartition(parallelism, "url")
 
     return src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA)
-
-
-@F.pandas_udf(T.StringType())
-def page_extract_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-    """Page-granular kernel call for the giant-doc path: one page row →
-    raw grounded markdown (iterator form, per-worker singleton)."""
-    kernel = _get_kernel()
-    PageRecord = kernel.PageRecord
-    for pdf in it:
-        yield pd.Series(
-            [
-                kernel.extract_page(
-                    PageRecord(int(pn), int(w), int(h), ph, bool(dg))
-                )
-                for pn, w, h, ph, dg in zip(
-                    pdf["page_no"], pdf["width"], pdf["height"],
-                    pdf["page_html"], pdf["degenerate"],
-                )
-            ]
-        )
-
-
-def _finalize_group(cfg: EngineConfig):
-    def run(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.sort_values(["page_no", "seq"])
-        pages = zip(
-            g["page_no"].tolist(), g["width"].tolist(), g["height"].tolist(), g["raw"].tolist()
-        )
-        return pd.DataFrame(
-            [(g["url"].iloc[0], *_finalize_doc(pages, cfg))], columns=DOC_SCHEMA.fieldNames()
-        )
-
-    return run
-
-
-def extract_documents_paged(
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    page_partitions: int | None = None,
-) -> DataFrame:
-    """Page-granular variant for the giant-document regime (SURVEY.md §4.1).
-
-    The fused path distributes work at doc granularity — correct when docs
-    are bounded (web pages, ≤~40 sections). When single documents are
-    enormous (book-length PDFs: thousands of pages), one doc must not pin
-    one task, so this path splits FIRST, shuffles pages by the salted page
-    key (an explicit skew spread — AQE cannot rebalance UDF-stage work),
-    extracts page-at-a-time, then regroups each document's pages for the
-    same ``_finalize_doc`` as ``extract_documents``.
-    Byte-identical to ``extract_documents`` (pytest gate) and, like it, one
-    output row per input row: pages regroup by a per-row id taken before
-    the split, not by ``url`` (the unique key; resume dedupe in
-    ``checkpoint.read_extracted_deduped`` stays url-keyed). Costs a shuffle
-    of page html, a shuffle of page text and two more Python stages, which
-    is why it is not the default.
-    """
-    spark = docs.sparkSession
-    if page_partitions is None:
-        page_partitions = spark.sparkContext.defaultParallelism
-
-    pages = split_to_pages(docs)
-    # salted page-key spread: pages of one giant doc scatter across tasks
-    pages = pages.repartition(
-        page_partitions, F.pmod(F.hash("doc", "seq"), F.lit(page_partitions * 8))
-    )
-    pages = pages.withColumn(
-        "raw",
-        page_extract_udf(F.struct("page_no", "width", "height", "page_html", "degenerate")),
-    ).drop("page_html", "degenerate")
-    # Explicit REPARTITION_BY_NUM rather than the groupBy's own exchange:
-    # AQE's byte-based coalescing shrank the post-shuffle stage to 1 task
-    # (observed in the event log), serializing the Python finalize stage.
-    pages = pages.repartition(page_partitions, "doc")
-    return pages.groupBy("doc").applyInPandas(_finalize_group(cfg), DOC_SCHEMA)

@@ -3,7 +3,8 @@
 The reference scans a directory of files (glob.glob(INPUT_PATH/*),
 run_dpsk_ocr_eval_batch.py:99-107). The Spark-native equivalents:
 
-- ``load_documents_parquet``  — the standard columnar path (input_hint shape)
+- ``spark.read.parquet``      — the standard columnar path (input_hint shape,
+  ``DOCS_SCHEMA``)
 - ``load_documents_dir``      — ``binaryFile`` datasource over a directory of
   html files: path→url, content→html; modificationTime→warc_ts. Used for
   raw-crawl drops that haven't been tabularized yet.
@@ -18,12 +19,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-DOCS_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def load_documents_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+# the documents table shape (BASELINE.json input_hint, FIXTURES.md §1)
+DOCS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ]
+)
 
 
 def load_documents_dir(spark: SparkSession, path: str, glob: str = "*.html") -> DataFrame:

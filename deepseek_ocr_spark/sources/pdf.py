@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepseek_ocr_spark.kernels.pdftext import extract_pdf_text
+from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 PDF_PAGES_SCHEMA = T.StructType(
     [
@@ -61,17 +62,6 @@ def pdf_pages(docs: DataFrame, url_col: str = "url", pdf_col: str = "pdf") -> Da
     rasterize+OCR candidate)."""
     src = docs.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("pdf"))
     return src.mapInPandas(_page_batches, PDF_PAGES_SCHEMA)
-
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
 
 
 def _escape_html(s: str) -> str:

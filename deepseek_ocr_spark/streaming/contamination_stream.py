@@ -41,15 +41,19 @@ def contamination_probe_batch(batch: DataFrame, bench_grams: DataFrame) -> DataF
     """One micro-batch → (doc_id, n_hits, contaminated) for EVERY batch
     doc (clean docs report 0/false).  The benchmark table is broadcast —
     it is small by construction — so the probe adds no batch shuffle
-    beyond the per-doc count agg."""
+    beyond the per-doc count agg.  Grams are deduplicated in-row before
+    the explode, as in the batch op, so the agg is a plain count."""
     hdf = batch.select("doc_id", token_hashes().alias("h"))
     grams = hdf.select(
-        "doc_id", F.explode(window_digests(F.col("h"), NGRAM_N, GRAM_STEP)).alias("g")
+        "doc_id",
+        F.explode(
+            F.array_distinct(window_digests(F.col("h"), NGRAM_N, GRAM_STEP))
+        ).alias("g"),
     )
     hits = (
         grams.join(F.broadcast(bench_grams), "g")
         .groupBy("doc_id")
-        .agg(F.countDistinct("g").alias("n_hits"))
+        .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
         batch.select("doc_id")

@@ -13,17 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
+from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 
 def dedup_stream(docs: DataFrame, watermark: str = "1 hour") -> DataFrame:

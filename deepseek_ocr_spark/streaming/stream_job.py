@@ -19,21 +19,11 @@ event-time windows are N/A: warc_ts is data, not processing time
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from deepseek_ocr_spark.config import DEFAULT_CONFIG, EngineConfig
 from deepseek_ocr_spark.pipeline import checkpoint as ckpt
 from deepseek_ocr_spark.pipeline.extract_job import extract_documents
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
+from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 
 def stream_extract(

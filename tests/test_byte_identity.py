@@ -146,16 +146,26 @@ def test_relational_tile_plan_agrees_with_kernel(spark):
         assert got[key] == tile_plan(w, h), (w, h)
 
 
-def test_paged_variant_byte_identity(spark, docs_df):
-    """The giant-doc page-granular path produces identical bytes."""
-    from deepseek_ocr_spark.pipeline.extract_job import extract_documents_paged
+def test_giant_document_byte_identity(spark, docs_df):
+    """A 2,000-page document (every 20th page degenerate) next to the
+    60-doc fixture: the doc-granular plan extracts it in one Python call,
+    per url identical to the oracle."""
+    from deepseek_ocr_spark.datagen.synth import _page_div, _rng
+    from deepseek_ocr_spark.oracle.runner import extract_url
 
-    oracle = {r["url"]: r for r in run_oracle(gen_documents(60))}
-    got = {r["url"]: r for r in extract_documents_paged(docs_df).collect()}
-    assert set(got) == set(oracle)
-    for u in oracle:
-        assert got[u]["text"] == oracle[u]["text"], u
-        assert got[u]["n_vision_tokens"] == oracle[u]["n_vision_tokens"], u
+    pages = "".join(
+        _page_div(_rng(7, 0, f"giant{p}"), p, p % 20 == 19) for p in range(2000)
+    )
+    giant = ("https://books.example/giant", f"<html><body>{pages}</body></html>".encode())
+    docs = docs_df.select("url", "html").unionByName(
+        spark.createDataFrame([giant], "url string, html binary")
+    )
+    rows = [(r["url"], r["html"]) for r in gen_documents(60)] + [giant]
+    keys = ("text", "raw_text", "n_pages", "n_vision_tokens", "digest")
+    want = {u: tuple(extract_url(u, h)[k] for k in keys) for u, h in rows}
+    got = {r["url"]: tuple(r[k] for k in keys) for r in extract_documents(docs).collect()}
+    assert want[giant[0]][2] == 1900  # the 100 degenerate pages are dropped
+    assert got == want
 
 
 def test_layouts_doc_assembly(spark, docs_df):

@@ -2,7 +2,6 @@
 kernel): malformed html, empty bytes, non-UTF8, unbalanced divs — the Spark
 pipeline must agree with the oracle on all of them, never crash."""
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from deepseek_ocr_spark.kernels.tiling import tile_plan
@@ -132,19 +131,15 @@ def test_duplicate_page_no_keeps_document_order(spark):
     assert got["text"].find("zebra") < got["text"].find("apple")
 
 
-@pytest.mark.parametrize("paged", [False, True], ids=["fused", "paged"])
-def test_duplicate_url_rows_stay_separate(spark, paged):
+def test_duplicate_url_rows_stay_separate(spark):
     """url is the unique key, but two input rows that share one are not
     merged into one document: each row yields its own extract_url row, as
     run_oracle does (regression: the url-keyed assembly built one 2-page
     doc matching neither)."""
-    from deepseek_ocr_spark.pipeline.extract_job import extract_documents_paged
-
     rows = [("u://x", b"<p>first crawl</p>"), ("u://x", b"<p>second crawl</p>")]
     docs = spark.createDataFrame(rows, "url string, html binary")
-    run = extract_documents_paged if paged else extract_documents
     keys = ("url", "text", "raw_text", "n_pages", "n_vision_tokens", "digest")
-    got = sorted(tuple(r[k] for k in keys) for r in run(docs).collect())
+    got = sorted(tuple(r[k] for k in keys) for r in extract_documents(docs).collect())
     want = sorted(tuple(extract_url(u, h)[k] for k in keys) for u, h in rows)
     assert got == want
 
