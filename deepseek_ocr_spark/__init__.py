@@ -11,8 +11,8 @@ Re-expresses the query semantics of deepseek-ai/DeepSeek-OCR (reference at
 - ``oracle/``    single-node reference pipeline (plain Python loops).
 - ``pipeline/``  the distributed Spark plan: scan → size-bucketed partitioning
                  → Arrow-batched pandas UDF extraction → relational post-process
-                 → ordered assembly → extracted/metrics/lineage sinks, with a
-                 checkpoint manifest + anti-join resume.
+                 → ordered assembly → extracted/metrics/lineage sinks; resume
+                 anti-joins the committed extracted urls.
 - ``operators/`` relational operators (tile-plan argmin join, span regex ops,
                  dedup family, similarity search, text quality) exposed through
                  ``__spark_entry__.queries()`` with DuckDB oracle SQL.

@@ -7,9 +7,10 @@ Usage:
         [--mode pdf|eval|image] [--resume] [--n-docs 2000]
 
 Without --input, generates the synthetic corpus (--n-docs) in-session.
-Writes extracted/ + _manifest/ (checkpoint) + metrics/ + lineage/ +
-layouts/ + layouts_doc/ (per-doc assembled artifact) under
---output; with --resume, already-manifested urls are anti-joined away.
+Writes extracted/ (one append per run; also the resume record) +
+metrics/ + lineage/ + layouts/ + layouts_doc/ (per-doc assembled artifact)
+under --output; with --resume, urls already in extracted/ are anti-joined
+away.
 """
 
 from __future__ import annotations

@@ -329,7 +329,7 @@ FROM documents
 
 def anti_join_resume(docs: DataFrame) -> DataFrame:
     """O-22/resume shape: left-anti join against the already-done set
-    (even doc_ids stand in for the manifest)."""
+    (doc_ids divisible by 3 stand in for the committed urls)."""
     done = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     return docs.join(done, "doc_id", "left_anti").select("doc_id", "lang")
 

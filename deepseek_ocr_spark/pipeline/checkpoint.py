@@ -1,16 +1,19 @@
 """Resumable checkpointing + lineage (north_rule requirement; SURVEY.md §4.3-4.4).
 
 The reference has no resume story (a killed run re-OCRs everything); this is
-new engineering mandated by the north_rule: a manifest table of completed
-work, restart = left-anti join, idempotent replay.
+new engineering mandated by the north_rule: a record of completed work,
+restart = left-anti join, idempotent replay.
 
 Model:
 - each run appends ``extracted`` rows (tagged with ``partition_id``,
-  ``attempt`` and ``completed_ts``; no directory partitioning) and appends
-  a manifest of ``(url, digest, partition_id, attempt, completed_ts)``;
-- on restart, ``pending = docs.join(manifest, 'url', 'left_anti')`` — only
-  unfinished urls are reprocessed (the anti-join is the O-22 note in
-  SURVEY.md §2.4);
+  ``attempt`` and ``completed_ts``; no directory partitioning) in one Spark
+  job. That job's commit is the unit of atomicity, so the committed
+  ``extracted`` table IS the record of completed work: a url whose row is
+  visible there is done;
+- on restart, ``pending = docs.join(extracted.select('url'), 'url',
+  'left_anti')`` — only unfinished urls are reprocessed (the anti-join is
+  the O-22 note in SURVEY.md §2.4; the parquet scan reads the url column
+  only);
 - replay is idempotent because the kernel is deterministic: a url processed
   twice produces the same digest, and readers dedupe by
   ``row_number() over (partition by url order by completed_ts desc) = 1``.
@@ -27,60 +30,37 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def manifest_path(base: str) -> str:
-    return os.path.join(base, "_manifest")
-
-
 def extracted_path(base: str) -> str:
     return os.path.join(base, "extracted")
 
 
-def read_manifest(spark: SparkSession, base: str) -> DataFrame | None:
-    """None only when no manifest EXISTS yet — a corrupt/unreadable manifest
-    must propagate, not silently disable resume (which would reprocess the
-    full corpus and append duplicates)."""
+def pending_documents(docs: DataFrame, base: str) -> DataFrame:
+    """Restart filter: drop urls already committed to ``extracted``
+    (left-anti join). A missing ``extracted`` directory, or one that holds
+    no committed parquet (the first write crashed mid-commit), means nothing
+    is committed; any other read error — a corrupt file, say — propagates
+    rather than silently reprocessing the full corpus."""
     from pyspark.errors import AnalysisException
 
-    p = manifest_path(base)
     try:
-        return spark.read.parquet(p)
+        done = docs.sparkSession.read.parquet(extracted_path(base)).select("url")
     except AnalysisException as exc:
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        # PATH_NOT_FOUND: no manifest yet. UNABLE_TO_INFER_SCHEMA: the dir
-        # exists but holds no committed parquet (manifest write crashed
-        # mid-commit) — also "no manifest", and reprocessing is safe because
-        # read_extracted_deduped dedupes replays.
-        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return docs
         raise
-
-
-def pending_documents(docs: DataFrame, base: str) -> DataFrame:
-    """Restart filter: drop urls already in the manifest (left-anti join)."""
-    manifest = read_manifest(docs.sparkSession, base)
-    if manifest is None:
-        return docs
-    return docs.join(manifest.select("url"), "url", "left_anti")
+    return docs.join(done, "url", "left_anti")
 
 
 def commit_run(extracted: DataFrame, base: str, attempt: int = 0) -> None:
-    """Append results + manifest. Job-level atomicity: the manifest append
-    happens only after the extracted append commits, so a crash between the
-    two re-runs those urls (idempotent — same bytes, deduped on read)."""
-    out = extracted.withColumn("partition_id", F.spark_partition_id()).withColumn(
-        "attempt", F.lit(attempt)
-    ).withColumn("completed_ts", F.current_timestamp())
-    # persist: without it the manifest append would RE-RUN the whole
-    # extraction pipeline (uncached lineage) — 2x wall clock — and evaluate
-    # current_timestamp()/partition ids independently of the extracted rows
-    out = out.persist()
-    try:
-        out.write.mode("append").parquet(extracted_path(base))
-        out.select(
-            "url", "digest", "partition_id", "attempt", "completed_ts"
-        ).write.mode("append").parquet(manifest_path(base))
-    finally:
-        out.unpersist()
+    """Append results in one Spark job. Its commit is the unit of
+    atomicity, and the committed rows are the resume record that
+    ``pending_documents`` reads."""
+    out = (
+        extracted.withColumn("partition_id", F.spark_partition_id())
+        .withColumn("attempt", F.lit(attempt))
+        .withColumn("completed_ts", F.current_timestamp())
+    )
+    out.write.mode("append").parquet(extracted_path(base))
 
 
 def read_extracted_deduped(spark: SparkSession, base: str) -> DataFrame:

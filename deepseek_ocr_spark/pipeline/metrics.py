@@ -59,7 +59,7 @@ def lineage_table(extracted: DataFrame) -> DataFrame:
     """extracted → lineage(url, partition_id, digest) (FIXTURES.md §2).
 
     ``partition_id`` must be the id of the extraction task that PRODUCED the
-    row (persisted by checkpoint.commit_run), not the scan partition of
+    row (written by checkpoint.commit_run), not the scan partition of
     whoever happens to read the table later — so the persisted column is
     required; recomputing ``spark_partition_id()`` here would record the
     reader's layout instead of the producer's."""

@@ -80,7 +80,7 @@ def load_documents_warc(spark: SparkSession, path: str, glob: str = "*.warc") ->
         recs.filter(is_response & (uri != "") & (F.size(parts) >= 3))
         .select(
             uri.alias("url"),
-            F.to_timestamp_ntz(date).alias("warc_ts"),
+            F.to_timestamp(date).alias("warc_ts"),
             F.encode(html, "UTF-8").alias("html"),
             F.lit(None).cast("string").alias("text"),
             F.lit(None).cast("string").alias("lang"),
@@ -91,7 +91,7 @@ def load_documents_warc(spark: SparkSession, path: str, glob: str = "*.warc") ->
 JSONL_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampNTZType()),
+        T.StructField("warc_ts", T.TimestampType()),
         T.StructField("html", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("lang", T.StringType()),

@@ -4,13 +4,14 @@ The reference's streaming surface is the AsyncLLMEngine incremental decode
 (run_dpsk_ocr_image.py:150-196). The tabular analog: the SAME batch plan run
 incrementally over a document stream via ``readStream`` + ``foreachBatch``,
 which directly provides the north_rule checkpoint/replay semantics
-(checkpointLocation + idempotent per-batch manifest commits — a failed batch
-replays, the manifest dedupes).
+(checkpointLocation + idempotent per-batch commits — a failed batch replays
+and its already-committed urls anti-join away).
 
 ``foreachBatch`` (rather than a fully-declarative streaming plan) because
-each micro-batch commits with ``checkpoint.commit_run``: two writes (the
-extracted rows, then the manifest) of one persisted result, which a single
-streaming sink cannot express. The extraction plan itself is stateless
+each micro-batch first anti-joins against the urls already committed to
+``extracted`` (``checkpoint.pending_documents``), a read of the sink's own
+table that a streaming sink cannot express; the commit itself is one
+append (``checkpoint.commit_run``). The extraction plan itself is stateless
 (scan → one MapInPandas → final rows, no aggregation). Late data /
 event-time windows are N/A: warc_ts is data, not processing time
 (SURVEY.md §2.9).

@@ -244,3 +244,42 @@ def test_csv_source_permissive(spark, tmp_path):
     assert bytes(rows["u1"]["html"]) == b"<p>x</p>"
     assert rows["u1"]["lang"] == "en"
     assert rows["u2"]["warc_ts"] is None  # malformed field nulled, row kept
+
+
+def test_every_loader_emits_the_docs_schema_warc_ts_type(spark, tmp_path):
+    """One ``warc_ts`` type across loaders, so a table from any of them
+    reads back with ``DOCS_SCHEMA`` (the stream source) or unions with
+    another loader's output without a type mismatch."""
+    from deepseek_ocr_spark.sources.catalog import (
+        DOCS_SCHEMA,
+        load_documents_csv,
+        load_documents_orc,
+        write_documents_orc,
+    )
+    from deepseek_ocr_spark.sources.warc import load_documents_jsonl, load_documents_warc
+
+    (tmp_path / "html").mkdir()
+    (tmp_path / "html" / "d.html").write_bytes(b"<p>d</p>")
+    (tmp_path / "warc").mkdir()
+    (tmp_path / "warc" / "s.warc").write_text(
+        _warc_record("http://w.example/", "2024-01-02T03:04:05Z", "<p>w</p>"), newline=""
+    )
+    (tmp_path / "d.jsonl").write_text('{"url": "u", "warc_ts": "2024-01-01T00:00:00"}\n')
+    (tmp_path / "d.csv").write_text("url,warc_ts,html,text,lang\nu,2024-01-01T00:00:00,,,\n")
+    write_documents_orc(
+        spark.createDataFrame([("u", None, b"", None, None)], DOCS_SCHEMA), str(tmp_path / "orc")
+    )
+
+    loaded = {
+        "dir": load_documents_dir(spark, str(tmp_path / "html")),
+        "warc": load_documents_warc(spark, str(tmp_path / "warc")),
+        "jsonl": load_documents_jsonl(spark, str(tmp_path / "d.jsonl")),
+        "csv": load_documents_csv(spark, str(tmp_path / "d.csv")),
+        "orc": load_documents_orc(spark, str(tmp_path / "orc")),
+    }
+    want = DOCS_SCHEMA["warc_ts"].dataType
+    assert {k: df.schema["warc_ts"].dataType for k, df in loaded.items()} == {
+        k: want for k in loaded
+    }
+    # the WARC-Date instant survives the type change (session zone is UTC)
+    assert loaded["warc"].selectExpr("cast(warc_ts as string)").head()[0] == "2024-01-02 03:04:05"
