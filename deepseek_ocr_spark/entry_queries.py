@@ -541,7 +541,10 @@ _DEFS: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = 
     # and the spans pass probes it — at sf0.1 a wash (1.089s vs 1.085s
     # min-of-4), at 100 TB strictly right (digests computed once, shared).
     "dedup_spans": (
-        lambda s, d: dedup.dedup_spans_indexed(_docs(s, d)),
+        lambda s, d: dedup.dedup_spans(
+            _docs(s, d),
+            dup_table=dedup.dup_window_table(_docs(s, d)).localCheckpoint(),
+        ),
         dedup.dedup_spans_sql(),
     ),
     "dedup_spans_cut": (

@@ -128,9 +128,10 @@ def main(argv: list[str] | None = None) -> int:
 
     # r6 ops: substring dedup (detect + apply) and the bigram-LM filter.
     # r7: the duplicated-window digest table is WRITTEN ONCE and both the
-    # detect and apply passes (and the streaming probe, spans_stream.py)
-    # read it back — window digests are computed once per corpus instead
-    # of once per consumer (the 100 TB default).
+    # detect and apply passes (and the streaming span probe,
+    # streaming/probe.stream_spans_to_parquet) read it back — window
+    # digests are computed once per corpus instead of once per consumer
+    # (the 100 TB default).
     dedup.dup_window_table(docs).write.mode("overwrite").parquet(
         os.path.join(args.output, "span_digests")
     )

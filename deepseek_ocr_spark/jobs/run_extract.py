@@ -10,7 +10,7 @@ Without --input, generates the synthetic corpus (--n-docs) in-session.
 Writes extracted/ (one append per run; also the resume record) +
 metrics/ + lineage/ + layouts/ + layouts_doc/ (per-doc assembled artifact)
 under --output; with --resume, urls already in extracted/ are anti-joined
-away.
+away, and nothing pending appends nothing.
 """
 
 from __future__ import annotations
@@ -89,13 +89,15 @@ def main(argv: list[str] | None = None) -> int:
 
         docs = spark.createDataFrame(gen_documents(args.n_docs), DOCS_SCHEMA)
 
-    if args.resume:
-        docs = ckpt.pending_documents(docs, args.output)
-
     cfg = EngineConfig(mode=args.mode)
-    extracted = extract_documents(docs, cfg)
-    ckpt.commit_run(extracted, args.output, attempt=args.attempt)
+    if args.resume:
+        ckpt.commit_pending(docs, args.output, cfg, attempt=args.attempt)
+    else:
+        ckpt.commit_run(extract_documents(docs, cfg), args.output, attempt=args.attempt)
 
+    # the derived tables are rewritten even when nothing was pending, so a
+    # run that crashed between its commit and these writes is repaired by
+    # a no-op resume
     final = ckpt.read_extracted_deduped(spark, args.output)
     metrics_table(final).write.mode("overwrite").parquet(
         os.path.join(args.output, "metrics")

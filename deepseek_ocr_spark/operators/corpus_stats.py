@@ -42,8 +42,9 @@ HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_BUCKETS)
 def hll_registers(docs: DataFrame, col: str) -> DataFrame:
     """(bucket, m_j) — the HLL register table. Works unchanged on a
     STREAMING DataFrame (update mode): max is associative/commutative, so
-    this is exactly 256 rows of incremental state — see
-    streaming/hll_stream.py.
+    this is exactly 256 rows of incremental state (a streaming register
+    table equals this batch table over the same prefix; pinned in
+    tests/test_streaming.py).
 
     NULL values are excluded BEFORE sketching — count-distinct semantics
     ignore NULL in both engines, and an unfiltered NULL would fold into a

@@ -31,49 +31,40 @@ SHINGLE_WIDTH = 3
 
 
 def spread_input(df: DataFrame) -> DataFrame:
-    """Spread a narrow scan across the cluster before a map-heavy projection
-    (same policy as extract_job.spread_input): a well-laid-out production
-    table has thousands of splits and this is a no-op; the sandbox's
-    single-file driver parquet would otherwise run the whole zero-shuffle
-    sketch pipeline in ONE task (observed)."""
+    """Spread a narrow scan across the cluster before a map-heavy projection:
+    a well-laid-out production table has thousands of splits and this is a
+    no-op; a single-file parquet input would otherwise run the whole
+    zero-shuffle sketch pipeline in ONE task (observed)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
 
 
-def shingles_array(text_col: str = "text") -> F.Column:
-    """Word 3-gram shingles of one document as an ARRAY column expression —
-    zero explode, zero shuffle. A document's text already lives in one row,
-    so per-doc sketches (minhash, fingerprint) are projections over this
-    array rather than explode→groupBy round trips; memory is bounded by the
-    document itself (which the row already holds)."""
-    l = F.split(F.col(text_col), " ")
-    return F.when(
-        F.size(l) >= SHINGLE_WIDTH,
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, _sh: array<string>) — each doc's word 3-gram shingles as
+    one array row: zero explode, zero shuffle, memory bounded by the
+    document the row already holds.  The one shingle builder behind
+    minhash_signatures, _shingle_sets and textops.doc_fingerprint.
+
+    Docs with fewer than 3 tokens (and NULL text) are dropped, matching
+    the SQL oracle's empty range.  The gate is a token-count predicate,
+    NOT size(_sh) > 0: Catalyst pushes filters below the spread exchange,
+    and a filter on the shingle array would rebuild the whole transform
+    serially in the scan task (observed).  The token split is a projected
+    column the transform slices: a ``split`` inside the lambda re-splits
+    the whole text once per shingle, O(tokens²) per doc."""
+    has_shingles = F.size(F.split(F.col("text"), " ")) >= SHINGLE_WIDTH
+    toks = spread_input(docs.filter(has_shingles)).select(
+        "doc_id", F.split(F.col("text"), " ").alias("_tk")
+    )
+    return toks.select(
+        "doc_id",
         F.transform(
-            F.sequence(F.lit(0), F.size(l) - SHINGLE_WIDTH),
-            lambda i: F.concat_ws(" ", F.slice(l, i + 1, SHINGLE_WIDTH)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Word 3-gram shingles, one row per (doc, shingle).
-
-    Docs with fewer than 3 tokens yield zero shingles (matching the SQL
-    oracle's empty range) — guarded with CASE because
-    ``sequence(0, size-3)`` would otherwise produce a DESCENDING array for
-    short docs and ``slice(l, 0, 3)`` throws."""
-    toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("l"))
-    shingles = F.when(
-        F.size("l") >= SHINGLE_WIDTH,
-        F.transform(
-            F.sequence(F.lit(0), F.size("l") - SHINGLE_WIDTH),
-            lambda i: F.concat_ws(" ", F.slice("l", i + 1, SHINGLE_WIDTH)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select(id_col, F.explode(shingles).alias("shingle"))
+            F.sequence(F.lit(0), F.size("_tk") - SHINGLE_WIDTH),
+            lambda i: F.concat_ws(" ", F.slice("_tk", i + 1, SHINGLE_WIDTH)),
+        ).alias("_sh"),
+    )
 
 
 def shingles_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
@@ -123,19 +114,10 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, h0..h{K-1}, band0..band{B-1}) — K minhashes + banded keys.
 
-    ZERO-shuffle formulation: each minhash is ``array_min`` over the doc's
-    own shingle array (see shingles_array) — a pure projection, so signature
-    computation is map-only and the only shuffle in the LSH pipeline is the
-    band self-join itself. (Was explode → K min-aggs: a full shuffle of
-    every (doc, shingle) pair just to come back to one row per doc.)
-    Docs with <SHINGLE_WIDTH tokens have no shingles and are excluded,
+    Each minhash is the min over the doc's own shingles (see
+    doc_shingles).  Docs with <SHINGLE_WIDTH tokens have no shingles and are excluded,
     matching the SQL oracle's explode semantics."""
     r = _check_bands(n_hashes, n_bands)
-    # the has-shingles gate is expressed on token count, NOT size(_sh) > 0:
-    # Catalyst pushes filters below the spread exchange, and a filter on the
-    # shingle array would rebuild the whole transform serially in the scan
-    # task (observed) — the equivalent token-count predicate is cheap there
-    has_shingles = F.size(F.split(F.col("text"), " ")) >= SHINGLE_WIDTH
     # r8: explode → K min-aggs instead of array_min over K interpreted
     # transform lambdas — the K·shingles md5 calls then run under
     # whole-stage codegen (guide §4.1) and partial map-side aggregation
@@ -143,10 +125,11 @@ def minhash_signatures(
     # partition-local: the explode follows the row-level spread).
     # Measured x10 A/B min-of-3: 2.14 s vs 2.71 s for the 16-hash
     # signature stage, outputs bit-identical.
-    sh = (
-        spread_input(docs.filter(has_shingles))
-        .select("doc_id", F.explode(shingles_array()).alias("_s"))
-    )
+    # explode_outer, not explode: every row here has shingles, and an inner
+    # explode of the _sh column makes Catalyst infer size(_sh) > 0 and push
+    # it below the spread exchange — the whole transform rebuilt serially
+    # in the scan task (observed in the optimized plan)
+    sh = doc_shingles(docs).select("doc_id", F.explode_outer("_sh").alias("_s"))
     sig = sh.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.col("_s"), F.lit(f":{k}")))).alias(f"h{k}")
@@ -326,12 +309,8 @@ SELECT doc_id, CAST({sim_expr} AS BIGINT) AS simhash FROM votes
 
 def _shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, sh: array<string>) — each doc's DISTINCT shingle set as one
-    array row (zero shuffle, see shingles_array)."""
-    has_shingles = F.size(F.split(F.col("text"), " ")) >= SHINGLE_WIDTH
-    return (
-        spread_input(docs.filter(has_shingles))
-        .select("doc_id", F.array_distinct(shingles_array()).alias("sh"))
-    )
+    array row (zero shuffle, see doc_shingles)."""
+    return doc_shingles(docs).select("doc_id", F.array_distinct("_sh").alias("sh"))
 
 
 def ngram_jaccard_adjacent(docs: DataFrame) -> DataFrame:
@@ -471,7 +450,7 @@ def band_table(
     """(doc_id, band) — the exploded MinHash-LSH band table. At 100 TB
     this is the MATERIALIZED seen-set the steady-state crawl maintains
     (written bucketed by band); dedup_incremental and the streaming
-    near-dup probe both consume it."""
+    near-dup probe both probe it through band_collisions."""
     sig = minhash_signatures(docs, n_hashes, n_bands)
     return sig.select(
         "doc_id",
@@ -498,16 +477,31 @@ def dedup_incremental(
     inc = docs.filter(F.col("doc_id") % mod == 0)
     base = docs.filter(F.col("doc_id") % mod != 0)
 
-    seen = (
-        band_table(inc, n_hashes, n_bands)
-        .join(band_table(base, n_hashes, n_bands).select("band").distinct(),
-              "band", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("_seen", F.lit(True))
+    base_bands = band_table(base, n_hashes, n_bands).select("band").distinct()
+    seen = band_collisions(inc, base_bands, n_hashes, n_bands).withColumn(
+        "_seen", F.lit(True)
     )
     return inc.select("doc_id").join(seen, "doc_id", "left").select(
         "doc_id", F.coalesce("_seen", F.lit(False)).alias("already_seen")
+    )
+
+
+def band_collisions(
+    docs: DataFrame,
+    corpus_bands: DataFrame,
+    n_hashes: int = N_MINHASHES,
+    n_bands: int = N_BANDS,
+) -> DataFrame:
+    """(doc_id) — the distinct ``docs`` sharing any MinHash-LSH band with
+    the ``corpus_bands`` table (a band_table; only its ``band`` column is
+    read).  A left-semi probe, so duplicate corpus rows change nothing.
+    Docs too short to shingle have no bands and never collide; docs of
+    ``docs`` are not paired against each other."""
+    return (
+        band_table(docs, n_hashes, n_bands)
+        .join(corpus_bands.select("band"), "band", "left_semi")
+        .select("doc_id")
+        .distinct()
     )
 
 
@@ -837,9 +831,9 @@ def dedup_spans(
     ``dup_table=None`` the digests are computed twice (agg branch + probe
     branch) — map-side recompute is the cheap side of that trade at this
     scale; pass a MATERIALIZED ``dup_table`` (dup_window_table written
-    once — the table the streaming probe already consumes) to make the
-    second branch a read instead, the 100 TB default (see
-    dedup_spans_indexed).  Then ONE doc_id exchange for the
+    once — the artifact the streaming span probe runs this operator
+    against) to make the second branch a read instead, the 100 TB
+    default.  Then ONE doc_id exchange for the
     gaps-and-islands merge.  NULL/short docs never emit windows.  The
     DuckDB oracle keeps the count-over-window formulation — two
     independent derivations of the same flagged set."""
@@ -848,19 +842,6 @@ def dedup_spans(
         dup_table = dup_window_table(docs, w, min_count)
     dup = wins.join(dup_table, "g", "left_semi")
     return _flagged_windows_to_spans(dup, w)
-
-
-def dedup_spans_indexed(
-    docs: DataFrame, w: int = SPAN_W, min_count: int = SPAN_MIN_COUNT
-) -> DataFrame:
-    """dedup_spans with dup_window_table MATERIALIZED first (eager
-    localCheckpoint — GC-reclaimable, same rationale as
-    ann_ivf_topk_indexed): the deployment shape where the digest table is
-    written once and both the batch spans pass and the streaming probe
-    read it, so window digests are computed once per corpus instead of
-    twice per query."""
-    dup_table = dup_window_table(docs, w, min_count).localCheckpoint()
-    return dedup_spans(docs, w, min_count, dup_table=dup_table)
 
 
 def span_windows(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
@@ -893,7 +874,7 @@ def dup_window_table(
 
 def _flagged_windows_to_spans(dup: DataFrame, w: int = SPAN_W) -> DataFrame:
     """(doc_id, pos[, ...]) flagged windows → merged maximal spans via
-    gaps-and-islands (shared by the batch op and the streaming probe)."""
+    gaps-and-islands."""
     from pyspark.sql import Window as W
 
     wdoc = W.partitionBy("doc_id").orderBy("pos")

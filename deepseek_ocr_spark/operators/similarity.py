@@ -9,8 +9,9 @@ computed as an ORDERED left-to-right fold (F.aggregate over zip_with /
 list_sum over an index comprehension), so both engines add the same floats
 in the same order; results are rounded to 4 decimals before comparison.
 
-Embedding-pair operators (ann_ivf_topk_all, semantic_pairs and the
-streaming semantic probe) share ONE pair lane, _bucket_pairs: a salted
+Embedding-pair operators (ann_ivf_topk_all, semantic_pairs and
+semantic_filter_batch, which the streaming semantic probe runs) share ONE
+pair lane, _bucket_pairs: a salted
 per-(centroid_id, salt) Arrow cogroup whose numpy body adds in the same
 fold order and returns a provable superset of the pairs the Spark-side
 round(cos, 4) selection can pick.
@@ -1116,6 +1117,54 @@ def semantic_pairs(
         )
         .filter(F.col("cos") >= threshold)
     )
+
+
+def corpus_semantic_index(
+    emb: DataFrame, n_centroids: int = N_CENTROIDS, dim: int = 64
+) -> DataFrame:
+    """(vec_id, centroid_id, embedding) — the materializable corpus side
+    of semantic_filter_batch (at 100 TB: parquet partitioned by
+    centroid_id, so each probe prunes to its buckets)."""
+    return ivf_assignments(emb, n_centroids, dim).join(emb, "vec_id").select(
+        "vec_id", "centroid_id", "embedding"
+    )
+
+
+def semantic_filter_batch(
+    batch: DataFrame,
+    corpus_index: DataFrame,
+    threshold: float = SEMDEDUP_THRESHOLD,
+    n_centroids: int = N_CENTROIDS,
+    dim: int = 64,
+) -> DataFrame:
+    """New (vec_id, embedding) rows → the subset with no corpus-side
+    semantic duplicate (rounded cosine ≥ threshold within the vector's
+    own centroid bucket of ``corpus_index``), scored by the salted
+    _bucket_pairs cogroup (threshold mode) with the new rows as the
+    replicated side.  A duplicate of a corpus vector always lands in its
+    bucket (the assignment is a pure function of the embedding); rows of
+    ``batch`` are not paired against each other — that is dedup_semantic
+    over the compacted corpus.  Embeddings must have exactly ``dim``
+    elements."""
+    probe = ivf_assignments(batch, n_centroids, dim).join(batch, "vec_id")
+    dup_ids = (
+        _bucket_pairs(
+            probe.select("vec_id", "centroid_id", F.col("embedding").alias("qe")),
+            corpus_index.select(
+                F.col("vec_id").alias("cand_id"),
+                "centroid_id",
+                F.col("embedding").alias("ce"),
+            ),
+            n_centroids,
+            dim,
+            threshold=threshold,
+            replicate="left",
+        )
+        .filter(F.round(F.col("cos"), 4) >= threshold)
+        .select("vec_id")
+        .distinct()
+    )
+    return batch.join(dup_ids, "vec_id", "left_anti")
 
 
 def dedup_semantic(

@@ -731,23 +731,15 @@ def doc_fingerprint(docs: DataFrame) -> DataFrame:
     an order-invariant rolling-hash-style document fingerprint.
 
     ZERO-shuffle formulation: the doc's text is already one row, so the
-    top-8 is ``slice(array_sort(array_distinct(shingles_array)))`` — a pure
-    projection. Memory is bounded by the document itself (the row already
-    holds the text); no explode, no distinct shuffle, no window sort.
+    top-8 is ``slice(array_sort(array_distinct(_sh)))`` over
+    dedup.doc_shingles — a pure projection. Memory is bounded by the
+    document itself (the row already holds the text); no explode, no
+    distinct shuffle, no window sort.
     (History: v1 used collect_list over an exploded shuffle — unbounded agg
     buffers; v2 a row_number window — bounded but still a shuffle + sort.)"""
-    from deepseek_ocr_spark.operators.dedup import (
-        SHINGLE_WIDTH,
-        shingles_array,
-        spread_input,
-    )
+    from deepseek_ocr_spark.operators.dedup import doc_shingles
 
-    # token-count gate, not size(shingles) — see minhash_signatures note
-    has_shingles = F.size(F.split(F.col("text"), " ")) >= SHINGLE_WIDTH
-    sh = (
-        spread_input(docs.filter(has_shingles))
-        .select("doc_id", shingles_array().alias("_sh"))
-    )
+    sh = doc_shingles(docs)
     top8 = F.slice(F.array_sort(F.array_distinct("_sh")), 1, 8)
     return sh.select(
         "doc_id", F.md5(F.array_join(top8, "|")).alias("fingerprint")

@@ -80,41 +80,60 @@ GRAM_STEP = 20  # rotation step of the 3-gram and DSIR bigram digests
 BENCH_MOD = 23  # doc_id % BENCH_MOD == 0 plays the held-out benchmark set
 
 
-def contamination_flags(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFrame:
-    """(doc_id, n_hits, contaminated) for every NON-benchmark doc — the
-    decontamination pass: a training doc sharing any word 3-gram with
-    the held-out benchmark set (here: doc_id % bench_mod == 0) is flagged;
-    n_hits counts DISTINCT shared n-grams.  The benchmark gram set is
-    small by construction → broadcast; the corpus crosses the network
-    once, aggregated per doc.  Every distinct/broadcast/join/agg is keyed
-    on a 60-bit gram DIGEST (digests.window_digests) — md5 cost is linear
-    in TOKENS (hashed once each, never per gram), no gram string is ever
-    materialized, and the exchanged payload is BIGINTs, not ~25-byte
-    strings."""
-    is_bench = F.col("doc_id") % bench_mod == 0
+def _doc_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, g) — each doc's DISTINCT word 3-gram digests
+    (digests.window_digests over the hoisted token-hash column).  r8:
+    within-doc dedup happens IN-ROW (array_distinct, map-side) before the
+    explode, so the per-doc hit agg is a plain count instead of a
+    two-phase countDistinct."""
     hdf = docs.select("doc_id", token_hashes().alias("h"))
-    # r8: within-doc dedup happens IN-ROW (array_distinct over the digest
-    # array, map-side) before the explode, so the per-doc agg is a plain
-    # count instead of a two-phase countDistinct — n_hits counts distinct
-    # shared grams either way (count over per-doc-distinct instances ≡
-    # countDistinct over raw instances), and the bench-side global
-    # distinct is unchanged by per-doc pre-dedup.
-    grams = hdf.select(
+    return hdf.select(
         "doc_id",
         F.explode(
             F.array_distinct(window_digests(F.col("h"), NGRAM_N, GRAM_STEP))
         ).alias("g"),
     )
-    bench_grams = grams.filter(is_bench).select("g").distinct()
-    corpus = docs.filter(~is_bench)
+
+
+def benchmark_gram_table(docs: DataFrame, bench_mod: int = BENCH_MOD) -> DataFrame:
+    """(g) distinct 3-gram digests of the held-out benchmark docs
+    (doc_id % bench_mod == 0) — the one builder of benchmark grams, and
+    the static artifact the streaming decontamination probe reads.
+    Map-side digests, one distinct exchange."""
+    return _doc_grams(docs.filter(F.col("doc_id") % bench_mod == 0)).select("g").distinct()
+
+
+def contamination_flags(
+    docs: DataFrame,
+    bench_mod: int = BENCH_MOD,
+    bench_grams: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_id, n_hits, contaminated) — the decontamination pass: a
+    training doc sharing any word 3-gram with the held-out benchmark set
+    is flagged; n_hits counts DISTINCT shared n-grams.  With
+    ``bench_grams=None`` the benchmark is the docs' own held-out subset
+    (doc_id % bench_mod == 0, built by benchmark_gram_table) and those
+    rows are excluded from the output; a given ``bench_grams`` table
+    (a written benchmark_gram_table) scores EVERY row of ``docs``.
+
+    The benchmark gram set is small by construction → broadcast, probed
+    with a left-semi join (duplicate ``bench_grams`` rows change
+    nothing); the corpus crosses the network once, aggregated per doc.
+    Every distinct/broadcast/join/agg is keyed on a 60-bit gram DIGEST
+    (digests.window_digests) — md5 cost is linear in TOKENS (hashed once
+    each, never per gram), no gram string is ever materialized, and the
+    exchanged payload is BIGINTs, not ~25-byte strings."""
+    if bench_grams is None:
+        bench_grams = benchmark_gram_table(docs, bench_mod)
+        docs = docs.filter(F.col("doc_id") % bench_mod != 0)
     hits = (
-        grams.filter(~is_bench)
-        .join(F.broadcast(bench_grams), "g")
+        _doc_grams(docs)
+        .join(F.broadcast(bench_grams.select("g")), "g", "left_semi")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        corpus.select("doc_id")
+        docs.select("doc_id")
         .join(hits, "doc_id", "left")
         .select(
             "doc_id",

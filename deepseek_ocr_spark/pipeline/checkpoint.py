@@ -29,6 +29,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from deepseek_ocr_spark.config import EngineConfig
+from deepseek_ocr_spark.pipeline.extract_job import extract_documents
+
 
 def extracted_path(base: str) -> str:
     return os.path.join(base, "extracted")
@@ -61,6 +64,22 @@ def commit_run(extracted: DataFrame, base: str, attempt: int = 0) -> None:
         .withColumn("completed_ts", F.current_timestamp())
     )
     out.write.mode("append").parquet(extracted_path(base))
+
+
+def commit_pending(
+    docs: DataFrame, base: str, cfg: EngineConfig, attempt: int = 0
+) -> None:
+    """Extract and commit only the ``docs`` whose urls are not yet in
+    ``extracted`` — the resume step of ``run_extract --resume`` and of
+    every stream micro-batch.  Nothing pending commits nothing, so a
+    no-op resume or a replayed batch appends no empty part file — except
+    on a base with nothing committed yet (``pending_documents`` returns
+    ``docs`` itself), where the first append, even of 0 rows, creates the
+    ``extracted`` table the readers need."""
+    pending = pending_documents(docs, base)
+    if pending is not docs and pending.isEmpty():
+        return
+    commit_run(extract_documents(pending, cfg), base, attempt)
 
 
 def read_extracted_deduped(spark: SparkSession, base: str) -> DataFrame:

@@ -11,8 +11,9 @@ and its already-committed urls anti-join away).
 each micro-batch first anti-joins against the urls already committed to
 ``extracted`` (``checkpoint.pending_documents``), a read of the sink's own
 table that a streaming sink cannot express; the commit itself is one
-append (``checkpoint.commit_run``). The extraction plan itself is stateless
-(scan → one MapInPandas → final rows, no aggregation). Late data /
+append, skipped when nothing is pending (``checkpoint.commit_pending``,
+shared with ``run_extract --resume``). The extraction plan itself is
+stateless (scan → one MapInPandas → final rows, no aggregation). Late data /
 event-time windows are N/A: warc_ts is data, not processing time
 (SURVEY.md §2.9).
 """
@@ -23,8 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from deepseek_ocr_spark.config import DEFAULT_CONFIG, EngineConfig
 from deepseek_ocr_spark.pipeline import checkpoint as ckpt
-from deepseek_ocr_spark.pipeline.extract_job import extract_documents
 from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
+from deepseek_ocr_spark.streaming.probe import run_file_stream
 
 
 def stream_extract(
@@ -37,23 +38,12 @@ def stream_extract(
 ):
     """readStream(parquet dir of documents) → extraction plan per micro-batch
     → checkpointed, idempotent appends. Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent replay: a re-delivered batch anti-joins to nothing
-        pending = ckpt.pending_documents(batch_df, output_base)
-        if pending.isEmpty():
-            return
-        extracted = extract_documents(pending, cfg)
-        ckpt.commit_run(extracted, output_base, attempt=int(batch_id))
+        ckpt.commit_pending(batch_df, output_base, cfg, attempt=int(batch_id))
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark, DOCS_SCHEMA, input_dir, checkpoint_dir, max_files_per_trigger,
+        process_batch,
     )

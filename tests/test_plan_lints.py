@@ -19,7 +19,6 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from deepseek_ocr_spark.operators import similarity as S
-from deepseek_ocr_spark.streaming import semantic_stream as SS
 
 SF_DIR = "/root/testdata/sf0.001"
 QUERIES = entry_mod.queries()
@@ -39,6 +38,33 @@ def test_plan_lints(name, spark):
     plan = _plan(QUERIES[name](spark, SF_DIR))
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+
+
+def _lambda_bodies(plan: str):
+    """Every ``lambdafunction(...)`` expression of a plan string, with
+    balanced parentheses."""
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        yield plan[m.start():i]
+
+
+@pytest.mark.parametrize(
+    "op", ["minhash_signatures", "doc_fingerprint", "ngram_jaccard_adjacent"]
+)
+def test_shingle_transform_slices_a_projected_split(op, spark):
+    """Shingle building splits each text once: the transform lambda slices
+    a projected token column.  A ``split`` inside the lambda re-splits the
+    whole document for every shingle — O(tokens²) per doc."""
+    from deepseek_ocr_spark.operators import dedup, textops
+
+    fn = getattr(dedup, op, None) or getattr(textops, op)
+    plan = fn(spark.read.parquet(f"{SF_DIR}/documents.parquet"))._jdf.queryExecution()
+    bodies = list(_lambda_bodies(plan.optimizedPlan().toString()))
+    assert bodies, op
+    assert not [b for b in bodies if "split(" in b], op
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -99,8 +125,8 @@ def _nodes(node):
 
 
 def _stream_probe(emb, n_centroids):
-    index = SS.corpus_semantic_index(emb.filter("vec_id % 5 != 0"), n_centroids)
-    return SS.semantic_filter_batch(
+    index = S.corpus_semantic_index(emb.filter("vec_id % 5 != 0"), n_centroids)
+    return S.semantic_filter_batch(
         emb.filter("vec_id % 5 = 0"), index, n_centroids=n_centroids
     )
 

@@ -50,3 +50,49 @@ def test_replay_is_idempotent(spark, docs_df, tmp_path):
     assert final.count() == 10
     raw = spark.read.parquet(ckpt.extracted_path(base))
     assert raw.count() == 20  # both attempts landed; reader dedupes
+
+
+def test_noop_resume_commits_nothing(spark, tmp_path):
+    """A second ``run_extract --resume`` over the same corpus has nothing
+    pending: it appends no part file to extracted/, and it still rewrites
+    the derived tables (a crash between the commit and those writes is
+    repaired by a no-op resume)."""
+    import os
+    import subprocess
+    import sys
+
+    out = str(tmp_path / "out")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = root
+
+    def run(*extra):
+        r = subprocess.run(
+            [sys.executable, "-m", "deepseek_ocr_spark.jobs.run_extract",
+             "--output", out, "--n-docs", "6", *extra],
+            capture_output=True, text=True, timeout=240, env=env, cwd=root,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        return r.stdout
+
+    def parts():
+        return sorted(f for f in os.listdir(ckpt.extracted_path(out)) if f.startswith("part-"))
+
+    run()
+    before = parts()
+    assert before
+    os.rename(os.path.join(out, "metrics"), os.path.join(out, "metrics.lost"))
+    stdout = run("--resume", "--attempt", "1")
+    assert parts() == before
+    assert os.path.isdir(os.path.join(out, "metrics"))
+    assert "extracted 6 docs" in stdout
+
+
+def test_first_resume_of_empty_input_creates_extracted(spark, docs_df, tmp_path):
+    """Nothing committed and nothing to extract: the resume step still
+    appends once, so the extracted table exists for the readers."""
+    from deepseek_ocr_spark.config import DEFAULT_CONFIG
+
+    base = str(tmp_path / "out")
+    ckpt.commit_pending(docs_df.limit(0), base, DEFAULT_CONFIG)
+    assert ckpt.read_extracted_deduped(spark, base).count() == 0

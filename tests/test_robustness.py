@@ -54,13 +54,13 @@ def test_short_doc_shingle_ops_no_crash(spark):
     """Docs with <3 tokens must yield zero shingles, not crash (regression:
     sequence(0, size-3) produced a descending array and slice threw)."""
     from deepseek_ocr_spark.operators.dedup import (
-        _shingles, dedup_minhash_pairs, minhash_signatures)
+        dedup_minhash_pairs, doc_shingles, minhash_signatures)
 
     docs = spark.createDataFrame(
         [(1, "one two"), (2, ""), (3, "a b c"), (4, "x")],
         "doc_id long, text string",
     )
-    sh = {(r["doc_id"], r["shingle"]) for r in _shingles(docs).collect()}
+    sh = {(r["doc_id"], s) for r in doc_shingles(docs).collect() for s in r["_sh"]}
     assert sh == {(3, "a b c")}
     assert minhash_signatures(docs).count() == 1  # only the 3-token doc
     dedup_minhash_pairs(docs).count()  # no crash

@@ -201,9 +201,7 @@ def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
     surviving docs across micro-batches equal the batch
     dedup_incremental already_seen=false set on the same split."""
     from deepseek_ocr_spark.operators.dedup import band_table, dedup_incremental
-    from deepseek_ocr_spark.streaming.neardup_stream import (
-        stream_neardup_to_parquet,
-    )
+    from deepseek_ocr_spark.streaming.probe import stream_neardup_to_parquet
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id",
@@ -239,11 +237,11 @@ def test_streaming_contamination_matches_batch(spark, tmp_path):
     """Stream decontamination probe vs the materialized benchmark gram
     table: per-doc flags across micro-batches equal the batch
     contamination_flags rows for the same (non-benchmark) docs."""
-    from deepseek_ocr_spark.operators.traindata import contamination_flags
-    from deepseek_ocr_spark.streaming.contamination_stream import (
+    from deepseek_ocr_spark.operators.traindata import (
         benchmark_gram_table,
-        stream_contamination_to_parquet,
+        contamination_flags,
     )
+    from deepseek_ocr_spark.streaming.probe import stream_contamination_to_parquet
 
     all_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs = all_docs.select(
@@ -287,7 +285,7 @@ def test_streaming_spans_matches_batch(spark, tmp_path):
     windows against the corpus-wide >=2 digest set IS the batch flag
     rule)."""
     from deepseek_ocr_spark.operators.dedup import dedup_spans, dup_window_table
-    from deepseek_ocr_spark.streaming.spans_stream import stream_spans_to_parquet
+    from deepseek_ocr_spark.streaming.probe import stream_spans_to_parquet
 
     all_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs = all_docs.select(
@@ -372,7 +370,6 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
     (256 rows of state, micro-batches folded by max) equals the batch
     register table over the same corpus — hence identical estimates."""
     from deepseek_ocr_spark.operators.corpus_stats import hll_registers
-    from deepseek_ocr_spark.streaming.hll_stream import hll_registers_stream
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     in_dir, ck = (str(tmp_path / d) for d in ("in", "ck"))
@@ -385,7 +382,7 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
         .parquet(in_dir)
     )
     q = (
-        hll_registers_stream(src, col="text")
+        hll_registers(src, "text")
         .writeStream.format("memory")
         .queryName("hll_regs")
         .outputMode("complete")
@@ -413,11 +410,11 @@ def test_streaming_semantic_matches_batch(spark, tmp_path):
     semantic_filter_batch on the same split."""
     import os
 
-    from deepseek_ocr_spark.streaming.semantic_stream import (
+    from deepseek_ocr_spark.operators.similarity import (
         corpus_semantic_index,
         semantic_filter_batch,
-        stream_semantic_to_parquet,
     )
+    from deepseek_ocr_spark.streaming.probe import stream_semantic_to_parquet
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
@@ -459,7 +456,7 @@ def test_streaming_clf_scores_match_batch(spark, tmp_path):
     clf_scores() pass with the same fitted model (bit-exact — the
     hard-sigmoid arithmetic is pure BIGINT)."""
     from deepseek_ocr_spark.operators.traindata import clf_fit, clf_scores
-    from deepseek_ocr_spark.streaming.clf_stream import stream_clf_scores_to_parquet
+    from deepseek_ocr_spark.streaming.probe import stream_clf_scores_to_parquet
 
     all_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs = all_docs.select(
@@ -492,3 +489,92 @@ def test_streaming_clf_scores_match_batch(spark, tmp_path):
         for r in clf_scores(all_docs, fit=fit).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_probe_stream_replay(spark, tmp_path):
+    """Replay through the probe runner (spans probe): rerunning over the
+    same input with the same checkpoint adds nothing; with a fresh
+    checkpoint every batch replays and overwrites its own batch=<id>
+    partition, leaving the same row set and no duplicate rows."""
+    import os
+
+    from deepseek_ocr_spark.operators.dedup import dup_window_table
+    from deepseek_ocr_spark.streaming.probe import stream_spans_to_parquet
+
+    # every doc shares one 10-token boilerplate run, so each has a span
+    boiler = "read the terms of service before you post a comment here"
+    docs = spark.createDataFrame(
+        [(i, f"unique words of doc {i} then {boiler} and doc {i} ends") for i in range(12)],
+        "doc_id long, text string",
+    ).select(
+        "doc_id",
+        F.expr("timestamp'2025-01-01' + make_interval(0,0,0,0,0,0,doc_id)").alias(
+            "warc_ts"
+        ),
+        "text",
+    )
+    in_dir, out_dir, dups = (str(tmp_path / d) for d in ("in", "out", "dups"))
+    dup_window_table(docs).write.parquet(dups)
+    os.makedirs(in_dir)
+    docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(f"{in_dir}/b=0")
+    docs.filter("doc_id % 2 != 0").coalesce(1).write.parquet(f"{in_dir}/b=1")
+
+    def run(ck):
+        stream_spans_to_parquet(
+            spark, in_dir + "/*", dups, out_dir, str(tmp_path / ck)
+        ).awaitTermination(300)
+
+    def state():
+        files = {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(out_dir) for f in fs
+        }
+        rows = [tuple(r) for r in spark.read.parquet(out_dir).collect()]
+        return files, sorted(rows)
+
+    run("ck")
+    files, rows = state()
+    assert sorted(os.listdir(out_dir)) == ["batch=0", "batch=1"]
+    assert {r[0] for r in rows} == set(range(12)) and len(rows) == len(set(rows))
+
+    run("ck")  # same checkpoint: both batches are committed, nothing runs
+    assert state() == (files, rows)
+
+    run("ck_fresh")  # fresh checkpoint: both batches replay and overwrite
+    files2, rows2 = state()
+    assert sorted(os.listdir(out_dir)) == ["batch=0", "batch=1"]
+    assert rows2 == rows
+    assert files2 != files
+
+
+def test_streaming_modules_import_no_private_operator_names():
+    """A stream module composes public batch operators; it never reaches
+    into an operator module's private (_-prefixed) helpers."""
+    import ast
+    import pathlib
+
+    import deepseek_ocr_spark.streaming as streaming
+
+    bad = []
+    for path in sorted(pathlib.Path(streaming.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        op_modules = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or not (node.module or "").startswith(
+                "deepseek_ocr_spark.operators"
+            ):
+                continue
+            for alias in node.names:
+                if alias.name.startswith("_"):
+                    bad.append(f"{path.name}: imports {alias.name}")
+                elif node.module == "deepseek_ocr_spark.operators":
+                    op_modules.add(alias.asname or alias.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in op_modules
+                and node.attr.startswith("_")
+            ):
+                bad.append(f"{path.name}: uses {node.value.id}.{node.attr}")
+    assert bad == []

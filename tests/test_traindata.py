@@ -226,3 +226,27 @@ def test_dsir_scoring_against_fit_reads_no_lang(spark):
         .collect()
     )
     assert a == b and len(a) > 0
+
+
+def test_contamination_against_artifact_ignores_duplicate_rows(spark, td_dir):
+    """Scoring against a given benchmark gram table: every doc is scored,
+    and a table holding each gram twice gives the same n_hits (the hit
+    test is a left-semi probe)."""
+    docs = _docs(spark, td_dir)
+    grams = traindata.benchmark_gram_table(docs)
+    assert grams.count() > 0
+
+    def flags(bench):
+        return {
+            (r["doc_id"], r["n_hits"], r["contaminated"])
+            for r in traindata.contamination_flags(docs, bench_grams=bench).collect()
+        }
+
+    once = flags(grams)
+    assert flags(grams.unionAll(grams)) == once
+    assert {d for d, _, _ in once} == {r[0] for r in ROWS}
+    # the held-out rows hit their own grams; the batch op excludes them
+    assert {(d, n, c) for d, n, c in once if d % traindata.BENCH_MOD != 0} == {
+        (r["doc_id"], r["n_hits"], r["contaminated"])
+        for r in traindata.contamination_flags(docs).collect()
+    }
