@@ -8,8 +8,8 @@ Usage:
 
 Without --input, generates the synthetic corpus (--n-docs) in-session.
 Writes extracted/ (one append per run; also the resume record) +
-metrics/ + lineage/ + layouts/ + layouts_doc/ (per-doc assembled artifact)
-under --output; with --resume, urls already in extracted/ are anti-joined
+metrics/ + lineage/ + region_images/ + layouts/ + layouts_doc/ (per-doc
+assembled artifact) under --output; with --resume, urls already in extracted/ are anti-joined
 away, and nothing pending appends nothing.
 """
 

@@ -122,8 +122,6 @@ _MODE_CODES = {
     "0000010": ("v", -3), "001": ("h", 0), "0001": ("p", 0),
 }
 
-_EOL = "000000000001"
-
 
 def _decode_map(codes: dict[int, str]) -> dict[tuple[int, int], int]:
     out: dict[tuple[int, int], int] = {}

@@ -31,7 +31,6 @@ from deepseek_ocr_spark.kernels.pixels import encode_png
 
 WORLD = 30.0  # viewBox spans -15..15 in both axes
 STROKE = 0.1  # world-unit stroke width (geometry.LINE_FMT / CIRCLE_FMT)
-DOT_R = 0.15  # endpoint-dot radius
 FONT_SIZE = 0.8  # world-unit label height
 
 _LINE_RE = re.compile(

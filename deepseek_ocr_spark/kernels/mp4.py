@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import struct
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts"}
-
 
 def _boxes(data: bytes, start: int, end: int):
     pos = start

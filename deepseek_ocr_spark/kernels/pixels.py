@@ -285,6 +285,34 @@ def _py_unfilter(raw: bytes, w: int, h: int, ch: int) -> bytearray:
     return out
 
 
+# --- sniff-and-decode over the native format matrix -----------------------------
+
+
+def decode_image(data: bytes) -> Image:
+    """Decode one image payload by its signature through the native
+    kernels: PNG, JPEG, GIF, BMP, TIFF and WebP. A corrupt payload raises
+    ValueError. A variant no native kernel decodes (lossy WebP, residual
+    JPEG processes, exotic BMP/TIFF layouts) and an unknown signature
+    raise NotImplementedError. The vision stages drop the row on either;
+    multimodal._real_decode hands NotImplementedError to the PIL gate."""
+    from . import bmp, gif, jpeg, tiff, webp
+
+    data = bytes(data)
+    if data[:8] == PNG_SIG:
+        return decode_png(data)
+    if data[:2] == b"\xff\xd8":
+        return jpeg.decode_jpeg(data)
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return gif.decode_gif(data)
+    if data[:2] == b"BM":
+        return bmp.decode_bmp(data)
+    if data[:4] in (b"II*\x00", b"MM\x00*"):
+        return tiff.decode_tiff(data)
+    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
+        return webp.decode_webp(data)
+    raise NotImplementedError("no native decoder for this image signature")
+
+
 # --- PNG encode -----------------------------------------------------------------
 
 _CHANNELS_CT = {1: 0, 2: 4, 3: 2, 4: 6}

@@ -13,24 +13,29 @@ Three tiers:
 2. ``decode_image_meta`` — the oracle-checkable plumbing exerciser: fake
    dims from the payload md5 (pure hash arithmetic ⇒ exact DuckDB oracle),
    proving schema/batching/partitioning end-to-end.
-3. ``_real_decode`` — PIXEL decode: PNG, JPEG (baseline + progressive),
-   GIF and uncompressed BMP native (stdlib kernels, r5); arithmetic-coded
-   JPEG / RLE BMP / other formats behind the PIL codec gate (``codecs_available``), raising a
-   clear NotImplementedError in this codec-less container; the decoder
-   is injectable so the codec-present path is testable as an interface
+3. ``_real_decode`` — PIXEL decode through ``pixels.decode_image``, the
+   one sniff-and-decode table the vision stages share (PNG, JPEG, GIF,
+   BMP, TIFF, lossless WebP native); variants outside it go behind the
+   PIL codec gate (``codecs_available``), raising a clear
+   NotImplementedError in this codec-less container; the decoder is
+   injectable so the codec-present path is testable as an interface
    (tests/test_jpeg_codec.py, same gate style as the Iceberg jar gate).
+
+Every stage here is a row function under the one Python row stage,
+``rowmap.map_rows``: it sees one row's values and yields zero, one or
+many output tuples.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from deepseek_ocr_spark.kernels import mp4, pixels, wav
+from deepseek_ocr_spark.rowmap import map_rows
 
 # Format matrix (r7): PNG / JPEG (baseline + progressive + arithmetic
 # + lossless + 12-bit + DHP-hierarchical, SOF0/1/2/3/5/9/10) / GIF /
@@ -57,48 +62,18 @@ def codecs_available() -> bool:
 
 
 def _real_decode(data: bytes) -> tuple[int, int, int]:
-    """Real pixel decode: PNG, JPEG (baseline + progressive +
-    arithmetic-coded + lossless, r7), GIF and BMP (1/4/8/24/32-bit,
-    RLE8, RLE4) via the stdlib kernels; hierarchical/12-bit-DCT JPEG and
-    exotic headers via PIL when present, else a clear NotImplementedError
-    (metadata for those still comes from sniff_image_meta)."""
-    from deepseek_ocr_spark.kernels import bmp, gif, jpeg, pixels
-
-    data = bytes(data)
-    if data[:8] == pixels.PNG_SIG:
-        w, h, c, _buf = pixels.decode_png(data)
+    """Real pixel decode → (width, height, channels): the native matrix of
+    ``pixels.decode_image`` (PNG; JPEG baseline, progressive,
+    arithmetic-coded, lossless; GIF; BMP incl. RLE; TIFF; VP8L WebP).
+    What it has no native decoder for (residual JPEG processes, lossy
+    WebP, exotic headers, unknown signatures) goes through PIL when
+    present, else a clear NotImplementedError (metadata for those still
+    comes from sniff_image_meta). A corrupt payload raises ValueError."""
+    try:
+        w, h, c, _buf = pixels.decode_image(data)
         return w, h, c
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        w, h, c, _buf = gif.decode_gif(data)
-        return w, h, c
-    if data[:2] == b"BM":
-        try:
-            w, h, c, _buf = bmp.decode_bmp(data)
-            return w, h, c
-        except NotImplementedError:
-            pass  # RLE / exotic depth — fall through to the PIL gate
-    if data[:2] == b"\xff\xd8":
-        try:
-            w, h, c, _buf = jpeg.decode_jpeg(data)
-            return w, h, c
-        except NotImplementedError:
-            pass  # residual differential / 12-bit-arith processes — PIL gate
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        from deepseek_ocr_spark.kernels import tiff
-
-        try:
-            w, h, c, _buf = tiff.decode_tiff(data)
-            return w, h, c
-        except NotImplementedError:
-            pass  # old-style JPEG / float / exotic layouts — PIL gate
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from deepseek_ocr_spark.kernels import webp
-
-        try:
-            w, h, c, _buf = webp.decode_webp(data)
-            return w, h, c
-        except NotImplementedError:
-            pass  # lossy VP8 — PIL/native gate
+    except NotImplementedError:
+        pass
     try:
         from PIL import Image as _PILImage
     except ImportError as e:
@@ -109,7 +84,7 @@ def _real_decode(data: bytes) -> tuple[int, int, int]:
         ) from e
     import io
 
-    with _PILImage.open(io.BytesIO(data)) as im:
+    with _PILImage.open(io.BytesIO(bytes(data))) as im:
         return im.width, im.height, len(im.getbands())
 
 
@@ -135,8 +110,6 @@ DECODE_SCHEMA = T.StructType(
 
 # --- tier 1: real header-only metadata decode ---------------------------------
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
 
 def sniff_image_meta(data: bytes) -> tuple[str, int, int, int] | None:
     """(format, width, height, orientation) from container headers only.
@@ -146,7 +119,7 @@ def sniff_image_meta(data: bytes) -> tuple[str, int, int, int] | None:
     payloads. Pure byte arithmetic — safe on hostile input (any parse error
     means "not this format", never an exception)."""
     try:
-        if data[:8] == _PNG_SIG and data[12:16] == b"IHDR":
+        if data[:8] == pixels.PNG_SIG and data[12:16] == b"IHDR":
             return (
                 "png",
                 int.from_bytes(data[16:20], "big"),
@@ -280,57 +253,39 @@ IMAGE_META_SCHEMA = T.StructType(
 )
 
 
-def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "format", "img_width", "img_height",
-                               "orientation", "display_width", "display_height")}
-        for doc_id, data in zip(pdf["doc_id"], pdf["payload"]):
-            meta = sniff_image_meta(bytes(data)) if data is not None else None
-            fmt, w, h, o = meta if meta else (None, None, None, None)
-            # EXIF orientations 5-8 transpose the displayed image — the
-            # metadata-level effect of exif_transpose (reference image.py:33)
-            swap = o in (5, 6, 7, 8)
-            out["doc_id"].append(int(doc_id))
-            out["format"].append(fmt)
-            out["img_width"].append(w)
-            out["img_height"].append(h)
-            out["orientation"].append(o)
-            out["display_width"].append(h if swap else w)
-            out["display_height"].append(w if swap else h)
-        yield pd.DataFrame(out)
+def _meta_rows(doc_id, data):
+    meta = sniff_image_meta(bytes(data)) if data is not None else None
+    fmt, w, h, o = meta if meta else (None, None, None, None)
+    # EXIF orientations 5-8 transpose the displayed image — the
+    # metadata-level effect of exif_transpose (reference image.py:33)
+    swap = o in (5, 6, 7, 8)
+    yield int(doc_id), fmt, w, h, o, h if swap else w, w if swap else h
 
 
 def image_meta(images: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """(id, binary payload) → typed image metadata via Arrow-batched
-    mapInPandas — real header parsing, no codec libs. Unrecognized payloads
+    """(id, binary payload) → typed image metadata, one row each under
+    ``map_rows`` — real header parsing, no codec libs. Unrecognized payloads
     yield NULL metadata instead of failing the task (hostile-corpus rule)."""
     src = images.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload"))
-    return src.mapInPandas(_meta_batches, IMAGE_META_SCHEMA)
+    return map_rows(src, _meta_rows, IMAGE_META_SCHEMA)
 
 
 # --- tier 2: oracle-checkable plumbing exerciser -------------------------------
 
 
-def _make_decode_batches(decoder):
-    def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_bytes", "img_width", "img_height", "channels")}
-            for doc_id, data in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(data)
-                w, h, c = decoder(data)
-                rows["doc_id"].append(int(doc_id))
-                rows["n_bytes"].append(len(data))
-                rows["img_width"].append(w)
-                rows["img_height"].append(h)
-                rows["channels"].append(c)
-            yield pd.DataFrame(rows)
+def _decode_rows(decoder):
+    def rows(doc_id, data):
+        data = bytes(data)
+        w, h, c = decoder(data)
+        yield int(doc_id), len(data), w, h, c
 
-    return _decode_batches
+    return rows
 
 
 def decode_image_meta(docs: DataFrame, decoder=None) -> DataFrame:
-    """documents → per-doc fake-image metadata via mapInPandas over a binary
-    payload column (the text bytes stand in for image bytes).
+    """documents → per-doc fake-image metadata, a row function under
+    ``map_rows`` over a binary payload column (the text bytes stand in for
+    image bytes).
 
     ``decoder`` injects the codec (tests exercise the codec-present
     interface with it). The DEFAULT is always ``_fake_decode``: this
@@ -341,7 +296,7 @@ def decode_image_meta(docs: DataFrame, decoder=None) -> DataFrame:
     if decoder is None:
         decoder = _fake_decode
     payloads = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return payloads.mapInPandas(_make_decode_batches(decoder), DECODE_SCHEMA)
+    return map_rows(payloads, _decode_rows(decoder), DECODE_SCHEMA)
 
 
 DECODE_IMAGE_META_SQL = """
@@ -361,7 +316,7 @@ FROM documents
 # step ... make the Spark-side plumbing — schema, partitioning, UDF
 # signature, batch shape — real and tested"). Each op's pixel work is a
 # deterministic hash/arithmetic stand-in (so every op has an EXACT DuckDB
-# oracle); the mapInPandas batch shapes are the real contract:
+# oracle); the row-function fan-out shapes are the real contract:
 #   resize        : N rows → N rows (per-image metadata transform)
 #   features      : N rows → N rows with an array<double> column (encoder shape)
 #   frame_sample  : N rows → ~N*k rows (1→many fan-out inside one batch)
@@ -377,28 +332,20 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def _resize_batches(target: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "src_w", "src_h", "dst_w", "dst_h")}
-            for doc_id, data in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _c = _fake_decode(bytes(data))
-                scale = min(1.0, target / max(w, h))
-                rows["doc_id"].append(int(doc_id))
-                rows["src_w"].append(w)
-                rows["src_h"].append(h)
-                # floor(x+0.5): identical rounding in Spark SQL and DuckDB
-                rows["dst_w"].append(int(w * scale + 0.5))
-                rows["dst_h"].append(int(h * scale + 0.5))
-            yield pd.DataFrame(rows)
+def _resize_rows(target: int):
+    def rows(doc_id, data):
+        w, h, _c = _fake_decode(bytes(data))
+        scale = min(1.0, target / max(w, h))
+        # floor(x+0.5): identical rounding in Spark SQL and DuckDB
+        yield int(doc_id), w, h, int(w * scale + 0.5), int(h * scale + 0.5)
 
-    return gen
+    return rows
 
 
 def resize_meta(docs: DataFrame, target: int = 96) -> DataFrame:
     """Aspect-preserving resize plan per image (downscale-only)."""
     payloads = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return payloads.mapInPandas(_resize_batches(target), RESIZE_SCHEMA)
+    return map_rows(payloads, _resize_rows(target), RESIZE_SCHEMA)
 
 
 def resize_meta_sql(target: int = 96) -> str:
@@ -424,26 +371,19 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _feature_batches(dim: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for doc_id, data in zip(pdf["doc_id"], pdf["payload"]):
-                h = hashlib.md5(bytes(data)).hexdigest()
-                feats.append(
-                    [int(h[2 * j : 2 * j + 2], 16) / 255.0 for j in range(dim)]
-                )
-                ids.append(int(doc_id))
-            yield pd.DataFrame({"doc_id": ids, "features": feats})
+def _feature_rows(dim: int):
+    def rows(doc_id, data):
+        h = hashlib.md5(bytes(data)).hexdigest()
+        yield int(doc_id), [int(h[2 * j : 2 * j + 2], 16) / 255.0 for j in range(dim)]
 
-    return gen
+    return rows
 
 
 def extract_features(docs: DataFrame, dim: int = FEATURES_DIM) -> DataFrame:
     """Per-image feature vector — the encoder-UDF shape (binary in,
     array<double> out, Arrow-batched; a GPU encoder replaces the hash)."""
     payloads = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return payloads.mapInPandas(_feature_batches(dim), FEATURES_SCHEMA)
+    return map_rows(payloads, _feature_rows(dim), FEATURES_SCHEMA)
 
 
 def extract_features_exploded(docs: DataFrame, dim: int = FEATURES_DIM) -> DataFrame:
@@ -484,31 +424,22 @@ FRAMES_SCHEMA = T.StructType(
 FRAME_STRIDE = 200  # fake "bytes per frame"
 
 
-def _frame_batches(stride: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_ix": [], "frame_hash": []}
-            for doc_id, data in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(data)
-                n_frames = max(1, len(data) // stride)
-                for ix in range(n_frames):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_ix"].append(ix)
-                    rows["frame_hash"].append(
-                        hashlib.md5(data + b":" + str(ix).encode()).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+def _frame_rows(stride: int):
+    def rows(doc_id, data):
+        data = bytes(data)
+        for ix in range(max(1, len(data) // stride)):
+            yield int(doc_id), ix, hashlib.md5(data + b":" + str(ix).encode()).hexdigest()
 
-    return gen
+    return rows
 
 
 def frame_sample(docs: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     """Frame sampling plumbing: one 'video' row fans out to its sampled
-    frames INSIDE the Arrow batch (the 1→many mapInPandas shape a real
+    frames INSIDE the Arrow batch (the 1→many row-function shape a real
     ffmpeg-backed sampler uses); frame count is a deterministic function of
     payload length so the fan-out is oracle-checkable."""
     payloads = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return payloads.mapInPandas(_frame_batches(stride), FRAMES_SCHEMA)
+    return map_rows(payloads, _frame_rows(stride), FRAMES_SCHEMA)
 
 
 def frame_sample_sql(stride: int = FRAME_STRIDE) -> str:
@@ -562,28 +493,12 @@ def _synth_samples(text: str):
     return np.array(vals, dtype="<i2")
 
 
-def _audio_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from deepseek_ocr_spark.kernels import wav
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "n_channels", "sample_rate", "bits", "n_samples",
-            "duration_ms",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if text is None:
-                continue
-            data = wav.encode_wav_pcm16(_synth_samples(text), AUDIO_RATE)
-            nch, rate, bits, n_frames, _pcm = wav.parse_wav(data)
-            rows["doc_id"].append(int(doc_id))
-            rows["n_channels"].append(nch)
-            rows["sample_rate"].append(rate)
-            rows["bits"].append(bits)
-            rows["n_samples"].append(n_frames)
-            rows["duration_ms"].append(n_frames * 1000 // rate)
-        yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-            {k: pd.Series([], dtype=object) for k in rows}
-        )
+def _audio_meta_rows(doc_id, text):
+    if text is None:
+        return
+    data = wav.encode_wav_pcm16(_synth_samples(text), AUDIO_RATE)
+    nch, rate, bits, n_frames, _pcm = wav.parse_wav(data)
+    yield int(doc_id), nch, rate, bits, n_frames, n_frames * 1000 // rate
 
 
 def audio_meta(docs: DataFrame) -> DataFrame:
@@ -591,9 +506,7 @@ def audio_meta(docs: DataFrame) -> DataFrame:
     REAL WAV bytes are built per doc and REALLY re-parsed (RIFF walk); the
     oracle re-derives the closed form from length(text).  NULL text has no
     payload to synthesize and is excluded, like the SQL side."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _audio_meta_batches, AUDIO_META_SCHEMA
-    )
+    return map_rows(docs.select("doc_id", "text"), _audio_meta_rows, AUDIO_META_SCHEMA)
 
 
 def audio_meta_sql(table: str = "documents", rate: int = AUDIO_RATE) -> str:
@@ -608,26 +521,16 @@ FROM {table} WHERE text IS NOT NULL
 """
 
 
-def _audio_energy_batches(frame: int):
-    from deepseek_ocr_spark.kernels import wav
+def _audio_energy_rows(frame: int):
+    def rows(doc_id, text):
+        if text is None:
+            return
+        data = wav.encode_wav_pcm16(_synth_samples(text), AUDIO_RATE)
+        nch, _rate, bits, _n, pcm = wav.parse_wav(data)
+        for ix, e in enumerate(wav.frame_energies(pcm, bits, nch, frame)):
+            yield int(doc_id), ix, e
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_ix": [], "energy": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                data = wav.encode_wav_pcm16(_synth_samples(text), AUDIO_RATE)
-                nch, _rate, bits, _n, pcm = wav.parse_wav(data)
-                for ix, e in enumerate(wav.frame_energies(pcm, bits, nch, frame)):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_ix"].append(ix)
-                    rows["energy"].append(e)
-            yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-                {k: pd.Series([], dtype=object) for k in rows}
-            )
-
-    return gen
+    return rows
 
 
 def audio_frame_energy(docs: DataFrame, frame: int = AUDIO_FRAME) -> DataFrame:
@@ -635,8 +538,8 @@ def audio_frame_energy(docs: DataFrame, frame: int = AUDIO_FRAME) -> DataFrame:
     ``frame`` sample-frames over the synthesized-then-parsed PCM; the
     1→many fan-out shape of a real audio featurizer with an exact
     content-sensitive oracle (energy depends on the md5 of the text)."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _audio_energy_batches(frame), AUDIO_ENERGY_SCHEMA
+    return map_rows(
+        docs.select("doc_id", "text"), _audio_energy_rows(frame), AUDIO_ENERGY_SCHEMA
     )
 
 
@@ -672,33 +575,19 @@ VIDEO_META_SCHEMA = T.StructType(
 )
 
 
-def _video_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from deepseek_ocr_spark.kernels import mp4
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "brand", "duration_ms", "n_tracks", "width", "height",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if text is None:
-                continue
-            n = len(text)
-            data = mp4.build_mp4(
-                width=160 + (n % 7) * 16,
-                height=90 + (n % 5) * 18,
-                duration=1000 + 40 * (n % 50),
-                n_audio_tracks=n % 3,
-            )
-            m = mp4.parse_mp4_meta(data)
-            rows["doc_id"].append(int(doc_id))
-            rows["brand"].append(m["brand"])
-            rows["duration_ms"].append(m["duration_ms"])
-            rows["n_tracks"].append(m["n_tracks"])
-            rows["width"].append(m["width"])
-            rows["height"].append(m["height"])
-        yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-            {k: pd.Series([], dtype=object) for k in rows}
-        )
+def _video_meta_rows(doc_id, text):
+    if text is None:
+        return
+    n = len(text)
+    data = mp4.build_mp4(
+        width=160 + (n % 7) * 16,
+        height=90 + (n % 5) * 18,
+        duration=1000 + 40 * (n % 50),
+        n_audio_tracks=n % 3,
+    )
+    m = mp4.parse_mp4_meta(data)
+    yield (int(doc_id), m["brand"], m["duration_ms"], m["n_tracks"],
+           m["width"], m["height"])
 
 
 def video_meta(docs: DataFrame) -> DataFrame:
@@ -706,9 +595,7 @@ def video_meta(docs: DataFrame) -> DataFrame:
     container bytes built per doc (kernels/mp4.py writer) and REALLY
     re-parsed through the box walker; closed-form oracle from
     length(text) (the audio_meta pattern, applied to video)."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _video_meta_batches, VIDEO_META_SCHEMA
-    )
+    return map_rows(docs.select("doc_id", "text"), _video_meta_rows, VIDEO_META_SCHEMA)
 
 
 def video_meta_sql(table: str = "documents") -> str:

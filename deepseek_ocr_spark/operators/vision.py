@@ -1,10 +1,12 @@
 """Vision pixel operators — real pixel dataflow over binary image columns.
 
-These are the Spark-side composites of kernels/pixels.py (pure-stdlib PNG
-codec + PIL-parity geometry): Arrow-batched mapInPandas stages, one output
-row per tile/view/region, hostile-payload rule throughout (an undecodable
-payload contributes zero rows — never a task failure; pair with image_meta
-to quarantine).
+These are the Spark-side composites of kernels/pixels.py (stdlib codecs
++ PIL-parity geometry): row functions under the one Python row stage
+(``rowmap.map_rows``), one output row per tile/view/region. Payloads
+decode through ``pixels.decode_image`` (PNG, JPEG, GIF, BMP, TIFF, WebP)
+with the hostile-payload rule throughout (an undecodable payload
+contributes zero rows — never a task failure; pair with image_meta to
+quarantine).
 
 Reference parity (cited in kernels/pixels.py): the Gundam tile fan-out is
 dynamic_preprocess (image_process.py:44-83) on the tile plan the relational
@@ -22,49 +24,39 @@ the batch — the same 1→many shape as multimodal.frame_sample.
 Throughput note: the stdlib codec (kernels/pixels.py) is the
 zero-dependency sandbox path; per-image decode cost is pure CPU and
 embarrassingly parallel, and a production image swaps a native codec
-(PIL/libjpeg-turbo) into the SAME mapInPandas contract — the plan shape,
+(PIL/libjpeg-turbo) into the SAME row-function contract — the plan shape,
 schemas, and tests are codec-agnostic (the injectable-decoder pattern
 multimodal.decode_image_meta already demonstrates).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import numpy as np
-
 from deepseek_ocr_spark.config import BASE_SIZE, IMAGE_SIZE, MAX_CROPS, MIN_CROPS
 from deepseek_ocr_spark.kernels import pixels
 from deepseek_ocr_spark.kernels.tiling import tile_plan
+from deepseek_ocr_spark.rowmap import map_rows
 
 
-def _decode_image(data: bytes):
-    """Sniff-and-decode a binary image payload through the full native
-    matrix (r5): PNG, JPEG baseline+progressive (the reference's eval
-    corpus IS JPEG, run_dpsk_ocr_eval_batch.py:101-107), GIF and
-    BMP (1/4/8/24/32-bit + RLE8/RLE4).  ValueError on anything
-    undecodable (the hostile-payload drop rule); NotImplementedError
-    (arithmetic JPEG / exotic headers needing a native codec) propagates
-    — the batch lanes DROP it like a hostile payload (one unsupported
-    variant in a crawl must not kill the task), while the encode side
-    stays loud."""
-    from deepseek_ocr_spark.kernels import bmp, gif, jpeg as jpeg_kernel
-
-    data = bytes(data)
-    if data[:8] == pixels.PNG_SIG:
-        return pixels.decode_png(data)
-    if data[:2] == b"\xff\xd8":
-        return jpeg_kernel.decode_jpeg(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return gif.decode_gif(data)
-    if data[:2] == b"BM":
-        return bmp.decode_bmp(data)
-    raise ValueError("not a PNG/JPEG/GIF/BMP payload")
+def _decoded(data, drop_null_images: bool = False):
+    """The shared drop rule of the three stages: a NULL payload (join
+    miss), an undecodable payload (ValueError) and a variant with no native
+    decoder (NotImplementedError — one exotic file in a crawl must not kill
+    the task) all give None; the opt-in all-black skip too."""
+    if data is None:
+        return None
+    try:
+        img = pixels.decode_image(data)
+    except (ValueError, NotImplementedError):
+        return None
+    if drop_null_images and _is_null_image(img):
+        return None
+    return img
 
 
 def _is_null_image(img) -> bool:
@@ -77,6 +69,7 @@ def _is_null_image(img) -> bool:
     expose ``drop_null_images=True`` as an opt-in corpus-hygiene filter
     for pipelines that want all-black scans (dead fax pages) skipped."""
     return not np.frombuffer(img[3], np.uint8).any()
+
 
 GUNDAM_TILES_SCHEMA = T.StructType(
     [
@@ -91,44 +84,21 @@ GUNDAM_TILES_SCHEMA = T.StructType(
 )
 
 
-def _tile_batches(
+def _tile_rows(
     image_size: int, min_crops: int, max_crops: int, drop_null_images: bool = False
 ):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "img_width", "img_height", "nw", "nh", "tile_ix", "tile_png"
-            )}
-            for doc_id, data in zip(pdf["doc_id"], pdf["png"]):
-                if data is None:
-                    continue  # NULL payload (e.g. join miss) — drop, don't crash
-                try:
-                    img = _decode_image(data)
-                except (ValueError, NotImplementedError):
-                    continue  # hostile-payload rule; unsupported variant → drop
-                if drop_null_images and _is_null_image(img):
-                    continue  # opt-in all-black skip (see _is_null_image)
-                w, h = img[0], img[1]
-                nw, nh = tile_plan(
-                    w, h, True, image_size, min_crops, max_crops
-                )
-                if nw == 1 and nh == 1:
-                    continue  # small-page bypass: global view only (O-18)
-                for ix, tile in enumerate(
-                    pixels.dynamic_tiles(img, nw, nh, image_size)
-                ):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["img_width"].append(w)
-                    rows["img_height"].append(h)
-                    rows["nw"].append(nw)
-                    rows["nh"].append(nh)
-                    rows["tile_ix"].append(ix)
-                    rows["tile_png"].append(pixels.encode_png(tile))
-            yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-                {k: pd.Series([], dtype=object) for k in rows}
-            )
+    def rows(doc_id, data):
+        img = _decoded(data, drop_null_images)
+        if img is None:
+            return
+        w, h = img[0], img[1]
+        nw, nh = tile_plan(w, h, True, image_size, min_crops, max_crops)
+        if nw == 1 and nh == 1:
+            return  # small-page bypass: global view only (O-18)
+        for ix, tile in enumerate(pixels.dynamic_tiles(img, nw, nh, image_size)):
+            yield int(doc_id), w, h, nw, nh, ix, pixels.encode_png(tile)
 
-    return gen
+    return rows
 
 
 def gundam_tiles(
@@ -146,8 +116,9 @@ def gundam_tiles(
     ``drop_null_images=True`` opts in to skipping all-black pixmaps
     (corpus hygiene; see _is_null_image for the reference semantics)."""
     src = images.select(F.col(id_col).alias("doc_id"), F.col(png_col).alias("png"))
-    return src.mapInPandas(
-        _tile_batches(image_size, min_crops, max_crops, drop_null_images),
+    return map_rows(
+        src,
+        _tile_rows(image_size, min_crops, max_crops, drop_null_images),
         GUNDAM_TILES_SCHEMA,
     )
 
@@ -162,30 +133,14 @@ GLOBAL_VIEW_SCHEMA = T.StructType(
 )
 
 
-def _view_batches(base_size: int, drop_null_images: bool = False):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "img_width", "img_height", "view_png")}
-            for doc_id, data in zip(pdf["doc_id"], pdf["png"]):
-                if data is None:
-                    continue
-                try:
-                    img = _decode_image(data)
-                except (ValueError, NotImplementedError):
-                    continue  # hostile-payload rule; unsupported variant → drop
-                if drop_null_images and _is_null_image(img):
-                    continue  # opt-in all-black skip (see _is_null_image)
-                rows["doc_id"].append(int(doc_id))
-                rows["img_width"].append(img[0])
-                rows["img_height"].append(img[1])
-                rows["view_png"].append(
-                    pixels.encode_png(pixels.global_view(img, base_size))
-                )
-            yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-                {k: pd.Series([], dtype=object) for k in rows}
-            )
+def _view_rows(base_size: int, drop_null_images: bool = False):
+    def rows(doc_id, data):
+        img = _decoded(data, drop_null_images)
+        if img is not None:
+            view = pixels.global_view(img, base_size)
+            yield int(doc_id), img[0], img[1], pixels.encode_png(view)
 
-    return gen
+    return rows
 
 
 def global_views(
@@ -200,9 +155,7 @@ def global_views(
     centered paste on the normalization-mean gray canvas.
     ``drop_null_images`` as in gundam_tiles."""
     src = images.select(F.col(id_col).alias("doc_id"), F.col(png_col).alias("png"))
-    return src.mapInPandas(
-        _view_batches(base_size, drop_null_images), GLOBAL_VIEW_SCHEMA
-    )
+    return map_rows(src, _view_rows(base_size, drop_null_images), GLOBAL_VIEW_SCHEMA)
 
 
 def encode_jpeg(img, quality: int = 95) -> bytes:
@@ -215,8 +168,6 @@ def encode_jpeg(img, quality: int = 95) -> bytes:
 
     w, h, ch, buf = img
     if ch in (2, 4):  # LA / RGBA → drop alpha
-        import numpy as np
-
         arr = np.frombuffer(bytes(buf), np.uint8).reshape(h, w, ch)
         img = (w, h, ch - 1, arr[..., : ch - 1].tobytes())
     elif ch not in (1, 3):
@@ -224,51 +175,37 @@ def encode_jpeg(img, quality: int = 95) -> bytes:
     return jpeg_kernel.encode_jpeg_baseline(img, quality=quality)
 
 
-def _region_batches(fmt: str = "png"):
+def _region_rows(fmt: str = "png"):
     encode = pixels.encode_png if fmt == "png" else encode_jpeg
-    col = f"crop_{fmt}"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "region_ix": [], col: []}
-            for doc_id, data, rix, x1, y1, x2, y2 in zip(
-                pdf["doc_id"], pdf["png"], pdf["region_ix"],
-                pdf["x1"], pdf["y1"], pdf["x2"], pdf["y2"],
-            ):
-                # Arrow surfaces NULL ints as NaN in pandas — pd.isna
-                # catches both; a NULL payload/box (join miss) drops the
-                # row, never crashes the task
-                if data is None or any(pd.isna(v) for v in (rix, x1, y1, x2, y2)):
-                    continue
-                try:
-                    img = _decode_image(data)
-                except (ValueError, NotImplementedError):
-                    continue  # hostile-payload rule; unsupported variant → drop
-                try:
-                    c = pixels.crop(img, (int(x1), int(y1), int(x2), int(y2)))
-                    # encode INSIDE the guard: encode_jpeg rejects channel
-                    # counts JPEG can't carry (a gray+alpha PNG is a valid
-                    # decode) — that drops the row, not the task. An
-                    # encode-side NotImplementedError still fails loudly.
-                    encoded = encode(c)
-                except ValueError:
-                    continue
-                rows["doc_id"].append(int(doc_id))
-                rows["region_ix"].append(int(rix))
-                rows[col].append(encoded)
-            yield pd.DataFrame(rows) if rows["doc_id"] else pd.DataFrame(
-                {k: pd.Series([], dtype=object) for k in rows}
-            )
+    def rows(doc_id, data, rix, x1, y1, x2, y2):
+        # Arrow surfaces NULL ints as NaN in pandas — pd.isna catches
+        # both; a NULL box (join miss) drops the row, never crashes the task
+        if any(pd.isna(v) for v in (rix, x1, y1, x2, y2)):
+            return
+        img = _decoded(data)
+        if img is None:
+            return
+        try:
+            c = pixels.crop(img, (int(x1), int(y1), int(x2), int(y2)))
+            # encode INSIDE the guard: encode_jpeg rejects channel counts
+            # JPEG can't carry (a gray+alpha PNG is a valid decode) — that
+            # drops the row, not the task. An encode-side
+            # NotImplementedError still fails loudly.
+            encoded = encode(c)
+        except ValueError:
+            return
+        yield int(doc_id), int(rix), encoded
 
-    return gen
+    return rows
 
 
 def region_crops(regions: DataFrame, fmt: str = "png") -> DataFrame:
     """(doc_id, png, region_ix, x1, y1, x2, y2) → real cropped region bytes
     (O-6, run_dpsk_ocr_image.py:107-108). Default PNG (lossless, native
     here — the cropped PIXELS are the contract); ``fmt="jpeg"`` emits the
-    reference's actual sink format behind the PIL codec gate (column
-    ``crop_jpeg``). Input shape = the pixel boxes pipeline/metrics.py
+    reference's actual sink format through the native baseline encoder
+    (column ``crop_jpeg``). Input shape = the pixel boxes pipeline/metrics.py
     derives joined back onto the page image column."""
     if fmt not in ("png", "jpeg"):
         raise ValueError(f"fmt must be 'png' or 'jpeg', got {fmt!r}")
@@ -279,6 +216,5 @@ def region_crops(regions: DataFrame, fmt: str = "png") -> DataFrame:
             T.StructField(f"crop_{fmt}", T.BinaryType()),
         ]
     )
-    return regions.select(
-        "doc_id", "png", "region_ix", "x1", "y1", "x2", "y2"
-    ).mapInPandas(_region_batches(fmt), schema)
+    src = regions.select("doc_id", "png", "region_ix", "x1", "y1", "x2", "y2")
+    return map_rows(src, _region_rows(fmt), schema)

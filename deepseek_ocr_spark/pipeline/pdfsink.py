@@ -11,24 +11,28 @@ and the annotation layer is PDF vector/text operators on top, so the
 artifact is both smaller and higher-fidelity than burning boxes into
 pixels.
 
-Plan shape: one (url, page_no) join of pixmaps to span lists, a
-mapInPandas page stage (decode header / JPEG passthrough), then ONE url
-shuffle collecting the ordered page structs into the per-doc assembly UDF
-— the same doc-level finalize shape as the extraction pipeline itself.
+Plan shape: one (url, page_no) join of pixmaps to span lists, a page
+row function under ``rowmap.map_rows`` (decode header / JPEG
+passthrough), then ONE url shuffle collecting the ordered page structs
+into the per-doc assembly UDF — the same doc-level finalize shape as the
+extraction pipeline itself.
 Colors are the deterministic layouts.PALETTE (reference uses np.random;
 a distributed sink must emit identical bytes on task retry)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import zlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deepseek_ocr_spark.kernels import pdfwrite, pixels
+from deepseek_ocr_spark.kernels import jpeg, pdfwrite, pixels
 from deepseek_ocr_spark.pipeline.layouts import PALETTE
+from deepseek_ocr_spark.rowmap import map_rows
 
 _RGB = [tuple(int(c[i : i + 2], 16) for i in (1, 3, 5)) for c in PALETTE]
 
@@ -55,7 +59,7 @@ PDF_DOC_SCHEMA = T.StructType(
 )
 
 
-def _prep_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _prep_rows(url, page_no, data, boxes_json):
     """Per page: JPEG payloads pass through verbatim; 8-bit gray/RGB PNG
     IDAT streams ALSO pass through verbatim (/FlateDecode + /Predictor 15
     — the PNG analog of the DCTDecode trick; the stream is inflate-
@@ -63,64 +67,37 @@ def _prep_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     (palette/alpha) decode to raw samples for lossless /FlateDecode
     embedding (alpha dropped — PDF image XObjects carry no alpha without
     SMask, out of scope for a debug artifact).  Undecodable payloads drop
-    the page (hostile-payload rule)."""
-    import json
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "url", "page_no", "width", "height", "codec", "image",
-            "n_boxes", "boxes_json",
-        )}
-        for url, page_no, data, boxes_json in zip(
-            pdf["url"], pdf["page_no"], pdf["png"], pdf["boxes_json"]
-        ):
-            if data is None:
-                continue
-            data = bytes(data)
-            try:
-                if data[:2] == b"\xff\xd8":
-                    from deepseek_ocr_spark.kernels import jpeg as jk
-
-                    w, h, _ch, _buf = jk.decode_jpeg(data)
-                    codec, image = "jpeg", data  # verbatim passthrough
-                elif (info := pixels.png_pdf_stream(data)) is not None:
-                    w, h, ch, idat = info
-                    codec = "png-gray" if ch == 1 else "png-rgb"
-                    image = idat  # verbatim passthrough (Predictor 15)
-                else:
-                    import zlib
-
-                    w, h, ch, buf = pixels.decode_png(data)
-                    if ch in (2, 4):  # strip alpha
-                        import numpy as np
-
-                        arr = np.frombuffer(buf, np.uint8).reshape(h, w, ch)
-                        buf = arr[..., : ch - 1].tobytes()
-                        ch -= 1
-                    codec = "flate-gray" if ch == 1 else "flate-rgb"
-                    # compress MAP-SIDE: the per-doc assembly group must
-                    # never hold raw samples (40 raw pages OOM'd a 1 GiB
-                    # driver; PdfPage.precompressed embeds these verbatim)
-                    image = zlib.compress(bytes(buf), 6)
-            except ValueError:
-                continue
-            n_boxes = len(json.loads(boxes_json)) if boxes_json else 0
-            rows["url"].append(url)
-            rows["page_no"].append(int(page_no))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["codec"].append(codec)
-            rows["image"].append(image)
-            rows["n_boxes"].append(n_boxes)
-            rows["boxes_json"].append(boxes_json or "[]")
-        yield pd.DataFrame(rows) if rows["url"] else pd.DataFrame(
-            {k: pd.Series([], dtype=object) for k in rows}
-        )
+    the page (hostile-payload rule); a JPEG variant with no native decoder
+    (NotImplementedError) fails the task."""
+    if data is None:
+        return
+    data = bytes(data)
+    try:
+        if data[:2] == b"\xff\xd8":
+            w, h, _ch, _buf = jpeg.decode_jpeg(data)
+            codec, image = "jpeg", data  # verbatim passthrough
+        elif (info := pixels.png_pdf_stream(data)) is not None:
+            w, h, ch, idat = info
+            codec = "png-gray" if ch == 1 else "png-rgb"
+            image = idat  # verbatim passthrough (Predictor 15)
+        else:
+            w, h, ch, buf = pixels.decode_png(data)
+            if ch in (2, 4):  # strip alpha
+                arr = np.frombuffer(buf, np.uint8).reshape(h, w, ch)
+                buf = arr[..., : ch - 1].tobytes()
+                ch -= 1
+            codec = "flate-gray" if ch == 1 else "flate-rgb"
+            # compress MAP-SIDE: the per-doc assembly group must
+            # never hold raw samples (40 raw pages OOM'd a 1 GiB
+            # driver; PdfPage.precompressed embeds these verbatim)
+            image = zlib.compress(bytes(buf), 6)
+    except ValueError:
+        return
+    n_boxes = len(json.loads(boxes_json)) if boxes_json else 0
+    yield url, int(page_no), w, h, codec, image, n_boxes, boxes_json or "[]"
 
 
 def _assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    import json
-
     pdf = pdf.sort_values("page_no")
     pages = []
     n_boxes = 0
@@ -157,53 +134,38 @@ _PIXMAP_SCHEMA = T.StructType(
 )
 
 
+def _pixmap_rows(url, page_no, w, h):
+    w, h = int(w), int(h)
+    seed = (zlib.crc32(str(url).encode()) ^ (int(page_no) * 0x9E3779B1)) & 0xFFFFFFFF
+    ys = np.arange(h, dtype=np.uint32)[:, None]
+    xs = np.arange(w, dtype=np.uint32)[None, :]
+    # LOW-frequency 16px block pattern on purpose: a noise pattern is
+    # deflate-incompressible (~3 MB/page), and the per-doc binder holds a
+    # whole document's pages in one group — 40 noise pages OOM'd a 1 GiB
+    # driver.  Blocks compress ~100x and remain per-(url,page) unique.
+    bx, by = xs >> 4, ys >> 4
+    planes = [
+        ((bx * 7 + by * 13 + seed) & 0xFF).astype(np.uint8),
+        ((bx * 3 + by * 5 + (seed >> 8)) & 0xFF).astype(np.uint8),
+        ((bx + by + (seed >> 16)) & 0xFF).astype(np.uint8),
+    ]
+    img = (w, h, 3, np.stack(planes, axis=-1).tobytes())
+    yield url, int(page_no), pixels.encode_png(img)
+
+
 def synthetic_page_pixmaps(extracted: DataFrame) -> DataFrame:
     """(url, page_no, png) deterministic pixmaps at each page's REAL dims —
     the sandbox stand-in feeding `annotated_pdf_docs` when no rasterized
     pages exist (same philosophy as kernels/pdfraster.rasterize_page: a
     real deployment injects actual page renders; the geometry and plan
     shape are identical either way)."""
-    import zlib
-
-    import numpy as np
-
     pages = extracted.select("url", F.explode("page_dims").alias("pd")).select(
         "url",
         F.col("pd.page_no").alias("page_no"),
         F.col("pd.width").alias("width"),
         F.col("pd.height").alias("height"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "page_no": [], "png": []}
-            for url, page_no, w, h in zip(
-                pdf["url"], pdf["page_no"], pdf["width"], pdf["height"]
-            ):
-                w, h = int(w), int(h)
-                seed = (zlib.crc32(str(url).encode()) ^ (int(page_no) * 0x9E3779B1)) & 0xFFFFFFFF
-                ys = np.arange(h, dtype=np.uint32)[:, None]
-                xs = np.arange(w, dtype=np.uint32)[None, :]
-                # LOW-frequency 16px block pattern on purpose: a noise
-                # pattern is deflate-incompressible (~3 MB/page), and the
-                # per-doc binder holds a whole document's pages in one
-                # group — 40 noise pages OOM'd a 1 GiB driver.  Blocks
-                # compress ~100x and remain per-(url,page) unique.
-                bx, by = xs >> 4, ys >> 4
-                planes = [
-                    ((bx * 7 + by * 13 + seed) & 0xFF).astype(np.uint8),
-                    ((bx * 3 + by * 5 + (seed >> 8)) & 0xFF).astype(np.uint8),
-                    ((bx + by + (seed >> 16)) & 0xFF).astype(np.uint8),
-                ]
-                img = (w, h, 3, np.stack(planes, axis=-1).tobytes())
-                rows["url"].append(url)
-                rows["page_no"].append(int(page_no))
-                rows["png"].append(pixels.encode_png(img))
-            yield pd.DataFrame(rows) if rows["url"] else pd.DataFrame(
-                {k: pd.Series([], dtype=object) for k in rows}
-            )
-
-    return pages.mapInPandas(gen, _PIXMAP_SCHEMA)
+    return map_rows(pages, _pixmap_rows, _PIXMAP_SCHEMA)
 
 
 def annotated_pdf_docs(pages_df: DataFrame, extracted: DataFrame) -> DataFrame:
@@ -230,11 +192,11 @@ def annotated_pdf_docs(pages_df: DataFrame, extracted: DataFrame) -> DataFrame:
         .groupBy("url", "page_no")
         .agg(F.to_json(F.array_sort(F.collect_list("box"))).alias("boxes_json"))
     )
-    prepped = (
+    joined = (
         pages_df.join(spans, ["url", "page_no"], "left")
         .select("url", "page_no", "png", "boxes_json")
-        .mapInPandas(_prep_batches, _PAGE_SCHEMA)
     )
+    prepped = map_rows(joined, _prep_rows, _PAGE_SCHEMA)
     # explicit REPARTITION_BY_NUM before the per-doc Python binder (the
     # CLAUDE.md r2 rule): the url exchange is byte-light relative to the
     # binder's compute, and AQE's byte-based coalescing was folding the

@@ -13,21 +13,21 @@ downstream extraction pipeline computes real tile plans and vision-token
 budgets for scanned pages, and their text is the documented OCR
 substitution output.
 
-Arrow-batched mapInPandas, one output row per page (1→many fan-out, same
-shape as multimodal.frame_sample); hostile payloads yield zero pages,
-never a task failure.
+Both stages are row functions under the one Python row stage
+(``rowmap.map_rows``): ``pdf_pages`` fans one file out to one row per
+page (the 1→many shape of multimodal.frame_sample), and hostile payloads
+yield zero pages, never a task failure; ``load_documents_pdf`` maps one
+file to one document row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepseek_ocr_spark.kernels.pdftext import extract_pdf_text
+from deepseek_ocr_spark.rowmap import map_rows
 from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 PDF_PAGES_SCHEMA = T.StructType(
@@ -40,20 +40,11 @@ PDF_PAGES_SCHEMA = T.StructType(
 )
 
 
-def _page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf_batch in batches:
-        rows = {"url": [], "page_no": [], "text": [], "route": []}
-        for url, data in zip(pdf_batch["url"], pdf_batch["pdf"]):
-            if data is None:
-                continue
-            for ix, text in enumerate(extract_pdf_text(bytes(data))):
-                rows["url"].append(url)
-                rows["page_no"].append(ix)
-                rows["text"].append(text)
-                rows["route"].append("text" if text else "ocr")
-        yield pd.DataFrame(rows) if rows["url"] else pd.DataFrame(
-            {k: pd.Series([], dtype=object) for k in rows}
-        )
+def _page_rows(url, data):
+    if data is None:
+        return
+    for ix, text in enumerate(extract_pdf_text(bytes(data))):
+        yield url, ix, text, "text" if text else "ocr"
 
 
 def pdf_pages(docs: DataFrame, url_col: str = "url", pdf_col: str = "pdf") -> DataFrame:
@@ -61,7 +52,7 @@ def pdf_pages(docs: DataFrame, url_col: str = "url", pdf_col: str = "pdf") -> Da
     and the triage ``route`` ('text' = has a text layer, 'ocr' = empty →
     rasterize+OCR candidate)."""
     src = docs.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("pdf"))
-    return src.mapInPandas(_page_batches, PDF_PAGES_SCHEMA)
+    return map_rows(src, _page_rows, PDF_PAGES_SCHEMA)
 
 
 def _escape_html(s: str) -> str:
@@ -114,21 +105,13 @@ def _route_pages(data: bytes | None, ocr_route: bool) -> list[tuple[str, tuple[i
     return out
 
 
-def _doc_batches(ocr_route: bool):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"url": [], "warc_ts": [], "html": [], "text": []}
-            for url, ts, data in zip(b["url"], b["warc_ts"], b["pdf"]):
-                pages = _route_pages(data, ocr_route)
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                rows["html"].append(_pages_to_html(pages))
-                rows["text"].append("\n\n".join(t for t, _d in pages))
-            out = pd.DataFrame(rows)
-            out["lang"] = None
-            yield out
+def _doc_rows(ocr_route: bool):
+    def rows(url, ts, data):
+        pages = _route_pages(data, ocr_route)
+        text = "\n\n".join(t for t, _d in pages)
+        yield url, ts, _pages_to_html(pages), text, None  # lang unknown
 
-    return gen
+    return rows
 
 
 def load_documents_pdf(
@@ -151,4 +134,4 @@ def load_documents_pdf(
                 F.col("modificationTime").alias("warc_ts"),
                 F.col("content").alias("pdf"))
     )
-    return raw.mapInPandas(_doc_batches(ocr_route), DOCS_SCHEMA)
+    return map_rows(raw, _doc_rows(ocr_route), DOCS_SCHEMA)

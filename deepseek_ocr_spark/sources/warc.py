@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _REC_SEP = "\r\n\r\nWARC/1.0\r\n"
-_HDR_BODY_SEP = "\r\n\r\n"
 
 
 def load_documents_warc(spark: SparkSession, path: str, glob: str = "*.warc") -> DataFrame:

@@ -182,6 +182,31 @@ def test_png_interlaced_rejected():
         pixels.decode_png(data)
 
 
+def test_decode_image_hostile_tails_raise_contract_errors_only():
+    """Random bytes after each native signature (PNG, JPEG, GIF, BMP,
+    both TIFF byte orders, RIFF/WEBP) either decode to a well-formed Image
+    or raise ValueError / NotImplementedError — the only exceptions the
+    vision stages' drop rule catches. Anything else fails the task."""
+    from hypothesis import given, settings, strategies as st
+
+    prefixes = st.sampled_from(
+        [pixels.PNG_SIG, b"\xff\xd8", b"GIF89a", b"BM", b"II*\x00", b"MM\x00*"]
+    ) | st.binary(min_size=4, max_size=4).map(lambda n: b"RIFF" + n + b"WEBP")
+
+    @settings(max_examples=1000, deadline=None)
+    @given(prefix=prefixes, tail=st.binary(max_size=512))
+    def prop(prefix, tail):
+        try:
+            w, h, ch, buf = pixels.decode_image(prefix + tail)
+        except (ValueError, NotImplementedError):
+            return
+        assert len(buf) == w * h * ch
+
+    prop()
+    with pytest.raises(NotImplementedError):
+        pixels.decode_image(b"unknown signature")
+
+
 # --- geometry -------------------------------------------------------------------
 
 

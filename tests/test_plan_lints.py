@@ -212,3 +212,30 @@ def test_lm_scores_tokenize_and_shuffle_each_table_once(op, spark):
     assert names.count("Generate") == 2, names
     assert names.count("ReusedExchange") == 2, names
     assert names.count("Exchange") == {"lm_bigram_score": 6, "lm_ppl_buckets": 7}[op], names
+
+
+def test_mapinpandas_only_in_the_row_shell():
+    """A per-row Python stage is a row function under rowmap.map_rows.
+    Only the shell itself, the fused extraction stages (extract_job) and
+    the column-vectorized html renderer (entry_queries.to_html) call
+    mapInPandas directly; a new hand-written Arrow-batch loop shows up
+    here as an extra call site."""
+    import ast
+    import pathlib
+
+    import deepseek_ocr_spark
+
+    allowed = {"rowmap.py", "pipeline/extract_job.py", "entry_queries.py"}
+    root = pathlib.Path(deepseek_ocr_spark.__file__).parent
+    extra = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"
+                and rel not in allowed
+            ):
+                extra.append(f"{rel}:{node.lineno}")
+    assert extra == []

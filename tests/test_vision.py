@@ -213,3 +213,32 @@ def test_tiles_accept_gif_and_bmp_input(spark):
         expected = pixels.dynamic_tiles(img, nw, nh, SZ)
         for row, exp in zip(rows, expected):
             assert pixels.decode_png(bytes(row["tile_png"])) == exp
+
+
+def test_tiff_and_webp_payloads_match_png(spark):
+    """TIFF and lossless WebP decode through the same table as PNG, so the
+    same pixels give the same tile and view rows in every container."""
+    import numpy as np
+
+    from tests.test_tiff import build_tiff, gray_tags
+    from tests.test_webp_kernel import ref_encode_vp8l
+
+    img = gradient(130, 70)
+    w, h, _ch, buf = img
+    tiff = build_tiff(
+        gray_tags(w, h, h, over={258: (3, [8, 8, 8]), 262: (3, [2]), 277: (3, [3])}),
+        [buf],
+    )
+    rgba = np.full((h, w, 4), 255, np.uint8)
+    rgba[:, :, :3] = np.frombuffer(buf, np.uint8).reshape(h, w, 3)
+    webp = ref_encode_vp8l(rgba)
+    df = spark.createDataFrame(
+        [(1, pixels.encode_png(img)), (2, tiff), (3, webp)], "doc_id LONG, png BINARY"
+    )
+    for out in (gundam_tiles(df, image_size=SZ), global_views(df, base_size=SZ)):
+        by_doc = {}
+        for r in out.collect():
+            by_doc.setdefault(r["doc_id"], []).append(tuple(r)[1:])
+        rows = {doc_id: sorted(v) for doc_id, v in by_doc.items()}
+        assert set(rows) == {1, 2, 3}
+        assert rows[2] == rows[1] and rows[3] == rows[1]
