@@ -18,7 +18,7 @@ import struct
 
 import numpy as np
 
-from .pixels import Image
+from .pixels import MAX_PIXELS, Image
 
 
 def decode_bmp(data: bytes) -> Image:
@@ -133,7 +133,7 @@ def _decode_checked(data: bytes) -> Image:
         raise ValueError(f"bad BMP dims {width}x{height}")
     top_down = height < 0
     height = abs(height)
-    if width * height > 1 << 28:
+    if width * height > MAX_PIXELS:
         raise ValueError("BMP dims exceed sanity bound")
 
     def load_palette(default_n: int) -> np.ndarray:

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .pixels import MAX_PIXELS
+
 # --- T.4 §4.1 run-length code tables (terminating + make-up) -----------------
 # {run: bitstring}; transcribed from the published tables.  The encoder
 # twin in tests/test_fax.py carries an independent transcription — any
@@ -258,7 +260,7 @@ def decode_g4(data: bytes, width: int, height: int) -> np.ndarray:
     """T.6 (Group 4 MMR): every row 2-D against the previous, imaginary
     all-white first reference, no EOLs (EOFB tolerated by stopping at
     ``height`` rows).  Returns (h, w) uint8 ink (1 = black)."""
-    if width <= 0 or height <= 0 or width * height > 1 << 28:
+    if width <= 0 or height <= 0 or width * height > MAX_PIXELS:
         raise ValueError("implausible fax dims")
     bits = _Bits(data)
     ref: list[int] = []
@@ -273,7 +275,7 @@ def decode_g4(data: bytes, width: int, height: int) -> np.ndarray:
 def decode_mh(data: bytes, width: int, height: int) -> np.ndarray:
     """TIFF Compression 2: T.4 1-D Modified Huffman, no EOLs, every row
     starting on a byte boundary."""
-    if width <= 0 or height <= 0 or width * height > 1 << 28:
+    if width <= 0 or height <= 0 or width * height > MAX_PIXELS:
         raise ValueError("implausible fax dims")
     bits = _Bits(data)
     rows = []
@@ -303,7 +305,7 @@ def decode_g3(
     """TIFF Compression 3 (T.4): EOL before every row; under
     ``two_dim`` (T4Options bit 0) each EOL carries a tag bit selecting
     1-D (1) or 2-D (0) coding for the following row."""
-    if width <= 0 or height <= 0 or width * height > 1 << 28:
+    if width <= 0 or height <= 0 or width * height > MAX_PIXELS:
         raise ValueError("implausible fax dims")
     bits = _Bits(data)
     rows = []

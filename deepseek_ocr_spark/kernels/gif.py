@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import struct
 
-from .pixels import Image
+from .pixels import MAX_PIXELS, Image
 
 
 def _color_table(data: bytes, pos: int, flags: int) -> tuple[list, int]:
@@ -134,10 +134,10 @@ def _decode_gif_checked(data: bytes) -> Image:
     sw, sh, flags, bg, _ar = struct.unpack("<HHBBB", data[6:13])
     if sw == 0 or sh == 0:
         raise ValueError("zero-size GIF screen")
-    # same 1<<28-pixel sanity bound as decode_bmp: a ~40-byte header must
+    # the shared pixels.MAX_PIXELS sanity bound: a ~40-byte header must
     # not be able to demand a multi-GB allocation (MemoryError escapes the
     # ValueError-only hostile-input contract)
-    if sw * sh > 1 << 28:
+    if sw * sh > MAX_PIXELS:
         raise ValueError("GIF logical screen exceeds sanity bound")
     gct, pos = _color_table(data, 13, flags)
     while pos < len(data):

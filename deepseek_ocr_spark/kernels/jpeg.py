@@ -63,7 +63,7 @@ import struct
 import numpy as np
 
 from . import jparith
-from .pixels import Image
+from .pixels import MAX_PIXELS, Image
 
 # --- shared constants --------------------------------------------------------
 
@@ -477,10 +477,10 @@ def _decode_jpeg_checked(data: bytes, deep: bool = False):
                 # only (the BITS_IN_JSAMPLE=12 libjpeg build's surface)
                 raise NotImplementedError(f"{prec}-bit JPEG not supported")
             height, width = struct.unpack(">HH", seg[1:5])
-            # 1<<28-pixel sanity bound (shared with decode_bmp/decode_gif):
+            # pixels.MAX_PIXELS sanity bound (shared with BMP/GIF/PNG):
             # without it a ~100-byte SOF can demand tens of GB of
             # coefficient storage before any entropy data is read
-            if width * height > 1 << 28:
+            if width * height > MAX_PIXELS:
                 raise ValueError("JPEG dims exceed sanity bound")
             ncomp = seg[5]
             if ncomp not in (1, 3):
@@ -1240,7 +1240,7 @@ def _decode_lossless_checked(data: bytes) -> tuple[int, int, int, int, np.ndarra
             if not 2 <= prec <= 16:
                 raise ValueError(f"bad lossless precision {prec}")
             height, width = struct.unpack(">HH", seg[1:5])
-            if width * height > 1 << 28:
+            if width * height > MAX_PIXELS:
                 raise ValueError("JPEG dims exceed sanity bound")
             if not width or not height:
                 raise ValueError("zero-dimension lossless JPEG")
@@ -1478,7 +1478,7 @@ def _decode_hierarchical(data: bytes, deep: bool = False):
             if prec not in (8, 12):
                 raise NotImplementedError(f"{prec}-bit hierarchical JPEG")
             full_h, full_w = struct.unpack(">HH", seg[1:5])
-            if full_w * full_h > 1 << 28 or not full_w or not full_h:
+            if full_w * full_h > MAX_PIXELS or not full_w or not full_h:
                 raise ValueError("bad hierarchical dims")
             ncomp = seg[5]
             if ncomp not in (1, 3):
@@ -1522,7 +1522,7 @@ def _decode_hierarchical(data: bytes, deep: bool = False):
                 raise ValueError("frame precision differs from DHP")
             differential = marker == 0xC5
             frame_h, frame_w = struct.unpack(">HH", seg[1:5])
-            if frame_w * frame_h > 1 << 28 or not frame_w or not frame_h:
+            if frame_w * frame_h > MAX_PIXELS or not frame_w or not frame_h:
                 raise ValueError("bad hierarchical frame dims")
             frame = []
             for c in range(seg[5]):

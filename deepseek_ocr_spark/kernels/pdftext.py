@@ -1,10 +1,12 @@
-"""Minimal pure-stdlib PDF text extraction (north_rule: "PDF/layout parse").
+"""Minimal PDF text extraction (north_rule: "PDF/layout parse").
 
 The reference rasterizes PDF pages and OCRs them (run_dpsk_ocr_pdf.py via
 fitz + the vision model); this module is the complementary TEXT-LAYER path
 a training-data pipeline runs first — extract embedded text where it
 exists, rasterize+OCR only the rest. Like kernels/pixels.py, it is an
-honest documented SUBSET with zero native deps:
+honest documented SUBSET with no codec library: stdlib byte scanning and
+zlib, plus the PNG row unfilter of kernels/pixels.py for predicted xref
+streams:
 
   SUPPORTED: classic (non-stream) xref PDFs; PDF 1.5+ cross-reference
   STREAMS (ISO 32000 §7.5.8: /Type/XRef with /W field widths, /Index
@@ -32,12 +34,20 @@ honest documented SUBSET with zero native deps:
 
 Determinism: pure byte scanning + zlib; identical output on every
 executor, so the extracted text column is safe to hash for dedup.
+
+The fixture writers (``make_simple_pdf``, ``make_modern_pdf``,
+``make_cid_pdf``, ``make_encrypted_pdf``) live at the end of this module,
+next to the parser they exercise; the bytes they write are laid out by
+kernels/pdfwrite.py, the package's one PDF byte layer.
 """
 
 from __future__ import annotations
 
 import re
+import struct
 import zlib
+
+from . import pdfwrite, pixels
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
@@ -112,42 +122,6 @@ _OBJSTM_TYPE_RE = re.compile(rb"/Type\s*/ObjStm\b")
 _N_RE = re.compile(rb"/N\s+(\d+)")
 _FIRST_RE = re.compile(rb"/First\s+(\d+)")
 _INT_RE = re.compile(rb"\d+")
-
-
-def _png_unpredict(raw: bytes, columns: int) -> bytes:
-    """Undo PNG row prediction (/Predictor ≥ 10) on an xref stream: each
-    row is a filter byte + `columns` bytes, bpp = 1 (/Colors 1, /BPC 8 —
-    the xref-stream defaults). Rows are ~5 bytes; pure Python is fine."""
-    if columns <= 0:
-        return b""
-    rowlen = columns + 1
-    out = bytearray()
-    prev = bytearray(columns)
-    for r in range(0, len(raw) - rowlen + 1, rowlen):
-        ft = raw[r]
-        row = bytearray(raw[r + 1 : r + rowlen])
-        if ft == 1:  # Sub
-            for i in range(1, columns):
-                row[i] = (row[i] + row[i - 1]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(columns):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(columns):
-                left = row[i - 1] if i else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(columns):
-                a = row[i - 1] if i else 0
-                b = prev[i]
-                c = prev[i - 1] if i else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        out += row
-        prev = row
-    return bytes(out)
 
 
 def _balanced_dict_end(data: bytes, i: int) -> int:
@@ -267,7 +241,10 @@ def _xref_stream_entries(data: bytes) -> dict[int, tuple] | None:
             cm = _COLUMNS_RE.search(head)
             w = [int(wm.group(k)) for k in (1, 2, 3)]
             cols = int(cm.group(1)) if cm else sum(w)
-            stream = _png_unpredict(stream, cols)
+            # PNG row prediction, 1 byte per pixel (/Colors 1, /BPC 8 —
+            # the xref-stream defaults); a trailing partial row is dropped
+            h = len(stream) // (cols + 1)
+            stream = pixels._unfilter(stream[: h * (cols + 1)], cols, h, 1)
         w0, w1, w2 = (int(wm.group(k)) for k in (1, 2, 3))
         rowlen = w0 + w1 + w2
         if rowlen <= 0:
@@ -745,66 +722,56 @@ def extract_pdf_text(data: bytes) -> list[str]:
         return []
 
 
-# --- fixture writer (tests + datagen; kept here so writer and parser ----------
-# --- stay in one reviewable module) -------------------------------------------
+# --- fixture writers (tests + perfbench inputs) -------------------------------
+# They stay next to the parser they feed, so a reader sees what each parse
+# lane is exercised with; the byte layout (object framing, streams, the
+# xref table and trailer, the text object) is kernels/pdfwrite.py's.
+
+
+def _text_page_tree(
+    pages: list[str], compress: bool, enc_stream=lambda num, data: data
+) -> dict[int, bytes]:
+    """The fixtures' text-page objects: 1 catalog, 2 pages node, page i →
+    dict 3+2i and content stream 4+2i (one literal ``Tj`` per line, Flate
+    when ``compress``). ``enc_stream(num, data)`` encrypts the stored
+    stream bytes."""
+    n_pages = len(pages)
+    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode(),
+    }
+    for i, text in enumerate(pages):
+        content_num = 4 + 2 * i
+        objs[3 + 2 * i] = (
+            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            f"/Contents {content_num} 0 R >>".encode()
+        )
+        ops = pdfwrite.text_object(
+            [f"({pdfwrite.escape(line)})" for line in text.split("\n")]
+        )
+        if compress:
+            objs[content_num] = pdfwrite.stream_obj(
+                enc_stream(content_num, zlib.compress(ops)),
+                after=b" /Filter /FlateDecode",
+            )
+        else:
+            objs[content_num] = pdfwrite.stream_obj(enc_stream(content_num, ops))
+    return objs
+
+
+def _encrypt_entries(enc_num: int, id0: bytes) -> str:
+    """The trailer (or XRef-stream dict) entries naming the Encrypt dict
+    and the file ID."""
+    hex_id = id0.hex().upper()
+    return f"/Encrypt {enc_num} 0 R /ID [<{hex_id}> <{hex_id}>] "
 
 
 def make_simple_pdf(pages: list[str], compress: bool = True) -> bytes:
     """A minimal valid PDF with one content stream per page — Flate or raw.
     Text is emitted line-by-line with Tj + Td so the parser's newline rule
     round-trips."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-    objs: list[bytes] = []
-    n_pages = len(pages)
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    )
-    for i, text in enumerate(pages):
-        content_ref = 4 + 2 * i
-        objs.append(
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Contents {content_ref} 0 R >>".encode()
-        )
-        lines = text.split("\n")
-        ops = ["BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                ops.append("0 -14 Td")
-            ops.append(f"({esc(line)}) Tj")
-        ops.append("ET")
-        stream = " ".join(ops).encode("latin-1")
-        if compress:
-            comp = zlib.compress(stream)
-            objs.append(
-                f"<< /Length {len(comp)} /Filter /FlateDecode >>".encode()
-                + b"\nstream\n" + comp + b"\nendstream"
-            )
-        else:
-            objs.append(
-                f"<< /Length {len(stream)} >>".encode()
-                + b"\nstream\n" + stream + b"\nendstream"
-            )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for num, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+    return pdfwrite.serialize(_text_page_tree(pages, compress))
 
 
 def make_modern_pdf(
@@ -822,13 +789,10 @@ def make_modern_pdf(
     top-level object — the real-world modern encrypted shape."""
     import hashlib
 
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
     n_pages = len(pages)
-    # object numbering: 1 catalog, 2 pages node, page i → dict 3+2i (in
-    # the ObjStm), content 4+2i (top-level); then ObjStm, [Encrypt,] then
-    # XRef stream
+    # object numbering: the text-page tree (catalog, pages node and page
+    # dicts in the ObjStm, content streams top-level); then ObjStm,
+    # [Encrypt,] then XRef stream
     objstm_num = 3 + 2 * n_pages
     enc_num = objstm_num + 1 if encrypt_r is not None else None
     xref_num = objstm_num + (2 if encrypt_r is not None else 1)
@@ -840,41 +804,9 @@ def make_modern_pdf(
     else:
         enc_dict, enc_stream = b"", lambda num, plain: plain
 
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    compressed_members: list[tuple[int, bytes]] = [
-        (1, b"<< /Type /Catalog /Pages 2 0 R >>"),
-        (2, f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()),
-    ]
-    top_level: dict[int, bytes] = {}
-    for i, text in enumerate(pages):
-        content_num = 4 + 2 * i
-        compressed_members.append(
-            (
-                3 + 2 * i,
-                f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                f"/Contents {content_num} 0 R >>".encode(),
-            )
-        )
-        lines = text.split("\n")
-        ops = ["BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                ops.append("0 -14 Td")
-            ops.append(f"({esc(line)}) Tj")
-        ops.append("ET")
-        stream = " ".join(ops).encode("latin-1")
-        if compress:
-            comp = enc_stream(content_num, zlib.compress(stream))
-            top_level[content_num] = (
-                f"<< /Length {len(comp)} /Filter /FlateDecode >>".encode()
-                + b"\nstream\n" + comp + b"\nendstream"
-            )
-        else:
-            raw = enc_stream(content_num, stream)
-            top_level[content_num] = (
-                f"<< /Length {len(raw)} >>".encode()
-                + b"\nstream\n" + raw + b"\nendstream"
-            )
+    tree = _text_page_tree(pages, compress, enc_stream)
+    compressed_members = [(n, body) for n, body in tree.items() if n < 3 or n % 2]
+    top_level = {n: body for n, body in tree.items() if n > 3 and n % 2 == 0}
 
     # object stream: header = "num off" pairs, bodies at /First + off
     heads = []
@@ -884,58 +816,39 @@ def make_modern_pdf(
         bodies += body + b"\n"
     header = (" ".join(heads) + "\n").encode()
     payload = header + bytes(bodies)
-    comp_payload = enc_stream(objstm_num, zlib.compress(payload))
-    top_level[objstm_num] = (
-        f"<< /Type /ObjStm /N {len(compressed_members)} /First {len(header)} "
-        f"/Length {len(comp_payload)} /Filter /FlateDecode >>".encode()
-        + b"\nstream\n" + comp_payload + b"\nendstream"
+    top_level[objstm_num] = pdfwrite.stream_obj(
+        enc_stream(objstm_num, zlib.compress(payload)),
+        f"/Type /ObjStm /N {len(compressed_members)} /First {len(header)} ".encode(),
+        b" /Filter /FlateDecode",
     )
     if enc_num is not None:
         top_level[enc_num] = enc_dict
 
-    out = bytearray(b"%PDF-1.5\n")
-    offsets: dict[int, int] = {}
-    for num in sorted(top_level):
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode() + top_level[num] + b"\nendobj\n"
+    out, offsets = pdfwrite.objects(b"%PDF-1.5\n", top_level)
 
     # xref stream rows, W = [1 4 2]
     member_idx = {num: i for i, (num, _) in enumerate(compressed_members)}
-    rows: list[bytes] = []
-    for num in range(size):
-        if num == 0:
-            rows.append(b"\x00" + (0).to_bytes(4, "big") + (65535).to_bytes(2, "big"))
-        elif num in member_idx:
-            rows.append(
-                b"\x02" + objstm_num.to_bytes(4, "big")
-                + member_idx[num].to_bytes(2, "big")
-            )
-        else:
-            off = offsets[num] if num in offsets else len(out)  # xref stream itself
-            rows.append(b"\x01" + off.to_bytes(4, "big") + (0).to_bytes(2, "big"))
+    rows = [struct.pack(">BIH", 0, 0, 65535)]
+    for num in range(1, size):
+        if num in member_idx:
+            rows.append(struct.pack(">BIH", 2, objstm_num, member_idx[num]))
+        else:  # the last row is the xref stream itself, written at len(out)
+            rows.append(struct.pack(">BIH", 1, offsets.get(num, len(out)), 0))
     rowlen = 7
-    # PNG Up prediction: filter byte 2, row minus previous row
-    pred = bytearray()
-    prev = bytes(rowlen)
-    for row in rows:
-        pred += b"\x02" + bytes((row[i] - prev[i]) & 0xFF for i in range(rowlen))
-        prev = row
-    comp_xref = zlib.compress(bytes(pred))
+    # PNG Up prediction (filter byte 2) over the rows as a 1-channel image
+    pred = pixels._filter_rows((rowlen, len(rows), 1, b"".join(rows)), 2)
     xref_at = len(out)
-    enc_entry = (
-        f"/Encrypt {enc_num} 0 R /ID [<{id0.hex().upper()}> "
-        f"<{id0.hex().upper()}>] "
-        if enc_num is not None
-        else ""
+    enc_entry = _encrypt_entries(enc_num, id0) if enc_num is not None else ""
+    out += pdfwrite.obj(
+        xref_num,
+        pdfwrite.stream_obj(
+            zlib.compress(pred),
+            f"/Type /XRef /Size {size} /W [1 4 2] /Root 1 0 R {enc_entry}"
+            f"/Filter /FlateDecode /DecodeParms << /Predictor 12 "
+            f"/Columns {rowlen} >> ".encode(),
+        ),
     )
-    out += (
-        f"{xref_num} 0 obj\n<< /Type /XRef /Size {size} /W [1 4 2] "
-        f"/Root 1 0 R {enc_entry}/Filter /FlateDecode "
-        f"/DecodeParms << /Predictor 12 /Columns {rowlen} >> "
-        f"/Length {len(comp_xref)} >>".encode()
-        + b"\nstream\n" + comp_xref + b"\nendstream\nendobj\n"
-    )
-    out += f"startxref\n{xref_at}\n%%EOF\n".encode()
+    out += pdfwrite.startxref(xref_at)
     return bytes(out)
 
 
@@ -944,49 +857,36 @@ def make_cid_pdf(pages: list[str]) -> bytes:
     Type0 font with 2-byte codes and a /ToUnicode CMap (codes assigned in
     order of first appearance per page, split across bfchar AND bfrange
     sections so both parse lanes are exercised)."""
-    objs: list[bytes] = []
     n_pages = len(pages)
     kids = " ".join(f"{3 + 3 * i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode(),
+    }
     for i, text in enumerate(pages):
         page_num = 3 + 3 * i
         content_num = page_num + 1
         font_num = page_num + 2
-        cmap_num = len(pages) * 3 + 3 + i
-        objs.append(
+        # CMap objects follow all pages so numbering stays stable
+        cmap_num = n_pages * 3 + 3 + i
+        objs[page_num] = (
             f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             f"/Resources << /Font << /F1 {font_num} 0 R >> >> "
-            f"/Contents {content_num} 0 R >>".encode()
-        )
+            f"/Contents {content_num} 0 R >>"
+        ).encode()
         # code assignment: distinct chars in appearance order, code = 1+idx
-        chars: list[str] = []
-        for ch in text.replace("\n", ""):
-            if ch not in chars:
-                chars.append(ch)
+        chars = list(dict.fromkeys(text.replace("\n", "")))
         code_of = {ch: k + 1 for k, ch in enumerate(chars)}
-        ops = ["BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(text.split("\n")):
-            if k:
-                ops.append("0 -14 Td")
-            hexstr = "".join(f"{code_of[ch]:04X}" for ch in line)
-            ops.append(f"<{hexstr}> Tj")
-        ops.append("ET")
-        stream = " ".join(ops).encode("ascii")
-        objs.append(
-            f"<< /Length {len(stream)} >>".encode()
-            + b"\nstream\n" + stream + b"\nendstream"
+        objs[content_num] = pdfwrite.stream_obj(
+            pdfwrite.text_object(
+                ["<" + "".join(f"{code_of[ch]:04X}" for ch in line) + ">"
+                 for line in text.split("\n")]
+            )
         )
-        objs.append(
+        objs[font_num] = (
             f"<< /Type /Font /Subtype /Type0 /BaseFont /Fixture "
-            f"/Encoding /Identity-H /ToUnicode {cmap_num} 0 R >>".encode()
-        )
-    # CMap objects appended after all pages so numbering stays stable
-    for i, text in enumerate(pages):
-        chars = []
-        for ch in text.replace("\n", ""):
-            if ch not in chars:
-                chars.append(ch)
+            f"/Encoding /Identity-H /ToUnicode {cmap_num} 0 R >>"
+        ).encode()
         half = len(chars) // 2
         bfchar_rows = "\n".join(
             f"<{k + 1:04X}> <{ord(ch):04X}>" for k, ch in enumerate(chars[:half])
@@ -1002,26 +902,9 @@ def make_cid_pdf(pages: list[str]) -> bytes:
             f"{max(1, half)} beginbfchar\n{bfchar_rows}\nendbfchar\n"
             f"{max(1, len(chars) - half)} beginbfrange\n{bfrange_rows}\nendbfrange\n"
             "end"
-        ).encode("ascii")
-        objs.append(
-            f"<< /Length {len(cmap)} >>".encode()
-            + b"\nstream\n" + cmap + b"\nendstream"
         )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for num, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+        objs[cmap_num] = pdfwrite.stream_obj(cmap.encode("ascii"))
+    return pdfwrite.serialize(objs)
 
 
 # --- encrypted PDFs: standard security handler ------------------------------
@@ -1400,48 +1283,7 @@ def make_encrypted_pdf(
 
     id0 = hashlib.md5(b"fixture-id" + str(len(pages)).encode()).digest()
     enc_dict, enc_stream = _fixture_crypt(r, owner_password, id0)
-
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-    objs: list[bytes] = []
-    n_pages = len(pages)
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
-    for i, text in enumerate(pages):
-        content_num = 4 + 2 * i
-        objs.append(
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Contents {content_num} 0 R >>".encode()
-        )
-        ops = ["BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(text.split("\n")):
-            if k:
-                ops.append("0 -14 Td")
-            ops.append(f"({esc(line)}) Tj")
-        ops.append("ET")
-        cipher = enc_stream(content_num, " ".join(ops).encode("latin-1"))
-        objs.append(
-            f"<< /Length {len(cipher)} >>".encode()
-            + b"\nstream\n" + cipher + b"\nendstream"
-        )
+    objs = _text_page_tree(pages, False, enc_stream)
     enc_num = len(objs) + 1
-    objs.append(enc_dict)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for num, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R "
-        f"/Encrypt {enc_num} 0 R /ID [<{id0.hex().upper()}> "
-        f"<{id0.hex().upper()}>] >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+    objs[enc_num] = enc_dict
+    return pdfwrite.serialize(objs, trailer=_encrypt_entries(enc_num, id0))

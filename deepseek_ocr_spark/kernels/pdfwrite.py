@@ -1,17 +1,22 @@
-"""Minimal deterministic PDF writer — the TRUE-PDF analog of the
-reference's annotated-layout artifact.
+"""The PDF byte layer: the one module that knows how a PDF file is laid
+out — object framing (``obj``), stream objects (``stream_obj``), the
+classic xref table and trailer (``objects``, ``serialize``, ``startxref``),
+the literal-string ``escape`` and the line-per-``Tj`` ``text_object``.
+The annotated-layout sink below and the fixture writers in
+kernels/pdftext.py build object dicts and call these.
 
-The reference draws span boxes + labels onto each page image and binds the
-pages into ``*_layouts.pdf`` with img2pdf (run_dpsk_ocr_pdf.py:97-119,
-151-215).  img2pdf's core trick is embedding the image stream VERBATIM
-(JPEG bytes become a /DCTDecode XObject, no recompress); this writer does
-the same, and keeps the annotation layer VECTOR: boxes are PDF `re S`
-strokes with a translucent `re f` fill (ExtGState ca=0.08) and labels are
-native Helvetica `Tj` text at the reference's (x1, y1-15) anchor — so the
-page image stays pristine instead of having boxes burned into pixels, and
-no font rasterization is needed.
+The sink is the TRUE-PDF analog of the reference's annotated-layout
+artifact. The reference draws span boxes + labels onto each page image and
+binds the pages into ``*_layouts.pdf`` with img2pdf (run_dpsk_ocr_pdf.py:
+97-119, 151-215).  img2pdf's core trick is embedding the image stream
+VERBATIM (JPEG bytes become a /DCTDecode XObject, no recompress);
+``build_pdf`` does the same, and keeps the annotation layer VECTOR: boxes
+are PDF `re S` strokes with a translucent `re f` fill (ExtGState ca=0.08)
+and labels are native Helvetica `Tj` text at the reference's (x1, y1-15)
+anchor — so the page image stays pristine instead of having boxes burned
+into pixels, and no font rasterization is needed.
 
-Pure stdlib (struct/zlib), byte-deterministic (fixed object ordering, no
+Pure stdlib (zlib), byte-deterministic (fixed object ordering, no
 timestamps/ids) — a distributed sink must produce identical bytes on task
 retry.  PDF 1.4 structure: catalog → pages → per page (Page dict, content
 stream, image XObject), ExtGState + Helvetica shared, xref with exact byte
@@ -27,6 +32,82 @@ from __future__ import annotations
 
 import zlib
 from dataclasses import dataclass, field
+
+# --- PDF file layout ------------------------------------------------------------
+
+
+def obj(num: int, body: bytes) -> bytes:
+    """One indirect object, generation 0."""
+    return b"%d 0 obj\n" % num + body + b"\nendobj\n"
+
+
+def stream_obj(data: bytes, before: bytes = b"", after: bytes = b"") -> bytes:
+    """A stream object body: ``<< {before}/Length n{after} >>`` then the
+    data. ``before`` ends with its separating space."""
+    return (
+        b"<< " + before + b"/Length %d" % len(data) + after
+        + b" >>\nstream\n" + data + b"\nendstream"
+    )
+
+
+def objects(header: bytes, objs: dict[int, bytes]) -> tuple[bytearray, dict[int, int]]:
+    """``header`` then every object in number order → (file bytes so far,
+    {object number: byte offset})."""
+    out = bytearray(header)
+    offsets = {}
+    for num in sorted(objs):
+        offsets[num] = len(out)
+        out += obj(num, objs[num])
+    return out, offsets
+
+
+def startxref(xref_at: int) -> bytes:
+    return b"startxref\n%d\n%%%%EOF\n" % xref_at
+
+
+def serialize(
+    objs: dict[int, bytes], header: bytes = b"%PDF-1.4\n", trailer: str = ""
+) -> bytes:
+    """A classic-xref PDF: objects 1..N (object 1 is the catalog), the xref
+    table with exact byte offsets, and the trailer. ``trailer`` holds
+    extra trailer entries, each followed by a space."""
+    out, offsets = objects(header, objs)
+    xref_at = len(out)
+    nobj = max(objs) + 1
+    out += b"xref\n0 %d\n" % nobj
+    out += b"0000000000 65535 f \n"
+    for num in range(1, nobj):
+        out += b"%010d 00000 n \n" % offsets[num]
+    out += f"trailer\n<< /Size {nobj} /Root 1 0 R {trailer}>>\n".encode()
+    out += startxref(xref_at)
+    return bytes(out)
+
+
+def escape(s: str) -> str:
+    """PDF literal-string escape.  Non-latin-1 characters are replaced
+    with '?' — content streams are encoded latin-1 (WinAnsi-adjacent,
+    what /F1 Helvetica can address) and a CJK span label must degrade the
+    LABEL, never UnicodeEncodeError out of the per-doc assemble UDF and
+    kill the task."""
+    s = s.encode("latin-1", errors="replace").decode("latin-1")
+    return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
+
+
+def text_object(shows: list[str]) -> bytes:
+    """One 12pt /F1 text object from (72, 720): one ``Tj`` per operand in
+    ``shows`` (a ``(…)`` literal or a ``<…>`` hex string), each after the
+    first moved down by ``0 -14 Td`` — the newline rule the text parser
+    round-trips."""
+    ops = ["BT /F1 12 Tf 72 720 Td"]
+    for k, show in enumerate(shows):
+        if k:
+            ops.append("0 -14 Td")
+        ops.append(f"{show} Tj")
+    ops.append("ET")
+    return " ".join(ops).encode("latin-1")
+
+
+# --- annotated-layout sink ------------------------------------------------------
 
 
 @dataclass
@@ -50,16 +131,6 @@ class PdfPage:
     precompressed: bool = False
 
 
-def _esc(s: str) -> str:
-    """PDF literal-string escape.  Non-latin-1 characters are replaced
-    with '?' — the content stream is encoded latin-1 (WinAnsi-adjacent,
-    what /F1 Helvetica can address) and a CJK span label must degrade the
-    LABEL, never UnicodeEncodeError out of the per-doc assemble UDF and
-    kill the task."""
-    s = s.encode("latin-1", errors="replace").decode("latin-1")
-    return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-
 def _content_stream(page: PdfPage) -> bytes:
     w, h = page.width, page.height
     ops = [f"q {w} 0 0 {h} 0 0 cm /Im0 Do Q"]
@@ -75,7 +146,7 @@ def _content_stream(page: PdfPage) -> bytes:
         if label:
             ty = h - max(0, y1 - 15) - 12  # baseline for 12pt at (x1, y1-15)
             ops.append(
-                f"q BT {col} rg /F1 12 Tf {x1} {ty} Td ({_esc(label)}) Tj ET Q"
+                f"q BT {col} rg /F1 12 Tf {x1} {ty} Td ({escape(label)}) Tj ET Q"
             )
     return "\n".join(ops).encode("latin-1")
 
@@ -97,12 +168,6 @@ def build_pdf(pages: list[PdfPage]) -> bytes:
         b"/Encoding /WinAnsiEncoding >>"
     )
 
-    def stream_obj(dict_body: bytes, data: bytes) -> bytes:
-        return (
-            b"<< " + dict_body + f" /Length {len(data)} >>".encode()
-            + b"\nstream\n" + data + b"\nendstream"
-        )
-
     for i, p in enumerate(pages):
         pg, ct, im = 5 + 3 * i, 6 + 3 * i, 7 + 3 * i
         objs[pg] = (
@@ -111,7 +176,8 @@ def build_pdf(pages: list[PdfPage]) -> bytes:
             f"/ExtGState << /GSa 3 0 R >> /Font << /F1 4 0 R >> >> "
             f"/Contents {ct} 0 R >>"
         ).encode()
-        objs[ct] = stream_obj(b"", _content_stream(p))
+        # an empty entry list before /Length: `<<  /Length n >>`
+        objs[ct] = stream_obj(_content_stream(p), b" ")
         parms = b""
         if p.codec == "jpeg":
             filt, cs, data = b"/DCTDecode", b"/DeviceRGB", p.image
@@ -139,27 +205,12 @@ def build_pdf(pages: list[PdfPage]) -> bytes:
         else:
             raise ValueError(f"unknown page codec {p.codec}")
         objs[im] = stream_obj(
+            data,
             b"/Type /XObject /Subtype /Image /Width "
             + str(p.width).encode()
             + b" /Height " + str(p.height).encode()
             + b" /ColorSpace " + cs + b" /BitsPerComponent 8 /Filter " + filt
-            + parms,
-            data,
+            + parms + b" ",
         )
 
-    out = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(objs):
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode() + objs[num] + b"\nendobj\n"
-    xref_at = len(out)
-    nobj = max(objs) + 1
-    out += f"xref\n0 {nobj}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for num in range(1, nobj):
-        out += f"{offsets[num]:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {nobj} /Root 1 0 R >>\nstartxref\n{xref_at}\n"
-        "%%EOF\n"
-    ).encode()
-    return bytes(out)
+    return serialize(objs, header=b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")

@@ -52,6 +52,10 @@ _CT_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 Image = tuple[int, int, int, bytes]
 
+# declared-dims sanity bound shared by every image kernel: a hostile
+# header must not size any allocation downstream
+MAX_PIXELS = 1 << 28
+
 
 def _arr(img: Image) -> np.ndarray:
     """(h, w, ch) uint8 view of an Image's buffer (no copy)."""
@@ -98,9 +102,7 @@ def _png_parse(data: bytes):
             w, h, bit_depth, color_type, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", chunk
             )
-            # same declared-dims sanity bound as the GIF/JPEG/BMP kernels:
-            # a hostile header must not size any allocation downstream
-            if w * h > (1 << 28):
+            if w * h > MAX_PIXELS:
                 raise ValueError(f"PNG dims too large: {w}x{h}")
         elif ctype == b"PLTE":
             plte = bytes(chunk)

@@ -32,7 +32,7 @@ Out-of-matrix variants (strip-table old-JPEG, float predictor 3,
 planar or fax tiles, fax uncompressed mode) raise NotImplementedError —
 the callers' PIL codec gate covers those; corrupt input raises
 ValueError only (the drop-rule contract shared with the
-JPEG/GIF/BMP/MP4 kernels).  Dims are sanity-bounded at 1<<28 pixels
+JPEG/GIF/BMP/MP4 kernels).  Dims are sanity-bounded at pixels.MAX_PIXELS
 like the sibling kernels.
 """
 
@@ -43,7 +43,7 @@ import zlib
 
 import numpy as np
 
-from .pixels import Image
+from .pixels import MAX_PIXELS, Image
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 4, 12: 8}
 
@@ -259,7 +259,7 @@ def _decode_checked(data: bytes) -> Image:
 
     width = one(256)
     height = one(257)
-    if width <= 0 or height <= 0 or width * height > (1 << 28):
+    if width <= 0 or height <= 0 or width * height > MAX_PIXELS:
         raise ValueError(f"implausible TIFF dims {width}x{height}")
     spp = one(277, 1)
     bits_list = tags.get(258, [1])

@@ -37,8 +37,8 @@ sandbox, so as with SOF3/SOF9 there is no cross-codec lane; hand-built
 bitstreams in the tests pin the bit-level semantics.
 
 Hostile-input contract: public ``decode_webp`` raises ValueError ONLY
-(mutation-fuzz pinned); dims sanity bound 1<<28 pixels shared with the
-other image kernels.
+(mutation-fuzz pinned); dims sanity bound pixels.MAX_PIXELS shared with
+the other image kernels.
 
 Scale shape: runs inside Arrow-batched mapInPandas stages
 (operators/multimodal.py) — per-image work, no shuffle implications.
@@ -50,7 +50,7 @@ import struct
 
 import numpy as np
 
-from .pixels import Image
+from .pixels import MAX_PIXELS, Image
 
 # RFC 9649 §4.2.2: the 120 (dx, dy) near-neighbour offsets for distance
 # codes 1..120 (larger codes map to linear distance code-120).
@@ -512,7 +512,7 @@ def _decode_webp_checked(data: bytes) -> Image:
     bits = _Bits(body[1:])
     w = bits.read(14) + 1
     h = bits.read(14) + 1
-    if w * h > 1 << 28:
+    if w * h > MAX_PIXELS:
         raise ValueError("WebP dims exceed sanity bound")
     alpha_hint = bits.read(1)
     if bits.read(3) != 0:

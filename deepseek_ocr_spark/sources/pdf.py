@@ -22,6 +22,8 @@ file to one document row.
 
 from __future__ import annotations
 
+import html
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,10 +57,6 @@ def pdf_pages(docs: DataFrame, url_col: str = "url", pdf_col: str = "pdf") -> Da
     return map_rows(src, _page_rows, PDF_PAGES_SCHEMA)
 
 
-def _escape_html(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-
-
 def _pages_to_html(pages: list[tuple[str, tuple[int, int] | None]]) -> bytes:
     """(text, raster_dims_or_None) per page → the engine's document model:
     one page div per PDF page (the extraction pipeline's splitter consumes
@@ -68,7 +66,9 @@ def _pages_to_html(pages: list[tuple[str, tuple[int, int] | None]]) -> bytes:
     divs = []
     for p, (text, dims) in enumerate(pages):
         body = "".join(
-            f"<p>{_escape_html(line)}</p>" for line in text.split("\n") if line
+            f"<p>{html.escape(line, quote=False)}</p>"
+            for line in text.split("\n")
+            if line
         )
         attrs = f' data-width="{dims[0]}" data-height="{dims[1]}"' if dims else ""
         divs.append(f'<div class="page" data-page="{p}"{attrs}>{body}</div>')

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
+from deepseek_ocr_spark.streaming.probe import read_file_stream
 
 
 def dedup_stream(docs: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -35,11 +36,7 @@ def stream_dedup_to_parquet(
     max_files_per_trigger: int = 2,
     watermark: str = "1 hour",
 ):
-    src = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    src = read_file_stream(spark, DOCS_SCHEMA, input_dir, max_files_per_trigger)
     return (
         dedup_stream(src, watermark)
         .writeStream.format("parquet")

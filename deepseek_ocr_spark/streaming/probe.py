@@ -1,5 +1,5 @@
-"""The one runner behind every stream-static probe, and the file-source
-micro-batch policy it shares with streaming/stream_job.py.
+"""The one runner behind every stream-static probe, and the one
+file-source reader (``read_file_stream``) every streaming job shares.
 
 Each probe runs a BATCH operator on every micro-batch against a STATIC
 materialized artifact, with the same stream==batch answer as one batch
@@ -55,6 +55,22 @@ STREAM_EMB_SCHEMA = T.StructType(
 )
 
 
+def read_file_stream(
+    spark: SparkSession,
+    schema: T.StructType,
+    input_dir: str,
+    max_files_per_trigger: int,
+) -> DataFrame:
+    """The file-source stream every streaming job reads: ``schema`` parquet
+    files under ``input_dir``, at most ``max_files_per_trigger`` files per
+    micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
+
+
 def run_file_stream(
     spark: SparkSession,
     schema: T.StructType,
@@ -67,9 +83,7 @@ def run_file_stream(
     per trigger (``foreachBatch``), checkpointed at ``checkpoint_dir`` and
     drained with availableNow.  Returns the StreamingQuery."""
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+        read_file_stream(spark, schema, input_dir, max_files_per_trigger)
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

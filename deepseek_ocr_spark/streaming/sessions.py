@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from deepseek_ocr_spark.operators.temporal import SESSION_GAP_MINUTES
+from deepseek_ocr_spark.streaming.probe import read_file_stream
 from deepseek_ocr_spark.streaming.windowed import EVENTS_SCHEMA
 
 SESSION_SCHEMA = T.StructType(
@@ -117,11 +118,7 @@ def stream_sessionize(
     max_files_per_trigger: int = 2,
 ):
     """File-source stream → closed sessions appended to parquet."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
+    events = read_file_stream(spark, EVENTS_SCHEMA, events_dir, max_files_per_trigger)
     sessions = (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deepseek_ocr_spark.streaming.probe import read_file_stream
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -44,16 +46,6 @@ def windowed_event_counts(events: DataFrame, watermark: str = "2 hours") -> Data
     )
 
 
-def _read_events_stream(
-    spark: SparkSession, events_dir: str, max_files_per_trigger: int
-) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
-
-
 def stream_events_hourly(
     spark: SparkSession,
     events_dir: str,
@@ -67,7 +59,7 @@ def stream_events_hourly(
     files therefore needs a watermark larger than the files' time disorder —
     that's the knob, not a bug (observed: a 2h watermark over randomly-
     partitioned history silently dropped most rows)."""
-    stream = _read_events_stream(spark, events_dir, max_files_per_trigger)
+    stream = read_file_stream(spark, EVENTS_SCHEMA, events_dir, max_files_per_trigger)
     windowed = windowed_event_counts(stream, watermark)
     return (
         windowed.writeStream.format("parquet")
@@ -91,7 +83,7 @@ def stream_events_hourly_complete(
     arrival order — the correctness harness for the windowed plan. Append
     mode (above) is the production shape; its watermark governs what has
     been finalized at any point in the stream."""
-    stream = _read_events_stream(spark, events_dir, max_files_per_trigger)
+    stream = read_file_stream(spark, EVENTS_SCHEMA, events_dir, max_files_per_trigger)
     return (
         windowed_event_counts(stream, watermark)
         .writeStream.format("memory")

@@ -11,7 +11,7 @@ import zlib
 import pytest
 
 from deepseek_ocr_spark.kernels import jpeg as jpeg_kernel
-from deepseek_ocr_spark.kernels import pdfwrite, pixels
+from deepseek_ocr_spark.kernels import pdftext, pdfwrite, pixels
 from deepseek_ocr_spark.kernels.pdftext import extract_pdf_text
 from deepseek_ocr_spark.kernels.pdfwrite import PdfPage, build_pdf
 from tests.test_pixels import gradient
@@ -22,15 +22,35 @@ def _page(w=32, h=24, boxes=None):
     return PdfPage(w, h, "flate-rgb", img[3], boxes or [])
 
 
-def test_structure_and_xref_offsets():
-    data = build_pdf([_page(), _page(16, 16)])
+_TWO_PAGES = ["page one (a)\nline two \\ end", "page two é"]
+
+
+@pytest.mark.parametrize(
+    "write, n_objs",
+    [
+        (lambda: build_pdf([_page(), _page(16, 16)]), 10),  # 4 shared + 3 per page x 2
+        (lambda: pdftext.make_simple_pdf(_TWO_PAGES, compress=False), 6),
+        (lambda: pdftext.make_simple_pdf(_TWO_PAGES, compress=True), 6),
+        (lambda: pdftext.make_cid_pdf(_TWO_PAGES), 10),
+        (lambda: pdftext.make_encrypted_pdf(_TWO_PAGES, r=2), 7),
+        (lambda: pdftext.make_encrypted_pdf(_TWO_PAGES, r=3), 7),
+        (lambda: pdftext.make_encrypted_pdf(_TWO_PAGES, r=4), 7),
+    ],
+    ids=["sink", "simple-raw", "simple-flate", "cid", "enc-r2", "enc-r3", "enc-r4"],
+)
+def test_structure_and_xref_offsets(write, n_objs):
+    """The sink and the classic fixture writers share one serializer, so
+    every xref table must land exactly. The text parser alone would not
+    show a wrong fixture offset: its scavenge path finds objects without
+    the xref."""
+    data = write()
     assert data.startswith(b"%PDF-1.4") and data.rstrip().endswith(b"%%EOF")
     m = re.search(rb"startxref\n(\d+)\n%%EOF", data)
     xref_at = int(m.group(1))
     assert data[xref_at : xref_at + 4] == b"xref"
     # every xref entry must point at exactly "N 0 obj"
     entries = re.findall(rb"(\d{10}) 00000 n", data[xref_at:])
-    assert len(entries) == 10  # 4 shared + 3 per page x 2
+    assert len(entries) == n_objs
     for num, off in enumerate(entries, start=1):
         at = int(off)
         assert data[at:].startswith(f"{num} 0 obj".encode()), num

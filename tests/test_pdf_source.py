@@ -472,6 +472,31 @@ def test_modern_pdf_hostile_never_raises():
         assert isinstance(extract_pdf_text(bytes(b)), list)
 
 
+@pytest.mark.parametrize("encrypt_r", [None, 4])
+def test_modern_pdf_unknown_xref_predictor_falls_back(encrypt_r):
+    """An xref-stream row whose PNG filter byte is above 4 makes the
+    stream undecodable: the reader drops the whole chain and falls back
+    to expanding every scavenged ObjStm, so all pages still extract."""
+    import re as _re
+
+    from deepseek_ocr_spark.kernels.pdftext import make_modern_pdf
+
+    pages = ["first page\nline two", "second page", "third page"]
+    pdf = make_modern_pdf(pages, encrypt_r=encrypt_r)
+    xref_at = int(_re.search(rb"startxref\n(\d+)\n%%EOF\n$", pdf).group(1))
+    m = _re.compile(rb"/Length (\d+) >>\nstream\n").search(pdf, xref_at)
+    start, length = m.end(), int(m.group(1))
+    rows = bytearray(zlib.decompress(pdf[start : start + length]))
+    for row in (1, 2):  # rows are the filter byte + W [1 4 2] = 8 bytes
+        rows[row * 8] = 5
+    comp = zlib.compress(bytes(rows))
+    hostile = (
+        pdf[: m.start()] + b"/Length %d >>\nstream\n" % len(comp) + comp
+        + pdf[start + length :]
+    )
+    assert extract_pdf_text(hostile) == pages
+
+
 def test_modern_pdf_spark_source_hit_rate(spark, tmp_path):
     """Mixed corpus with a PDF 1.5 document: the modern PDF now hits the
     cheap text-layer route (before this round it silently fell through to

@@ -239,3 +239,38 @@ def test_mapinpandas_only_in_the_row_shell():
             ):
                 extra.append(f"{rel}:{node.lineno}")
     assert extra == []
+
+
+def _package_sources():
+    import pathlib
+
+    import deepseek_ocr_spark
+
+    root = pathlib.Path(deepseek_ocr_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), path.read_text()
+
+
+def test_pdf_file_layout_only_in_pdfwrite():
+    """Every PDF this package writes is framed by kernels/pdfwrite.py:
+    object headers, the xref table and the startxref tail are spelled
+    nowhere else. A writer with its own copy of the layout shows up here."""
+    literals = (r"startxref\n", r"xref\n", r"0 obj\n")
+    extra = [
+        f"{rel}: {lit}"
+        for rel, text in _package_sources()
+        for lit in literals
+        if lit in text and rel != "kernels/pdfwrite.py"
+    ]
+    assert extra == []
+
+
+def test_pixel_bound_only_in_pixels():
+    """The declared-dims sanity bound is pixels.MAX_PIXELS; an image kernel
+    that spells its own copy shows up here."""
+    extra = [
+        rel
+        for rel, text in _package_sources()
+        if re.search(r"1\s*<<\s*28\b", text) and rel != "kernels/pixels.py"
+    ]
+    assert extra == []
