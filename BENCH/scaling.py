@@ -159,7 +159,7 @@ def main() -> None:
 
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
-Same job (flagship extraction pipeline: one fused mapInPandas per document —
+Same job (flagship extraction pipeline: one fused row stage per document —
 split, extract, SKIP_REPEAT, cascade, ordered assembly, vision tokens,
 digest — → final rows, no exchange), same materialized input ({pages} pages derived
 deterministically from {args.sf_dir} x{args.replicate}), noop write of the

@@ -10,6 +10,7 @@ column names).
 from __future__ import annotations
 
 from collections.abc import Callable
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ from deepseek_ocr_spark.operators.tiling_relational import (
     vision_tokens_col,
     with_tile_plan,
 )
+from deepseek_ocr_spark.rowmap import map_rows
 from deepseek_ocr_spark.sources.catalog import DOCS_SCHEMA
 
 
@@ -208,32 +210,20 @@ def docs_from_driver_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def driver_docs_to_input(src: DataFrame) -> DataFrame:
     """(doc_id, text, lang) rows → input_hint shape with derived html."""
-    import pandas as pd
+    from deepseek_ocr_spark.datagen.synth import driver_row_to_html
 
-    spark = src.sparkSession
+    epoch = datetime(2025, 1, 1, tzinfo=timezone.utc)
 
-    def to_html(batches):
-        from datetime import datetime, timedelta, timezone
+    def to_html(doc_id, text, lang):
+        yield (
+            f"doc://{doc_id}", epoch + timedelta(seconds=doc_id * 137),
+            driver_row_to_html(doc_id, text), text, lang,
+        )
 
-        from deepseek_ocr_spark.datagen.synth import driver_row_to_html
-
-        epoch = datetime(2025, 1, 1, tzinfo=timezone.utc)
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [f"doc://{i}" for i in pdf["doc_id"]],
-                    "warc_ts": [epoch + timedelta(seconds=int(i) * 137) for i in pdf["doc_id"]],
-                    "html": [
-                        driver_row_to_html(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    par = spark.sparkContext.defaultParallelism
-    return src.repartition(par).mapInPandas(to_html, DOCS_SCHEMA)
+    par = src.sparkSession.sparkContext.defaultParallelism
+    return map_rows(
+        src.select("doc_id", "text", "lang").repartition(par), to_html, DOCS_SCHEMA
+    )
 
 
 def replicated_driver_docs(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:

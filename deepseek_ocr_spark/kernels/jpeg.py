@@ -49,7 +49,7 @@ cannot decode the arithmetic, lossless, 12-bit or hierarchical
 processes at all, so those lanes EXCEED the reference pipeline's codec
 surface.)
 
-Scale shape: this kernel runs inside Arrow-batched mapInPandas stages
+Scale shape: this kernel runs inside Arrow-batched row stages
 (operators/vision.py, operators/multimodal.py) — per-image work,
 embarrassingly parallel, no shuffle implications.  Where a native codec
 (PIL/libjpeg-turbo) is importable the operators prefer it for raw speed;
@@ -383,7 +383,7 @@ class _Component:
 
 def decode_jpeg(data: bytes) -> Image:
     """Hostile-input contract: ANY corrupt stream raises ValueError (the
-    mapInPandas stages' drop rule catches exactly that) — deep parse
+    row stages' drop rule catches exactly that) — deep parse
     failures (short buffers, dangling table ids, insane bit counts) must
     never escape as struct.error/KeyError/IndexError/OverflowError and
     kill a task.  See `_decode_jpeg_checked`."""

@@ -40,7 +40,7 @@ Hostile-input contract: public ``decode_webp`` raises ValueError ONLY
 (mutation-fuzz pinned); dims sanity bound pixels.MAX_PIXELS shared with
 the other image kernels.
 
-Scale shape: runs inside Arrow-batched mapInPandas stages
+Scale shape: runs inside Arrow-batched row stages
 (operators/multimodal.py) — per-image work, no shuffle implications.
 """
 

@@ -32,7 +32,6 @@ multimodal.decode_image_meta already demonstrates).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -179,9 +178,8 @@ def _region_rows(fmt: str = "png"):
     encode = pixels.encode_png if fmt == "png" else encode_jpeg
 
     def rows(doc_id, data, rix, x1, y1, x2, y2):
-        # Arrow surfaces NULL ints as NaN in pandas — pd.isna catches
-        # both; a NULL box (join miss) drops the row, never crashes the task
-        if any(pd.isna(v) for v in (rix, x1, y1, x2, y2)):
+        # a NULL box (join miss) drops the row, never crashes the task
+        if any(v is None for v in (rix, x1, y1, x2, y2)):
             return
         img = _decoded(data)
         if img is None:

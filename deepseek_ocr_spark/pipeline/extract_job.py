@@ -8,7 +8,7 @@ plan over ``documents(url, warc_ts, html, text, lang)``:
     → [auto] spread repartition by url        [only when the input has fewer
        scan splits than the cluster parallelism — a real 100 TB table has
        thousands of splits and skips this shuffle entirely]
-    → FUSED mapInPandas doc stage             [the reference's per-document
+    → FUSED doc stage (rowmap.map_rows)       [the reference's per-document
        loop (pdf.py:285-320) in ONE Python call per input row: O-2 page
        split, O-38 kernel, O-19/O-33 SKIP_REPEAT gate + EOS strip, O-26/O-27
        kept-page ordinals jdx, O-30…O-36 cascade, O-24 ordered assembly,
@@ -19,7 +19,7 @@ plan over ``documents(url, warc_ts, html, text, lang)``:
        per-worker kernel singleton]
 
 Shuffle budget — ZERO exchanges on a well-laid-out input, plus the optional
-input-spread repartition for few-split inputs: scan → one MapInPandas →
+input-spread repartition for few-split inputs: scan → one MapInArrow →
 final rows, with no JVM expression tail. No aggregation, no windows, no
 joins (tests/test_plan_lints.py pins this shape). The relational tile plan
 (broadcast join + window) lives in operators/tiling_relational.py and is
@@ -38,9 +38,7 @@ than the page work they spread (docs/SCALE.md, "Giant-doc regime").
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -48,9 +46,10 @@ from deepseek_ocr_spark.config import EngineConfig, DEFAULT_CONFIG
 from deepseek_ocr_spark.kernels import postprocess as pp
 from deepseek_ocr_spark.kernels.tiling import tile_plan
 from deepseek_ocr_spark.kernels.tokens import num_text_tokens, num_vision_tokens
+from deepseek_ocr_spark.rowmap import map_rows
 
 # ---------------------------------------------------------------------------
-# Page-level split+extract (mapInPandas)
+# Page-level split+extract
 # ---------------------------------------------------------------------------
 
 # The kernel half of the fused doc stage, emitting extracted page rows with
@@ -69,27 +68,16 @@ EXTRACTED_PAGES_SCHEMA = T.StructType(
 )
 
 
-def _split_extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _split_extract_rows(url, html):
     kernel = _get_kernel()
-    for pdf in batches:
-        out = {k: [] for k in ("url", "page_no", "seq", "width", "height", "raw")}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            # null/bytes normalization happens inside the shared kernel
-            for seq, rec in enumerate(kernel.split_pages(html)):
-                out["url"].append(url)
-                out["page_no"].append(rec.page_no)
-                out["seq"].append(seq)
-                out["width"].append(rec.width)
-                out["height"].append(rec.height)
-                out["raw"].append(kernel.extract_page(rec))
-        yield pd.DataFrame(out)
+    # null/bytes normalization happens inside the shared kernel
+    for seq, rec in enumerate(kernel.split_pages(html)):
+        yield url, rec.page_no, seq, rec.width, rec.height, kernel.extract_page(rec)
 
 
 def split_and_extract(docs: DataFrame) -> DataFrame:
     """documents → extracted page rows (url, page_no, width, height, raw)."""
-    return docs.select("url", "html").mapInPandas(
-        _split_extract_batches, EXTRACTED_PAGES_SCHEMA
-    )
+    return map_rows(docs.select("url", "html"), _split_extract_rows, EXTRACTED_PAGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -209,22 +197,18 @@ def _finalize_doc(pages, cfg: EngineConfig) -> tuple:
     )
 
 
-def _extract_doc_batches(cfg: EngineConfig):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _doc_rows(cfg: EngineConfig):
+    def rows(url, html):
         kernel = _get_kernel()
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                # split_pages returns pages in (page_no, seq) order; null/
-                # bytes normalization happens inside the shared kernel
-                pages = (
-                    (rec.page_no, rec.width, rec.height, kernel.extract_page(rec))
-                    for rec in kernel.split_pages(html)
-                )
-                rows.append((url, *_finalize_doc(pages, cfg)))
-            yield pd.DataFrame(rows, columns=DOC_SCHEMA.fieldNames())
+        # split_pages returns pages in (page_no, seq) order; null/bytes
+        # normalization happens inside the shared kernel
+        pages = (
+            (rec.page_no, rec.width, rec.height, kernel.extract_page(rec))
+            for rec in kernel.split_pages(html)
+        )
+        yield (url, *_finalize_doc(pages, cfg))
 
-    return run
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -255,4 +239,4 @@ def extract_documents(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> Da
     if src.rdd.getNumPartitions() < parallelism:
         src = src.repartition(parallelism, "url")
 
-    return src.mapInPandas(_extract_doc_batches(cfg), DOC_SCHEMA)
+    return map_rows(src, _doc_rows(cfg), DOC_SCHEMA)

@@ -13,7 +13,7 @@ each micro-batch first anti-joins against the urls already committed to
 table that a streaming sink cannot express; the commit itself is one
 append, skipped when nothing is pending (``checkpoint.commit_pending``,
 shared with ``run_extract --resume``). The extraction plan itself is
-stateless (scan → one MapInPandas → final rows, no aggregation). Late data /
+stateless (scan → one MapInArrow → final rows, no aggregation). Late data /
 event-time windows are N/A: warc_ts is data, not processing time
 (SURVEY.md §2.9).
 """

@@ -113,5 +113,5 @@ def test_no_python_in_plan(spark, sp_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                "CartesianProduct"):
+                "MapInArrow", "CartesianProduct"):
         assert bad not in plan, bad

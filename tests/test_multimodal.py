@@ -82,7 +82,7 @@ def test_image_meta_spark(spark):
 
 def test_decode_injectable_codec_interface(spark):
     """The codec-present path (decoder=_real_decode on a cluster image) is
-    the same mapInPandas plumbing with a different decoder — exercised here
+    the same row-shell plumbing with a different decoder — exercised here
     by injecting one, so the interface can't rot while gated."""
     docs = spark.createDataFrame(
         [(1, "abc"), (2, "defgh")], "doc_id long, text string"

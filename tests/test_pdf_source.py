@@ -182,7 +182,7 @@ def test_pdf_pages_spark(spark, tmp_path):
     # the empty page carries the routing signal for the rasterize+OCR path
     assert got == [(0, "p0", "text"), (1, "", "ocr"), (2, "p2", "text")]
     plan = pdf_pages(raw)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "MapInPandas" in plan
+    assert "BatchEvalPython" not in plan and plan.count("MapInArrow") == 1, plan
 
 
 def test_pdfraster_geometry_and_determinism():

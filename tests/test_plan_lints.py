@@ -4,7 +4,7 @@ someone remembered to .explain() by hand.
 
 Rules:
 - no row-at-a-time Python (BatchEvalPython) anywhere — Python only as
-  Arrow-batched stages (ArrowEvalPython / MapInPandas / FlatMapGroups*);
+  Arrow-batched stages (ArrowEvalPython / MapInArrow / FlatMapGroups*);
 - no CartesianProduct — cross joins are only legal against broadcast
   literals (they compile to BroadcastNestedLoopJoin);
 - every documents/lineitem parquet scan prunes columns (ReadSchema must not
@@ -167,7 +167,7 @@ def test_pair_lanes_share_one_salted_cogroup(lane, spark):
 
 def test_extract_documents_is_one_python_stage(spark, tmp_path):
     """The flagship job on an input with at least defaultParallelism scan
-    splits: scan → one MapInPandas → final rows. No exchange (no url
+    splits: scan → one MapInArrow → final rows. No exchange (no url
     shuffle), no second Python stage, no per-url aggregation."""
     from deepseek_ocr_spark.datagen.synth import gen_documents
     from deepseek_ocr_spark.pipeline.extract_job import extract_documents
@@ -187,10 +187,10 @@ def test_extract_documents_is_one_python_stage(spark, tmp_path):
         n.nodeName() for n in nodes
         if n.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
     ]
-    assert python == ["MapInPandas"], names
+    assert python == ["MapInArrow"], names
     for banned in ("Exchange", "ArrowEvalPython", "ObjectHashAggregate", "SortAggregate"):
         assert banned not in names, names
-    # the output columns come straight from the MapInPandas node: no JVM
+    # the output columns come straight from the MapInArrow node: no JVM
     # tail folding vision tokens (lambda functions) or hashing the text
     plan = _plan(df)
     for banned in ("lambdafunction", "sha2("):
@@ -216,16 +216,14 @@ def test_lm_scores_tokenize_and_shuffle_each_table_once(op, spark):
 
 def test_mapinpandas_only_in_the_row_shell():
     """A per-row Python stage is a row function under rowmap.map_rows.
-    Only the shell itself, the fused extraction stages (extract_job) and
-    the column-vectorized html renderer (entry_queries.to_html) call
-    mapInPandas directly; a new hand-written Arrow-batch loop shows up
-    here as an extra call site."""
+    Only the shell itself calls mapInPandas or mapInArrow; a new
+    hand-written Arrow-batch loop shows up here as an extra call site."""
     import ast
     import pathlib
 
     import deepseek_ocr_spark
 
-    allowed = {"rowmap.py", "pipeline/extract_job.py", "entry_queries.py"}
+    allowed = {"rowmap.py"}
     root = pathlib.Path(deepseek_ocr_spark.__file__).parent
     extra = []
     for path in sorted(root.rglob("*.py")):
@@ -234,7 +232,7 @@ def test_mapinpandas_only_in_the_row_shell():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "mapInPandas"
+                and node.func.attr in ("mapInPandas", "mapInArrow")
                 and rel not in allowed
             ):
                 extra.append(f"{rel}:{node.lineno}")

@@ -1,5 +1,5 @@
 """Spark vision operators: real pixel bytes flowing through Arrow-batched
-mapInPandas stages — Gundam tile fan-out (with small-page bypass), padded
+mapInArrow stages — Gundam tile fan-out (with small-page bypass), padded
 global views, region crops — plus the hostile-payload drop rule."""
 
 import pytest
@@ -87,7 +87,7 @@ def test_vision_plans_are_arrow_batched(spark, images_df):
     plan = gundam_tiles(images_df, image_size=SZ)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_gundam_tiles_real_config_size(spark):
