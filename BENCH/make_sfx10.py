@@ -4,8 +4,8 @@ Replicates sf0.1 tables 10x with key offsets so heavy queries can be
 measured at the driver's sf1.0-like scale locally. Embeddings copies get
 distinct vec_ids; per-copy centroid assignments are identical to the base
 corpus, so IVF bucket sizes scale exactly 10x — faithfully reproducing the
-quadratic candidate-pair growth of ann_ivf_topk_all. Documents copies
-reverse text parity like BENCH/sf_scaling.py so copies are not near-dups.
+quadratic candidate-pair growth of ann_ivf_topk_all. Odd document copies
+get reverse(text) so copies are not near-dups (BENCH/profile.py --scale x10).
 
 Output: /tmp/sfx10/{embeddings,documents}.parquet + symlinks for the rest.
 """
@@ -21,9 +21,9 @@ SRC = "/root/testdata/sf0.1"
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from deepseek_ocr_spark.pipeline.session import build_session
+    from deepseek_ocr_spark.pipeline.session import build_session, default_cpus
 
-    spark = build_session(app_name="make_sfx10", master="local[32]", shuffle_partitions=32)
+    spark = build_session("make_sfx10", f"local[{default_cpus()}]", default_cpus())
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(OUT, exist_ok=True)
 

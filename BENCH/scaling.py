@@ -2,8 +2,7 @@
 
 Sandbox stand-in: the SAME extraction job on the SAME materialized input at
 local[N] and local[4N], fresh JVM per session, timing a noop write of the
-FULL result (an aggregate-only action would let Catalyst prune the finalize
-stage and under-measure — observed). Efficiency:
+FULL result, as bench.py does. Efficiency:
 
     eff = (throughput@4N / throughput@N) / 4          (target ≥ 0.8)
 
@@ -181,9 +180,10 @@ loadavg per session: {', '.join(loads)}.
 Raw post-warmup walls (s): 2c={runs[2]} 8c={runs[8]}
 
 Methodology notes:
-- Timing is a `noop` write of all output columns; timing an aggregate-only
-  action lets Catalyst prune the Python finalize stage (observed: the
-  collect_list + finalize subtree vanished from the executed plan).
+- Timing is a `noop` write of all output columns, as in bench.py. The doc
+  stage is scan → one MapInArrow that emits final rows, which no action
+  can prune (the older url-shuffle + finalize-UDF plan lost its
+  collect_list + finalize subtree under an aggregate-only action).
 - taskset pinning makes the measurement immune to noisy neighbors on the
   other vCPUs — a prior unpinned session measured 0.696 vs 0.945 purely
   from host noise; the pinned harness is the defensible number.

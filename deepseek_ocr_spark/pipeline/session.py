@@ -49,7 +49,7 @@ def build_session(
         # Generated-class cache: an LRU of compiled codegen classes (static
         # conf, Spark's default 100). A repeated unit of work whose working
         # set exceeds it evicts in a cycle and recompiles on every repeat.
-        # Measured with BENCH/codegen_census.py (4 cores, classes compiled
+        # Measured with BENCH/profile.py (4 cores, classes compiled
         # by a cold pass): perfbench corpus_curate's 4 timed stages 190, all
         # 24 curation stages 496, web_extract 8, one bench.py leaf at sf0.1
         # <= 131, all 58 leaves together 964. At 100 the 4 stages recompiled
